@@ -5,8 +5,8 @@ sed-style calibration chain (jitter → dfield warp → k axis → energy
 correction → energy axis → delay axis), and return the sparse 2-D
 (energy × delay) histogram.
 
-``queries()`` / ``oracle_sql()`` — one entry per implemented operator from
-SURVEY.md §2 plus the training-data extensions; see ``sed_spark/suite/``.
+``queries()`` / ``oracle_sql()`` — the 23 sed operator queries from
+SURVEY.md §2 with their DuckDB oracles; see ``sed_spark/suite/``.
 """
 
 from __future__ import annotations

@@ -3,9 +3,9 @@
 
 Three phases, ordered so the headline baseline-parity numbers are measured
 on a cold, isolated session (round-4 recorded binning_4d at 3.8x baseline
-purely because the synthetic phase ran AFTER the 72 s suite + DuckDB phase
-had heated the JVM heap and page cache; the same plan measured 0.61x in
-interleaved A/B runs — see SCALING.md "host variance"):
+purely because the synthetic phase ran AFTER the 72 s suite phase had
+heated the JVM heap and page cache; the same plan measured 0.61x in
+interleaved A/B runs):
 
 1. ``inv_dfield`` — pure numpy, measured before any Spark JVM exists;
 2. baseline-parity synthetic benchmarks in a DEDICATED SparkSession that is
@@ -17,7 +17,7 @@ interleaved A/B runs — see SCALING.md "host variance"):
    ``benchmarks/benchmark_sed.py:24-63``;
 3. every suite query timed at ``$SPARK_GRAFT_SF_DIR`` (default sf0.1) in a
    second SparkSession, materialized through the noop sink (measures
-   compute, not collect), followed by the DuckDB oracle baseline.
+   compute, not collect).
 
 Every metric records ALL rep times (``reps`` in the JSON), not just the
 best-of-N, so a noisy host is visible in the artifact itself. Round 10
@@ -36,8 +36,7 @@ contaminated rows can be replaced one by one until every row is clean —
 ``canary_ok`` is now simply "every metric's own band was quiet".
 Accepted tokens: any metric name (``inv_dfield``, ``binning_4d``,
 ``q_asof_ops``, ...), the phase aliases ``synthetic`` (all four phase-2
-metrics), ``suite`` (every registered query), and ``duck`` (the DuckDB
-baseline sweep).
+metrics) and ``suite`` (every registered query).
 
 Output: {"metric": "suite_total", "value": <sec>, "unit": "sec",
          "queries": {...}, "canary_ok": bool, "sf": <sf>}
@@ -68,16 +67,14 @@ def band_ok(vals: list[float], abs_ceiling: float) -> bool:
     )
 
 
-def parse_only(raw: str, registry_names) -> tuple[set[str] | None, bool]:
-    """Parse ``SPARK_GRAFT_BENCH_ONLY`` into (selected metric set, run
-    duckdb?). Empty/unset → (None, True) = full run. Tokens: metric
-    names, ``synthetic`` (all four phase-2 metrics), ``suite`` (every
-    registered query), ``duck``."""
+def parse_only(raw: str, registry_names) -> set[str] | None:
+    """Parse ``SPARK_GRAFT_BENCH_ONLY`` into the selected metric set.
+    Empty/unset → None = full run. Tokens: metric names, ``synthetic``
+    (all four phase-2 metrics), ``suite`` (every registered query)."""
     raw = (raw or "").strip()
     if not raw:
-        return None, True
+        return None
     selected: set[str] = set()
-    run_duck = False
     for tok in (t.strip() for t in raw.split(",")):
         if not tok:
             continue
@@ -85,8 +82,6 @@ def parse_only(raw: str, registry_names) -> tuple[set[str] | None, bool]:
             selected.update(SYNTH_METRICS)
         elif tok == "suite":
             selected.update(f"q_{n}" for n in registry_names)
-        elif tok == "duck":
-            run_duck = True
         elif tok in ("inv_dfield", *SYNTH_METRICS) or (
             tok.startswith("q_") and tok[2:] in registry_names
         ):
@@ -94,9 +89,9 @@ def parse_only(raw: str, registry_names) -> tuple[set[str] | None, bool]:
         else:
             raise SystemExit(
                 f"bench: unknown SPARK_GRAFT_BENCH_ONLY token {tok!r} "
-                "(metric name, 'synthetic', 'suite', or 'duck')",
+                "(metric name, 'synthetic', or 'suite')",
             )
-    return selected, run_duck
+    return selected
 
 
 def min_rep_flanked_ok(
@@ -169,7 +164,7 @@ def main() -> None:
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "BENCH_full.json")
     base: dict = {}
-    selected, run_duck = parse_only(only_raw, suite.REGISTRY)
+    selected = parse_only(only_raw, suite.REGISTRY)
     if selected is not None:
         if not os.path.exists(full_path):
             raise SystemExit(
@@ -190,8 +185,8 @@ def main() -> None:
         return selected is None or name in selected
 
     timings: dict[str, float] = dict(base.get("queries", {}))
-    # pre-r11 records kept fit_* inside queries; migrate them to the
-    # first-class fit_secs block on splice
+    # older records kept trainer fit_* timings inside queries; the
+    # trainers are gone, so drop them on splice
     for k in [k for k in timings if k.startswith("fit_")]:
         timings.pop(k)
     reps_log: dict[str, list[float]] = dict(base.get("reps", {}))
@@ -201,12 +196,6 @@ def main() -> None:
     canary_sched_log: dict[str, list[float]] = dict(base.get("canary_sched", {}))
     canary_jit_log: dict[str, list[float]] = dict(base.get("canary_jit", {}))
     load_log: dict[str, list[float]] = dict(base.get("loadavg", {}))
-    fit_secs_log: dict[str, float] = dict(base.get("fit_secs", {}))
-    fit_secs_log.update(
-        {k[4:]: v for k, v in base.get("queries", {}).items()
-         if k.startswith("fit_") and k != "fit_total"},
-    )
-    duck_timings: dict[str, float] = dict(base.get("duck", {}))
 
     # contention canary: the SAME fixed single-threaded numpy workload
     # (sort of 2^21 pinned floats, ~0.23-0.31 s on this host unloaded)
@@ -619,18 +608,6 @@ def main() -> None:
         def run_noop(df) -> None:
             df.write.mode("overwrite").format("noop").save()
 
-        # pre-warm the trainer fit caches (BPE / unigram / WordPiece /
-        # classifier / DSIR) so q_text_metrics times the OPERATORS, not
-        # trainer cold-start (round 9 recorded both reps paying ~30 s of
-        # fits). Fit cost stays visible as the first-class ``fit_secs``
-        # block in BENCH_full.json (excluded from suite_total).
-        try:
-            from sed_spark.suite.ext import warm_fits
-
-            fit_secs_log.update(warm_fits(spark, sf_dir))
-        except Exception as exc:  # a fit failure must not kill the bench
-            print(f"bench: warm_fits failed: {exc}", file=sys.stderr)
-
         # best-of-2 so a query's recorded time is its executed plan, not
         # its first-run Catalyst/codegen compile (the reference's timings
         # are equally min-of-N on a warm pool, benchmark_sed.py:58-63)
@@ -651,71 +628,6 @@ def main() -> None:
     suite_total = round(
         sum(v for k, v in timings.items() if k.startswith("q_") and v > 0), 4,
     )
-
-    # -- phase 3b: DuckDB baseline for the training-data (ext) queries -----
-    # the sed-core metrics have BASELINE.md numbers to compare against; the
-    # LLM-pipeline operators get their 2x bar from DuckDB running the SAME
-    # oracle SQL on the SAME parquet at the SAME sf (best-of-2, matching
-    # the Spark side). -1 = error, -2 = 300 s cap interrupted.
-    if run_duck:
-        try:
-            import threading
-
-            import duckdb
-
-            from sed_spark.suite import ext as _suite_ext
-
-            con = duckdb.connect()
-            for t in ("region", "nation", "customer", "supplier", "part",
-                      "orders", "lineitem", "events", "documents",
-                      "embeddings"):
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'",
-                )
-            for name, spec in _suite_ext.QUERIES.items():
-                sql = spec.get("sql")
-                if not sql:
-                    continue
-                best = float("inf")
-                for _ in range(2):
-                    fired: list[int] = []
-
-                    def _interrupt(fired=fired):
-                        fired.append(1)
-                        con.interrupt()
-
-                    timer = threading.Timer(300.0, _interrupt)
-                    timer.start()
-                    t0 = time.perf_counter()
-                    try:
-                        con.execute(sql).fetchall()
-                        best = min(best, time.perf_counter() - t0)
-                    except duckdb.InterruptException:
-                        # keep an earlier successful rep's time; -2 only when
-                        # no rep ever finished inside the cap
-                        if best == float("inf"):
-                            best = -2.0
-                        break
-                    except Exception as exc:
-                        print(f"bench: duckdb {name} failed: {exc}",
-                              file=sys.stderr)
-                        if best == float("inf"):
-                            best = -1.0
-                        break
-                    finally:
-                        timer.cancel()
-                        if fired:
-                            # timer fired in the window between fetchall()
-                            # returning and cancel(): absorb the pending
-                            # interrupt so it can't abort the NEXT query
-                            try:
-                                con.execute("SELECT 1").fetchall()
-                            except duckdb.InterruptException:
-                                pass
-                duck_timings[f"q_{name}"] = round(best, 4)
-            con.close()
-        except Exception as exc:  # duckdb trouble must not kill the bench
-            print(f"bench: duckdb baseline skipped: {exc}", file=sys.stderr)
 
     # -- verdicts -----------------------------------------------------------
     canary_ok_by_metric, contaminated, canary_ok = compute_verdicts(
@@ -738,7 +650,7 @@ def main() -> None:
     all_bw = [b for bs in canary_bw_log.values() for b in bs]
     all_lat = [x for xs in canary_lat_log.values() for x in xs]
 
-    # Full record (per-query timings, per-rep samples, duck baselines) goes
+    # Full record (per-query timings, per-rep samples) goes
     # to a sidecar file: round 5 proved that putting the reps dict on the
     # stdout line pushes it past the driver's 2000-char tail capture and the
     # whole round loses its headline bench (BENCH_r05.json parsed:null).
@@ -771,15 +683,10 @@ def main() -> None:
                 "canary_ok_by_metric": canary_ok_by_metric,
                 "contaminated": contaminated,
                 "loadavg": load_log,
-                # trainer warm-up cost (BPE/unigram/WordPiece/classifier/
-                # DSIR fits), first-class so fit-vs-apply cost is
-                # auditable across rounds; excluded from suite_total
-                "fit_secs": fit_secs_log,
-                "duck": duck_timings,
                 "sf": sf,
                 "synthetic_rows": n_synth,
                 "phase_order": "inv_dfield -> synthetic (own session) -> "
-                               "suite -> duckdb",
+                               "suite",
                 "spliced_only": sorted(selected) if selected else [],
             },
             fh,
@@ -794,7 +701,6 @@ def main() -> None:
                   "workflow_1d", "workflow_4d")
         if k in timings
     }
-    duck_total = round(sum(v for v in duck_timings.values() if v > 0), 4)
     print(
         json.dumps(
             {
@@ -802,7 +708,6 @@ def main() -> None:
                 "value": suite_total,
                 "unit": "sec",
                 "queries": headline,
-                "duck_total": duck_total,
                 "sf": sf,
                 "synthetic_rows": n_synth,
                 # host-contention summary: each canary workload's

@@ -215,7 +215,7 @@ def _axis_source_projection(
                         raise ValueError(
                             "seed_column jitter supports uniform mode only",
                         )
-                    from sed_spark.ext.corpus import uniform_hash_expr
+                    from sed_spark.dfops import uniform_hash_expr
 
                     u = uniform_hash_expr(
                         seed_col,
@@ -436,141 +436,6 @@ def _dense_via_groupby(
     return dense
 
 
-def _dense_via_taskblob(
-    proj: DataFrame, cube: int, out_dtype="uint32",
-) -> np.ndarray:
-    """High-occupancy cube: per-task sort-unique → ONE packed blob per task
-    → direct Arrow collect → driver scatter-add. NO shuffle stage at all.
-
-    When occupancy approaches the cube size (rows ≳ cells), the groupby
-    path degrades: map-side partial aggregation stops reducing anything
-    (most groups are near-unique per task), so the full row set shuffles,
-    the final hash aggregate builds a ~cube-sized table, and the sparse
-    collect still transfers ~occupancy × 12 B. Here each task instead
-    reduces its own rows with ``np.unique`` (indices are then unique
-    *within* a task), packs (idx, cnt) as two binary columns in a single
-    record batch, and the driver adds each task's pairs into the dense
-    cube with one vectorized scatter per task — correct because
-    within-task uniqueness means no collisions inside a single scatter.
-    Driver traffic is the summed per-task occupancy (bounded by
-    min(rows, tasks × cube)).
-
-    MEASURED on the 1e8-row 100⁴ bench (local[32]): 21 s vs 13.6 s for
-    the groupby path — the per-task ``np.unique`` sort plus the serial
-    driver scatter over ~98 M pairs costs more than the JVM hash
-    aggregate saves. Kept as a measured alternative and for workloads
-    where driver bandwidth beats shuffle capacity; NOT selected by
-    ``method="auto"``.
-    """
-    import pyarrow as pa
-
-    idx_dtype = np.int32 if cube <= np.iinfo(np.int32).max else np.int64
-    if idx_dtype is np.int32:
-        proj = proj.select(F.col("__idx").cast("int").alias("__idx"))
-
-    def to_pairs(batches):
-        chunks = [b.column(0).to_numpy(zero_copy_only=False) for b in batches]
-        if not chunks:
-            return
-        idx = np.concatenate(chunks) if len(chunks) > 1 else chunks[0]
-        idx = idx[idx >= 0]  # drop the -1 out-of-range sentinel
-        if len(idx) == 0:
-            return
-        nz, cnt = np.unique(idx, return_counts=True)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([nz.astype(idx_dtype, copy=False).tobytes()],
-                         pa.large_binary()),
-                pa.array([cnt.astype(np.uint32).tobytes()], pa.large_binary()),
-            ],
-            ["iv", "cv"],
-        )
-
-    # taskblob ACCUMULATES (+=) across task blobs, so it must keep the
-    # exact uint32 accumulator the contract documents (a float32 +=
-    # would round per-add past 2^24) and convert ONCE at the end —
-    # unlike the assign-only paths, which cast on write
-    dense = np.zeros(cube, dtype=np.uint32)
-    tbl = proj.select("__idx").mapInArrow(to_pairs, "iv binary, cv binary").toArrow()
-    iv_col, cv_col = tbl.column("iv"), tbl.column("cv")
-    for k in range(len(iv_col)):
-        iv = np.frombuffer(iv_col[k].as_buffer(), dtype=idx_dtype)
-        cv = np.frombuffer(cv_col[k].as_buffer(), dtype=np.uint32)
-        dense[iv] += cv  # iv unique within one task's blob — no collisions
-    return dense if np.dtype(out_dtype) == np.uint32 \
-        else dense.astype(out_dtype)
-
-
-def _dense_via_blockshuffle(
-    proj: DataFrame, cube: int, out_dtype="uint32",
-) -> np.ndarray:
-    """High-occupancy cube: block-partition exchange → per-block dense
-    ``np.bincount`` → driver block assembly. No aggregation stage at all.
-
-    When occupancy approaches the cube size (rows ≳ cells), the groupby
-    path wastes its map-side partial aggregate (near-unique keys per task:
-    the hash table grows to ~rows/tasks entries and reduces almost
-    nothing) and the final aggregate builds ~occupancy-sized hash tables.
-    Here the flat index space [0, cube) is cut into ``P`` contiguous
-    blocks; a plain ``repartition`` on the block id moves raw int32 keys
-    (pure exchange, no agg machinery), and each Python task bincounts its
-    blocks into dense uint32 spans — vectorized, no hash table, no sort.
-    Every row with the same block id lands in exactly one partition, so
-    blocks never collide across tasks and the driver writes each span
-    once. Driver traffic is exactly cube × 4 B regardless of row count,
-    the only plan whose driver cost stays flat as occupancy → 100 %.
-
-    MEASURED on the 1e8-row 100⁴ bench (local[32]): 16.4 s vs 13.6 s for
-    the groupby path — the Arrow transfer of 1e8 raw keys into Python
-    workers costs more than the JVM partial+final aggregate. Kept as a
-    measured alternative; would win where occupancy ≫ what a sparse
-    collect can carry (counts ≫ cells, tiny cube) or where the final
-    hash aggregate spills. NOT selected by ``method="auto"``.
-    """
-    import pyarrow as pa
-
-    nparts = max(proj.sparkSession.sparkContext.defaultParallelism, 1)
-    nblocks = min(4 * nparts, cube)
-    span = -(-cube // nblocks)  # ceil
-
-    inrange = proj.filter(F.col("__idx") >= 0)
-    if cube <= np.iinfo(np.int32).max:
-        inrange = inrange.select(F.col("__idx").cast("int").alias("__idx"))
-    blocked = inrange.repartition(
-        nblocks, (F.col("__idx") / F.lit(span)).cast("int"),
-    )
-
-    def to_blocks(batches):
-        chunks = [b.column(0).to_numpy(zero_copy_only=False) for b in batches]
-        if not chunks:
-            return
-        idx = np.concatenate(chunks) if len(chunks) > 1 else chunks[0]
-        if len(idx) == 0:
-            return
-        blocks = idx // span
-        for b in np.unique(blocks):
-            lo = int(b) * span
-            n = min(span, cube - lo)
-            cnt = np.bincount(idx[blocks == b] - lo, minlength=n)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([int(b)], pa.int32()),
-                    pa.array([cnt.astype(np.uint32, copy=False).tobytes()],
-                             pa.large_binary()),
-                ],
-                ["b", "data"],
-            )
-
-    dense = np.zeros(cube, dtype=out_dtype)  # cast-on-write, see groupby
-    tbl = blocked.mapInArrow(to_blocks, "b int, data binary").toArrow()
-    data_col = tbl.column("data")
-    for i, b in enumerate(tbl.column("b").to_pylist()):
-        lo = b * span
-        chunk = np.frombuffer(data_col[i].as_buffer(), dtype=np.uint32)
-        dense[lo:lo + len(chunk)] = chunk
-    return dense
-
-
 def _dense_via_chunks(
     proj: DataFrame, cube: int, out_dtype="uint32",
 ) -> np.ndarray:
@@ -679,17 +544,14 @@ def bin_dataframe(
     jitter=None,
     jitter_seed: int | None = None,
     dtype: str = "float32",
-    method: str = "auto",
     occupancy_hint: int | None = None,
 ) -> BinnedData:
     """N-dimensional histogram, densified to a :class:`BinnedData`.
 
     Spark equivalent of the reference's ``bin_dataframe``
     (src/sed/binning/binning.py:200-427). The final cast to float32 follows
-    binning.py:408,421. ``method`` is ``auto`` (cube-size heuristic:
-    groupby below ``CHUNKED_MIN_CUBE`` cells, chunked above), ``groupby``,
-    ``chunked``, ``taskblob``, or ``blockshuffle`` — the last two are
-    measured-slower alternatives kept for their docstring'd tradeoffs.
+    binning.py:408,421. The physical path follows the cube size: the
+    groupby path up to ``CHUNKED_MIN_CUBE`` cells, the chunked path above.
     ``occupancy_hint`` bounds the expected number of occupied cells for
     the groupby path's reducer sizing (see :func:`_dense_via_groupby`) —
     pass it when the data is known to be sharply peaked relative to the
@@ -706,20 +568,12 @@ def bin_dataframe(
     srcdf, snames = _axis_source_projection(df, norm, jitter, jitter_seed)
     flat = _flat_idx_expr(norm, snames)
     proj = srcdf.select(F.coalesce(flat, F.lit(-1).cast("long")).alias("__idx"))
-    if method == "auto":
-        method = "groupby" if cube <= CHUNKED_MIN_CUBE else "chunked"
-    if method == "groupby":
+    if cube <= CHUNKED_MIN_CUBE:
         dense = _dense_via_groupby(
             proj, cube, occupancy_hint=occupancy_hint, out_dtype=dtype,
         )
-    elif method == "chunked":
-        dense = _dense_via_chunks(proj, cube, out_dtype=dtype)
-    elif method == "taskblob":
-        dense = _dense_via_taskblob(proj, cube, out_dtype=dtype)
-    elif method == "blockshuffle":
-        dense = _dense_via_blockshuffle(proj, cube, out_dtype=dtype)
     else:
-        raise ValueError(f"unknown binning method {method!r}")
+        dense = _dense_via_chunks(proj, cube, out_dtype=dtype)
     coords = {ax.name: ax.bin_centers() for ax in norm}
     return BinnedData(
         # builders already produced `dtype`; astype(copy=False) is a no-op

@@ -49,21 +49,9 @@ def gather_files(
 
 
 class GenericLoader:
-    """Reads parquet/orc/csv/json/text/binary into an event DataFrame with
-    ``file_id``.
+    """Reads parquet/orc/csv/json into an event DataFrame with ``file_id``."""
 
-    ``text`` yields one row per line (``value`` string) — raw-corpus
-    ingestion before any parsing; ``binaryfile`` yields Spark's
-    ``(path, modificationTime, length, content)`` per file — the
-    multimodal front door: ``content`` is the opaque payload column the
-    ``ext.multimodal`` decode/resize/frame-sample operators consume,
-    with per-file metadata already typed. Neither format supports
-    predicate pushdown into file contents (there is nothing to push
-    into), but ``binaryfile`` honors ``pathGlobFilter`` and
-    PartitionFilters on directory layout.
-    """
-
-    supported_file_types = ("parquet", "orc", "csv", "json", "text", "binaryfile")
+    supported_file_types = ("parquet", "orc", "csv", "json")
 
     def __init__(self, spark: SparkSession | None = None, **_):
         self.spark = spark
@@ -86,14 +74,7 @@ class GenericLoader:
         if files is None:
             if folder is None:
                 raise ValueError("provide files or folder")
-            # disk extension != reader format for the raw formats; an
-            # explicit ``extension`` reader option overrides (e.g. .log
-            # text files, .png binary payloads)
-            ext = reader_options.pop(
-                "extension",
-                {"text": "txt", "binaryfile": "*"}.get(ftype, ftype),
-            )
-            files = gather_files(folder, ext)
+            files = gather_files(folder, ftype)
         else:
             files = natural_sort([os.path.realpath(f) for f in files])
         if not files:
@@ -107,10 +88,6 @@ class GenericLoader:
             df = reader.orc(*files)
         elif ftype == "csv":
             df = reader.option("header", "true").option("inferSchema", "true").csv(list(files))
-        elif ftype == "text":
-            df = reader.text(list(files))
-        elif ftype == "binaryfile":
-            df = reader.format("binaryFile").load(list(files))
         else:
             df = reader.json(list(files))
 

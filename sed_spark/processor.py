@@ -295,8 +295,10 @@ class SedProcessor:
         """Run the N-D histogram (reference src/sed/core/processor.py:2150-2314).
 
         ``max_file_id`` replaces the reference's partition pruning
-        (processor.py:2229-2235) with a ``file_id`` predicate that prunes at
-        the parquet-footer level.
+        (processor.py:2229-2235) with a ``file_id`` predicate. ``file_id``
+        is derived from ``input_file_name()``, which Spark cannot prune
+        on, so today the predicate filters rows after a scan of every
+        file.
         """
         df = self._dataframe
         if max_file_id is not None:

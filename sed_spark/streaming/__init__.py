@@ -41,10 +41,6 @@ __all__ = [
     "timed_table_stream",
     "streaming_histogram",
     "streaming_sessionize",
-    "streaming_exact_dedup",
-    "streaming_dedup_within_watermark",
-    "streaming_distinct_sketch",
-    "streaming_interval_join",
     "streaming_enrich",
     "run_available_now",
     "state_store_partitions",
@@ -59,7 +55,7 @@ def state_store_partitions(spark: SparkSession) -> int:
     shuffle partition per micro-batch; for an availableNow drain whose
     data fits in seconds, the session default (2× cores) spends more
     wall on near-empty store lifecycle than on rows (measured 19.3 s →
-    3.5 s on the stream-stream join at 64 → 8 partitions, local[32]).
+    3.5 s on a stream-stream join drain at 64 → 8 partitions, local[32]).
     ``max(2, cores // 4)`` keeps per-query state parallelism a fixed
     fraction of the machine instead of a pinned constant: 32 cores → 8
     (the round-11 measured-good value), 4-8 cores → 2, and a 128-core
@@ -146,93 +142,6 @@ def streaming_histogram(
     )
 
 
-def streaming_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_on: str,
-    right_on: str,
-    left_time: str,
-    right_time: str,
-    lag_seconds: int = 60,
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """Stream-stream interval join: every left event paired with the
-    right-stream events of the same key arriving within ``lag_seconds``
-    AFTER it — the click→conversion attribution shape, live.
-
-    This is Spark's watermarked stream-stream inner join: both sides
-    carry a watermark and the join condition bounds ``right_time`` to
-    ``[left_time, left_time + lag]``, which is what lets the engine
-    EVICT state — a left row can stop waiting once the right watermark
-    passes ``left_time + lag``, so state is bounded by (event rate ×
-    lag), not by stream length. Without the time bound Spark would have
-    to keep every row forever (and rejects the query). Column names
-    must be disjoint across the two sides apart from nothing — rename
-    before joining; the key columns may differ in name (``left_on`` /
-    ``right_on``).
-
-    Batch parity: the same join on the drained tables is a plain
-    inequality join — the replay harness checks the PAIR SET matches it
-    exactly (closed-open on the lag bound's upper edge is ``<=``:
-    both engines evaluate the identical predicate).
-    """
-    clash = sorted(set(left.columns) & set(right.columns))
-    if clash:
-        raise ValueError(
-            f"stream column collision {clash}; rename before joining",
-        )
-    lw = left.withWatermark(left_time, watermark)
-    rw = right.withWatermark(right_time, watermark)
-    cond = (
-        (F.col(left_on) == F.col(right_on))
-        & (F.col(right_time) >= F.col(left_time))
-        & (
-            F.col(right_time)
-            <= F.col(left_time) + F.expr(f"INTERVAL {int(lag_seconds)} SECONDS")
-        )
-    )
-    return lw.join(rw, cond, "inner")
-
-
-def streaming_distinct_sketch(
-    df: DataFrame,
-    key_col: str,
-    p: int = 8,
-    salt: str = "hll",
-    window_duration: str = "1 minute",
-    watermark: str = "10 seconds",
-    event_time_column: str = "__event_time",
-) -> DataFrame:
-    """Per-window HyperLogLog registers on a live stream: how many
-    DISTINCT keys (users, URLs, documents) per window, without keeping
-    the keys. Emits ``(window_start, register, max_rho)``.
-
-    Reuses :func:`sed_spark.ext.sketch.hll_register_cols` verbatim, so a
-    window's register table is bit-identical to running the batch
-    builder over that window's slice — and downstream the sink rows
-    merge with ``hll_merge`` (register-wise max) and estimate with
-    ``hll_estimate``, because HLL registers ARE the mergeable state.
-    State per open window is capped at ``2^p`` registers regardless of
-    event rate — the bounded-state property every aggregate in this
-    module maintains — and the watermark evicts closed windows.
-    """
-    from sed_spark.ext.sketch import hll_register_cols
-
-    register, rho = hll_register_cols(F.col(key_col), p, salt)
-    window = F.window(F.col(event_time_column), window_duration)
-    return (
-        df.withWatermark(event_time_column, watermark)
-        .select(
-            F.col(event_time_column),
-            register.alias("register"),
-            rho.alias("rho"),
-        )
-        .groupBy(window.alias("w"), "register")
-        .agg(F.max("rho").alias("max_rho"))
-        .select(F.col("w.start").alias("window_start"), "register", "max_rho")
-    )
-
-
 def streaming_sessionize(
     df: DataFrame,
     gap_us: int,
@@ -270,72 +179,6 @@ def streaming_sessionize(
             F.col("w.start").alias("session_start"),
             "events",
         )
-    )
-
-
-def streaming_exact_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_shards: int = 64,
-) -> DataFrame:
-    """First-seen-wins exact dedup over a document stream.
-
-    The custom stateful operator the batch engine cannot express: which
-    documents were seen in EARLIER micro-batches. Implemented with
-    ``applyInPandasWithState``:
-
-    * the content hash (``md5``) is computed JVM-side before grouping;
-    * the group key is a hash shard (``pmod(hash, n_shards)``), so seen-set
-      state is partitioned across executors — per-shard state holds only
-      that shard's distinct hashes, and shards rebalance with the state
-      store when the cluster resizes;
-    * each invocation filters its Arrow batches against the shard's seen
-      set (first occurrence within the batch wins too, in row order) and
-      writes the enlarged set back.
-
-    State is the distinct-hash set itself — exact dedup needs it; at
-    100 TB the deployment knobs are a RocksDB state store provider and a
-    TTL/timeout policy when "duplicate" only means within a horizon.
-    Output mode: ``append`` (emitted rows are final the moment they pass).
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import StringType, StructField
-
-    hashed = df.select(
-        F.col(id_col), F.col(text_col),
-        F.md5(F.col(text_col)).alias("__h"),
-        F.pmod(F.crc32(F.col(text_col).cast("binary")), F.lit(n_shards))
-        .cast("long").alias("__shard"),
-    )
-    out_schema = hashed.schema
-    state_schema = StructType([StructField("seen", StringType())])
-
-    def dedup_fn(key, pdf_iter, state):
-        # state as one comma-joined string: the state row must be a flat
-        # struct; hashes are fixed-width hex so the packing is unambiguous
-        seen = set(state.get[0].split(",")) if state.exists else set()
-        for pdf in pdf_iter:
-            keep = []
-            for h in pdf["__h"]:
-                fresh = h not in seen
-                if fresh:
-                    seen.add(h)
-                keep.append(fresh)
-            if any(keep):
-                yield pdf[keep]
-        state.update((",".join(sorted(seen)),))
-
-    return (
-        hashed.groupBy("__shard")
-        .applyInPandasWithState(
-            dedup_fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        .select(id_col, text_col)
     )
 
 
@@ -398,7 +241,7 @@ def streaming_enrich(
     """STREAM-STATIC join: enrich a live event stream with a (small)
     dimension table — the lookup-table shape (user → segment, doc →
     license, host → datacenter) that completes the streaming join
-    matrix next to the watermarked stream-stream interval join.
+    matrix.
 
     The static side is broadcast, so each micro-batch probes a
     replicated hash map instead of shuffling stream state — stream-
@@ -415,30 +258,3 @@ def streaming_enrich(
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     return stream.join(F.broadcast(dim), on, how)
-
-
-def streaming_dedup_within_watermark(
-    df: DataFrame,
-    key_cols: str | list[str],
-    event_time_col: str,
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """BOUNDED-STATE dedup: drop a key's repeats only while its first
-    occurrence is still inside the watermark horizon; the state entry is
-    evicted once the watermark passes ``event_time + delay``.
-
-    The deployment companion to :func:`streaming_exact_dedup`: exact
-    dedup must keep every hash ever seen (state grows with history),
-    which is the right contract for corpus ingestion but the wrong one
-    for at-least-once sources and retry storms, where "duplicate" only
-    means WITHIN A HORIZON. Here state size is O(keys per horizon) —
-    bounded regardless of stream age — so the operator runs forever
-    without a TTL policy bolted on. Repeats farther apart than the
-    horizon are genuinely re-emitted (two copies survive): that is the
-    contract, not a bug; size ``delay`` to the source's redelivery
-    window. Built on the engine's ``dropDuplicatesWithinWatermark``
-    (state-store backed, watermark-driven eviction); output mode
-    append, rows are final when emitted.
-    """
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    return df.withWatermark(event_time_col, delay).dropDuplicatesWithinWatermark(keys)

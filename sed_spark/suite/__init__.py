@@ -5,25 +5,15 @@ DataFrame``) with an equivalent ANSI-SQL oracle string for DuckDB. Spark
 expression trees and SQL strings are generated from the SAME Python
 constants, so float literals and operation order match bit-for-bit; the few
 places where cross-engine float identity is not achievable (transcendentals,
-float-sum order) round to 6 decimals on BOTH sides or use exact decimal/
-integer arithmetic (see relational.py's TPC-H-style aggregates).
+float-sum order) round to 6 decimals on BOTH sides.
 """
 
 from __future__ import annotations
 
 from sed_spark.suite import core as _core
-from sed_spark.suite import ext as _ext
-from sed_spark.suite import relational as _rel
 
 #: name -> {"spark": callable(spark, sf_dir) -> DataFrame, "sql": str | None}
-#: ext-first ordering: the driver's correctness gate records a bounded
-#: prefix of this dict, and the training-data-pipeline operators are the
-#: ones with no unit-test-only fallback evidence — they must never fall
-#: off the end (round-2 verdict: 15 ext queries lost their rows to a
-#: 50-entry window).
-REGISTRY: dict[str, dict] = {}
-for mod in (_ext, _core, _rel):
-    REGISTRY.update(mod.QUERIES)
+REGISTRY: dict[str, dict] = dict(_core.QUERIES)
 
 
 def queries():

@@ -14,8 +14,8 @@ def fl(x: float) -> str:
 def hex8(col: str) -> str:
     """SQL for the first 8 hex digits of an md5 column as an integer
     (digit-by-digit parse — portable, no hex-literal casts). Mirrors the
-    Spark side of ``sed_spark.ext.corpus.uniform_hash_expr('md5')``
-    when divided by 2^32."""
+    Spark side of ``sed_spark.dfops.uniform_hash_expr('md5')`` when
+    divided by 2^32."""
     return " + ".join(
         f"{16 ** (7 - i)} * "
         f"(strpos('0123456789abcdef', substr({col}, {i + 1}, 1)) - 1)"

@@ -28,13 +28,11 @@ def test_band_ok_quiet_and_burst_and_all_loud():
 
 def test_parse_only_tokens_and_aliases():
     reg = {"asof_ops": 1, "filters": 2}
-    assert bench.parse_only("", reg) == (None, True)  # full run
-    sel, duck = bench.parse_only("inv_dfield,q_asof_ops", reg)
-    assert sel == {"inv_dfield", "q_asof_ops"} and duck is False
-    sel, duck = bench.parse_only("synthetic,duck", reg)
-    assert sel == set(bench.SYNTH_METRICS) and duck is True
-    sel, _ = bench.parse_only("suite", reg)
-    assert sel == {"q_asof_ops", "q_filters"}
+    assert bench.parse_only("", reg) is None  # full run
+    sel = bench.parse_only("inv_dfield,q_asof_ops", reg)
+    assert sel == {"inv_dfield", "q_asof_ops"}
+    assert bench.parse_only("synthetic", reg) == set(bench.SYNTH_METRICS)
+    assert bench.parse_only("suite", reg) == {"q_asof_ops", "q_filters"}
     with pytest.raises(SystemExit, match="unknown"):
         bench.parse_only("q_nonsense", reg)
     with pytest.raises(SystemExit, match="unknown"):

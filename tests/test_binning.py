@@ -6,8 +6,15 @@ np.histogramdd)."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from sed_spark.binning import bin_dataframe, normalize_bins
+from sed_spark.binning.core import (
+    _axis_source_projection,
+    _dense_via_chunks,
+    _dense_via_groupby,
+    _flat_idx_expr,
+)
 from sed_spark.binning.spec import bin_centers_to_bin_edges
 
 
@@ -79,22 +86,29 @@ def test_exact_last_edge(spark):
     np.testing.assert_allclose(res.data, [0, 1])
 
 
+def _flat_index_frame(df, bins, axes, ranges):
+    """The ``__idx`` projection ``bin_dataframe`` feeds its dense builders."""
+    norm = normalize_bins(bins, axes, ranges)
+    srcdf, snames = _axis_source_projection(df, norm, None, None)
+    flat = _flat_idx_expr(norm, snames)
+    return srcdf.select(F.coalesce(flat, F.lit(-1).cast("long")).alias("__idx"))
+
+
 def test_methods_agree_4d(events_df, events_pdf):
-    """All four physical strategies produce identical cubes."""
+    """Both physical strategies (groupby, chunked) produce the numpy cube."""
     bins = [12, 12, 12, 12]
     ranges = [(0.0, 2048.0), (0.0, 2048.0), (60_000.0, 120_000.0),
               (2_000.0, 20_000.0)]
     axes = ["X", "Y", "t", "ADC"]
-    a = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges,
-                      method="groupby")
+    proj = _flat_index_frame(events_df, bins, axes, ranges)
+    cube = int(np.prod(bins))
+    a = _dense_via_groupby(proj, cube, out_dtype="float32").reshape(bins)
     ref, _ = np.histogramdd(
         events_pdf[axes].to_numpy(), bins=bins, range=shifted_ranges(bins, ranges),
     )
-    np.testing.assert_allclose(a.data, ref)
-    for method in ("chunked", "taskblob", "blockshuffle"):
-        b = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges,
-                          method=method)
-        np.testing.assert_array_equal(a.data, b.data)
+    np.testing.assert_allclose(a, ref)
+    b = _dense_via_chunks(proj, cube, out_dtype="float32").reshape(bins)
+    np.testing.assert_array_equal(a, b)
 
 
 def test_chunked_non_divisible_cube(events_df, events_pdf):
@@ -103,12 +117,11 @@ def test_chunked_non_divisible_cube(events_df, events_pdf):
     bins = [51, 51, 51]
     ranges = [(0.0, 2048.0), (0.0, 2048.0), (60_000.0, 120_000.0)]
     axes = ["X", "Y", "t"]
-    a = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges,
-                      method="groupby")
-    for method in ("chunked", "blockshuffle"):
-        b = bin_dataframe(events_df, bins=bins, axes=axes, ranges=ranges,
-                          method=method)
-        np.testing.assert_array_equal(a.data, b.data)
+    proj = _flat_index_frame(events_df, bins, axes, ranges)
+    cube = int(np.prod(bins))
+    a = _dense_via_groupby(proj, cube, out_dtype="float32")
+    b = _dense_via_chunks(proj, cube, out_dtype="float32")
+    np.testing.assert_array_equal(a, b)
 
 
 def test_jitter_binning_total_preserved(events_df):

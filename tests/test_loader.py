@@ -161,40 +161,3 @@ def test_align_channels_drops_negative_pulses(spark):
     assert sorted(out["pulseId"]) == [0, 5]
     kept = align_channels(electron, drop_negative_pulses=False).toPandas()
     assert len(kept) == 4
-
-
-def test_generic_loader_reads_text_lines(spark, tmp_path):
-    (tmp_path / "a.txt").write_text("line one\nline two\n")
-    (tmp_path / "b.txt").write_text("line three\n")
-    loader = GenericLoader(spark=spark)
-    df, meta = loader.read_dataframe(folder=str(tmp_path), ftype="text")
-    rows = {(r["value"], r["file_id"]) for r in df.collect()}
-    assert rows == {("line one", 0), ("line two", 0), ("line three", 1)}
-
-
-def test_generic_loader_reads_binary_payloads(spark, tmp_path):
-    payloads = {"img0.bin": b"\x89PNGfake0", "img1.bin": b"\x89PNGfake1"}
-    for name, blob in payloads.items():
-        (tmp_path / name).write_bytes(blob)
-    loader = GenericLoader(spark=spark)
-    df, meta = loader.read_dataframe(folder=str(tmp_path), ftype="binaryfile")
-    got = {
-        r["path"].rsplit("/", 1)[-1]: (bytes(r["content"]), r["length"],
-                                       r["file_id"])
-        for r in df.collect()
-    }
-    assert got == {
-        "img0.bin": (b"\x89PNGfake0", 9, 0),
-        "img1.bin": (b"\x89PNGfake1", 9, 1),
-    }
-    # the content column feeds the multimodal decode stubs directly
-    from sed_spark.ext import multimodal
-
-    decoded = multimodal.decode_stub(
-        df.select(
-            F.col("file_id").cast("long").alias("item_id"),
-            F.col("content").alias("payload"),
-        ),
-        id_col="item_id",
-    )
-    assert decoded.count() == 2

@@ -64,156 +64,6 @@ def test_timed_table_stream_counts_all_events(spark, stream_dir):
     assert 1 <= len(got) <= 12
 
 
-def test_streaming_exact_dedup_across_microbatches(spark, tmp_path):
-    import pandas as pd
-
-    from sed_spark.streaming import streaming_exact_dedup
-
-    d = tmp_path / "docs"
-    d.mkdir()
-    # duplicates within a file AND across files (separate micro-batches)
-    pd.DataFrame({"doc_id": [0, 1, 2], "text": ["aa", "bb", "aa"]}).to_parquet(
-        d / "f0.parquet",
-    )
-    pd.DataFrame({"doc_id": [3, 4], "text": ["bb", "cc"]}).to_parquet(
-        d / "f1.parquet",
-    )
-    pd.DataFrame({"doc_id": [5, 6], "text": ["cc", "dd"]}).to_parquet(
-        d / "f2.parquet",
-    )
-    batch_schema = spark.read.parquet(str(d)).schema
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    out = streaming_exact_dedup(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    got = spark.table("dedup_sink").toPandas()
-    # exactly one representative per distinct text, id from that text's docs
-    assert sorted(got["text"]) == ["aa", "bb", "cc", "dd"]
-    owners = {"aa": {0, 2}, "bb": {1, 3}, "cc": {4, 5}, "dd": {6}}
-    for _, row in got.iterrows():
-        assert row["doc_id"] in owners[row["text"]]
-
-
-def test_streaming_distinct_sketch_matches_batch_registers(spark, stream_dir):
-    from sed_spark.ext import sketch
-    from sed_spark.streaming import streaming_distinct_sketch
-
-    path, batch_df = stream_dir
-    stream = read_event_stream(
-        spark, path, batch_df.schema, timestamp_column="timeStamp",
-    )
-    # ADC quantized to ints plays the "key" (user/url) column
-    key = (F.col("ADC") / 100).cast("long").cast("string")
-    regs = streaming_distinct_sketch(
-        stream.withColumn("k", key), "k", p=6,
-        window_duration="1 hour",  # single window: all fixture events
-    )
-    run_available_now(regs, "hll_sink")
-    got = {
-        (r["register"], r["max_rho"])
-        for r in spark.table("hll_sink").collect()
-    }
-    want = {
-        (r["register"], r["max_rho"])
-        for r in sketch.hll_registers(
-            batch_df.withColumn("k", key), "k", p=6,
-        ).collect()
-    }
-    # one window => the streaming register table IS the batch table
-    assert got == want
-    # and the sink rows are directly estimable: within the HLL error band
-    est = sketch.hll_estimate(
-        spark.table("hll_sink").select("register", "max_rho"), p=6,
-    ).collect()[0]
-    true = (
-        batch_df.select(key.alias("k")).distinct().count()
-    )
-    assert abs(est["estimate"] - true) / true < 4 * 1.04 / (1 << 3)
-
-
-def test_streaming_interval_join_matches_batch_inequality_join(spark, stream_dir):
-    from sed_spark.streaming import streaming_interval_join
-
-    path, batch_df = stream_dir
-    lag = 1800  # seconds
-
-    def prep(df, suffix):
-        return df.select(
-            F.col("file_id").alias(f"fid{suffix}"),
-            F.col("ADC").cast("long").alias(f"k{suffix}"),
-            F.col("timeStamp").cast("timestamp").alias(f"t{suffix}"),
-            F.col("row_index").alias(f"rid{suffix}"),
-        )
-
-    # left = a sparse trigger stream (every 20th event of one file),
-    # right = the full stream; ~18k key values keep the pair set bounded
-    l_stream = prep(
-        read_event_stream(
-            spark, path + "/chunk0*.parquet", batch_df.schema,
-            timestamp_column="timeStamp",
-        ).drop("__event_time").filter(F.col("row_index") % 20 == 0),
-        "l",
-    )
-    r_stream = prep(
-        read_event_stream(
-            spark, path, batch_df.schema, timestamp_column="timeStamp",
-        ).drop("__event_time"),
-        "r",
-    )
-    joined = streaming_interval_join(
-        l_stream, r_stream, "kl", "kr", "tl", "tr", lag_seconds=lag,
-    )
-    # stream-stream joins emit in APPEND mode only; aggregate in the sink
-    run_available_now(joined, "sj_sink", output_mode="append")
-    got = {
-        (r["kl"], r["n_pairs"])
-        for r in spark.table("sj_sink")
-        .groupBy("kl").agg(F.count(F.lit(1)).alias("n_pairs")).collect()
-    }
-    lb = spark.read.parquet(path + "/chunk0.parquet").filter(
-        F.col("row_index") % 20 == 0,
-    )
-    lbp = prep(lb, "l")
-    rbp = prep(spark.read.parquet(path), "r")
-    want = {
-        (r["kl"], r["n_pairs"])
-        for r in lbp.join(
-            rbp,
-            (F.col("kl") == F.col("kr"))
-            & (F.col("tr") >= F.col("tl"))
-            & (F.col("tr") <= F.col("tl") + F.expr(f"INTERVAL {lag} SECONDS")),
-        )
-        .groupBy("kl")
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .collect()
-    }
-    assert got == want and got
-
-
-def test_streaming_interval_join_rejects_column_collision(spark, stream_dir):
-    import pytest
-
-    from sed_spark.streaming import streaming_interval_join
-
-    path, batch_df = stream_dir
-    s = read_event_stream(
-        spark, path, batch_df.schema, timestamp_column="timeStamp",
-    )
-    with pytest.raises(ValueError, match="collision"):
-        streaming_interval_join(s, s, "a", "a", "t", "t")
-
-
 def test_streaming_enrich_matches_batch_join(spark, tmp_path):
     from sed_spark.streaming import run_available_now, streaming_enrich
 
@@ -241,51 +91,3 @@ def test_streaming_enrich_matches_batch_join(spark, tmp_path):
     assert got == want and got[None] == 16  # uids 3,4 unmatched
     with pytest.raises(ValueError, match="how must be"):
         streaming_enrich(stream, dim, "uid", how="full")
-
-
-def test_streaming_dedup_within_watermark_bounded_state(spark, tmp_path):
-    import pandas as pd
-
-    from sed_spark.streaming import streaming_dedup_within_watermark
-
-    d = tmp_path / "wdedup"
-    d.mkdir()
-
-    def stage(name, ks, secs):
-        pdf = pd.DataFrame({"k": ks, "ts": pd.to_datetime(secs, unit="s")})
-        # microsecond unit: the session reads parquet NANOS as bigint
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        pdf.to_parquet(d / name)
-
-    # batch 0: A and B, plus an in-horizon repeat of B (dropped);
-    # batch 1: C far in the future — advances the watermark past A/B's
-    #          state expiry (event_time + 60 s);
-    # batch 2: D — the eviction pass RUNS under batch 1's committed
-    #          watermark (state cleanup lags the data that moved the
-    #          watermark by one batch), removing A and B;
-    # batch 3: A again — its state is GONE, so it is re-emitted: the
-    #          bounded-state contract (repeats beyond the horizon are
-    #          genuine re-emissions), which exact dedup would suppress
-    stage("f0.parquet", ["A", "B", "B"], [1000, 1000, 1001])
-    stage("f1.parquet", ["C"], [8000])
-    stage("f2.parquet", ["D"], [8050])
-    stage("f3.parquet", ["A"], [8100])
-
-    schema = spark.read.parquet(str(d)).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-        # watermarks want TIMESTAMP, parquet staging yields TIMESTAMP_NTZ
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    out = streaming_dedup_within_watermark(stream, "k", "ts", delay="60 seconds")
-    run_available_now(out, "wdedup_sink", output_mode="append")
-    got = sorted(
-        (r["k"], int(r["ts"].timestamp()))
-        for r in spark.table("wdedup_sink").collect()
-    )
-    spark.catalog.dropTempView("wdedup_sink")
-    assert got == [
-        ("A", 1000), ("A", 8100), ("B", 1000), ("C", 8000), ("D", 8050),
-    ]

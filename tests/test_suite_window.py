@@ -1,17 +1,26 @@
-"""Suite-size regression guard.
+"""Suite-size and oracle-coverage guards.
 
 The driver's per-round CORRECTNESS record is a bounded 50-row window:
 ``CORRECTNESS_r07.json`` held exactly 50 entries while the suite
-registered 51, and the 51st query (``correlated_subqueries``) shipped
-with no hard cross-engine signal. The standing rule since round 4 is to
-fold new operator shapes into existing rows as tag-union branches; this
-test makes a 51st registration a loud failure instead of a silent
-evidence gap.
+registered 51, and the 51st query shipped with no hard cross-engine
+signal. The standing rule is to fold new operator shapes into existing
+rows as tag-union branches; this test makes a registration past the
+window a loud failure instead of a silent evidence gap.
 """
 
 from __future__ import annotations
 
 DRIVER_CORRECTNESS_WINDOW = 50
+
+#: the sed operator queries (SURVEY.md §2) the driver contract exposes
+SED_QUERIES = {
+    "hist_2d", "hist_4d", "hist_1d", "hist_1d_jitter", "filters",
+    "tof_conversions", "energy_corrections", "sector_align", "ffill_bfill",
+    "channel_align", "sxp_segment", "file_attr_broadcast", "offsets",
+    "delay_pipeline", "affine_transforms", "dfield_warp",
+    "flagship_momentum", "asof_ops", "dwell_norm", "timed_norm",
+    "sessionization", "run_stats", "file_stats",
+}
 
 
 def test_suite_fits_driver_correctness_window():
@@ -22,44 +31,30 @@ def test_suite_fits_driver_correctness_window():
         f"suite registers {len(qs)} queries but the driver CORRECTNESS "
         f"window records only {DRIVER_CORRECTNESS_WINDOW}; queries past the "
         "window get NO verified row. Fold the new shapes into an existing "
-        "row as a tag-union branch (see semi_anti_join's correlated "
-        "branches) instead of registering a new one."
+        "row as a tag-union branch instead of registering a new one."
     )
 
 
 def test_every_suite_row_has_an_oracle_or_is_documented():
-    """Every queries() entry should carry a DuckDB oracle; rows without
-    one only get the driver's weaker rows-only check."""
+    """Every queries() entry carries a DuckDB oracle; a row without one
+    would only get the driver's weaker rows-only check."""
     from sed_spark import suite
 
     qs, oracles = suite.queries(), suite.oracle_sql()
     missing = sorted(set(qs) - set(oracles))
-    # stream_dedup_replay is replay-checked (non-SQL-expressible
-    # stateful streaming); everything else must pair with an oracle
-    allowed_rows_only = {"stream_dedup_replay"}
+    allowed_rows_only: set[str] = set()
     assert set(missing) <= allowed_rows_only, (
         f"suite rows without a DuckDB oracle: {missing} — add oracle SQL "
         "or document the exemption here"
     )
 
 
-def test_warm_fits_populates_every_trainer_cache(spark):
-    """warm_fits (round 10) must hit the same caches text_metrics reads,
-    so a bench rep after it measures operators, not trainer cold-start."""
-    from sed_spark.suite import ext as sx
+def test_entry_exposes_exactly_the_sed_queries():
+    import os
+    import sys
 
-    secs = sx.warm_fits(spark, "/root/testdata/sf0.01")
-    assert set(secs) == {"bpe", "unigram", "wordpiece", "classifier", "dsir"}
-    assert all(v >= 0 for v in secs.values())
-    sf = "/root/testdata/sf0.01"
-    assert sf in sx._BPE_FIT_CACHE
-    assert sf in sx._UNIGRAM_FIT_CACHE
-    assert sf in sx._WORDPIECE_FIT_CACHE
-    assert sf in sx._TRAINED_CLS_CACHE
-    assert sf in sx._DSIR_FIT_CACHE
-    # a second call is pure cache hits — near-instant
-    import time
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as entry
 
-    t0 = time.perf_counter()
-    sx.warm_fits(spark, sf)
-    assert time.perf_counter() - t0 < 5.0
+    assert set(entry.queries()) == SED_QUERIES
+    assert set(entry.oracle_sql()) == SED_QUERIES

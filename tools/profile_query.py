@@ -53,13 +53,6 @@ def main() -> None:
     plans_dir = os.path.join(REPO, "plans", args.tag)
     os.makedirs(plans_dir, exist_ok=True)
 
-    try:
-        from sed_spark.suite.ext import warm_fits
-
-        warm_fits(spark, sf_dir)
-    except Exception as exc:
-        print(f"profile: warm_fits failed: {exc}", file=sys.stderr)
-
     for name in args.queries:
         spec = suite.REGISTRY[name]
         reps = []
