@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sed_spark.dfops import uniform_hash_expr
+
 __all__ = [
     "extract_urls",
     "domain_stats",
@@ -83,39 +85,6 @@ def domain_stats(
             F.count_distinct(F.col(id_col)).alias("n_docs"),
         )
     )
-
-
-def uniform_hash_expr(
-    id_col: str, salt: str = "", method: str = "xxhash64",
-) -> Column:
-    """Deterministic uniform-[0,1) value from (id, salt) — the shared
-    primitive behind :func:`hash_split` and :func:`rate_sample`.
-
-    ``"xxhash64"`` (Spark-native, fastest): the signed 64-bit hash scaled
-    into [0, 1); double precision (53 bits of the hash) is ample for
-    assignment decisions. ``"md5"``: the first 8 hex digits over 2^32 —
-    slower per row, but any engine with an md5 builtin reproduces it
-    bit-for-bit (DuckDB in the oracle, hashlib in tests), making the
-    decision auditable outside the engine that made it.
-    """
-    if method == "xxhash64":
-        return (
-            F.xxhash64(F.col(id_col).cast("string"), F.lit(salt)).cast("double")
-            / F.lit(float(2 ** 64))
-            + F.lit(0.5)
-        )
-    if method == "md5":
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt))),
-                    1, 8,
-                ),
-                16, 10,
-            ).cast("double")
-            / F.lit(float(2 ** 32))
-        )
-    raise ValueError(f"unknown method {method!r}")
 
 
 def hash_split(

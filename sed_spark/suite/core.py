@@ -125,8 +125,8 @@ def hist_1d(spark, sf_dir):
     )
     # equi-depth grammar (round 5): DATA-DRIVEN edges at the k/nbins
     # exact quantiles feed the same literal-edges bin expressions — the
-    # oracle recomputes identical edges via quantile_cont and mirrors the
-    # bin CASE-sum
+    # oracle recomputes identical edges via quantile_cont (the proven
+    # percentile parity of the filters row) and mirrors the bin CASE-sum
     from sed_spark.binning import axis_from_edges, equidepth_edges
 
     eqd_edges = equidepth_edges(df, "value", _EQD_BINS, exact=True)
@@ -219,6 +219,8 @@ sql("hist_1d_jitter", _jitter_hist_sql())
 # oracle row (each branch is the standalone operator; the tag keys the hash)
 @q("filters")
 def filters(spark, sf_dir):
+    from sed_spark.ext.corpus import quantile_gates
+
     df = load(spark, sf_dir, "events")
     by_value = dfops.apply_filter(df, "value", 100.0, 400.0).select(
         F.lit("range").alias("which"), "event_id", "value",
@@ -226,7 +228,12 @@ def filters(spark, sf_dir):
     by_index = dfops.apply_filter(
         df, "index", 2000.0, 7500.0, index_column="event_id",
     ).select(F.lit("index").alias("which"), "event_id", "value")
-    return by_value.unionAll(by_index)
+    # distribution-tail trim: exact percentile band (audit mode — the
+    # approx sketch is the scale default but is engine-specific)
+    by_quant = quantile_gates(df, "value", 0.05, 0.95, exact=True).select(
+        F.lit("quantile").alias("which"), "event_id", "value",
+    )
+    return by_value.unionAll(by_index).unionAll(by_quant)
 
 
 sql("filters",
@@ -234,7 +241,12 @@ sql("filters",
     "WHERE value > 100.0 AND value < 400.0 "
     "UNION ALL "
     "SELECT 'index' AS which, event_id, value FROM events "
-    "WHERE event_id > 2000.0 AND event_id < 7500.0")
+    "WHERE event_id > 2000.0 AND event_id < 7500.0 "
+    "UNION ALL "
+    "SELECT 'quantile' AS which, event_id, value FROM events, "
+    "(SELECT quantile_cont(value, 0.05) AS lo, "
+    "quantile_cont(value, 0.95) AS hi FROM events) q "
+    "WHERE value >= q.lo AND value <= q.hi")
 
 
 # ---------------------------------------------------------------------------
@@ -933,31 +945,167 @@ sql("flagship_momentum", _flagship_sql())
 
 
 # ---------------------------------------------------------------------------
-# as-of interpolation (§2.3) — np.interp parity
+# as-of interpolation join (§2.3) — np.interp parity
 # ---------------------------------------------------------------------------
 
-# add_time_stamped_data: np.interp-parity interpolation of a driver-held
-# series onto every event's timestamp
+# BOTH as-of operators in one oracle row, joined on event_id:
+# add_time_stamped_data (np.interp-parity interpolation against a
+# driver-held series) and the distributed per-key asof_join.
+#: attribution window length for the asof_ops range-join branch (µs)
+_RJ_WIN_US = 3_600_000_000
+
+#: tolerance for the asof_ops merge_asof-tolerance branch (1 day in µs —
+#: wide enough to keep most matches, narrow enough that the null band is
+#: populated, so both sides of the mask are exercised)
+_ASOF_TOL_US = 86_400_000_000
+
+
 @q("asof_ops")
 def asof_ops(spark, sf_dir):
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
     # time domain is MICROSECONDS: duckdb holds these timestamps at µs
     # precision, so the oracle can only see µs
     df = load(spark, sf_dir, "events")
     df = df.withColumn("ts_us", ts_us(df))
-    series = (
-        df.filter(F.col("event_type") == "signup")
-        .groupBy(F.col("ts_us").cast("double").alias("x"))
-        .agg(F.min("value").alias("y"))
-        .orderBy("x")
-        .toPandas()
+
+    def build_interp():
+        series = (
+            df.filter(F.col("event_type") == "signup")
+            .groupBy(F.col("ts_us").cast("double").alias("x"))
+            .agg(F.min("value").alias("y"))
+            .orderBy("x")
+            .toPandas()
+        )
+        return dfops.add_time_stamped_data(
+            df.withColumn("ts_d", F.col("ts_us").cast("double")),
+            series["x"].to_numpy(),
+            series["y"].to_numpy(),
+            dest_column="interp_v",
+            time_stamp_column="ts_d",
+        ).select("event_id", F.round("interp_v", 6).alias("interp_v"))
+
+    withts = df.withColumn("ts_d", F.col("ts_us").cast("double"))
+    left = withts.select("event_id", "user_id", "ts_d")
+    right = (
+        withts.filter(F.col("event_type") == "signup")
+        .groupBy("user_id", "ts_d")
+        .agg(F.min("value").alias("mark"))
     )
-    return dfops.add_time_stamped_data(
-        df.withColumn("ts_d", F.col("ts_us").cast("double")),
-        series["x"].to_numpy(),
-        series["y"].to_numpy(),
-        dest_column="interp_v",
-        time_stamp_column="ts_d",
-    ).select("event_id", F.round("interp_v", 6).alias("interp_v"))
+    # ONE keyed as-of with matched_on serves BOTH the per_user branch
+    # and the tolerance branch (round 11): merge_asof tolerance is by
+    # definition the backward match nulled where the matched distance
+    # exceeds the bound (see _asof_tolerance_mask — the same mask the
+    # tolerance= parameter applies), so the second identical
+    # union-and-fill pass is redundant work, not a different result.
+    pu = dfops.asof_join(
+        left, right, on="ts_d", by="user_id", matched_on="__pu_on",
+    )
+    per_user_tol = pu.select(
+        "event_id", "user_id", "mark",
+        F.when(
+            F.col("__pu_on").isNotNull()
+            & (F.col("ts_d") - F.col("__pu_on")
+               <= F.lit(float(_ASOF_TOL_US))),
+            F.col("mark"),
+        ).alias("tol_mark"),
+    )
+    # keyless global as-of exercises the range-bucket + boundary-carry
+    # path (no partition key; see dfops._asof_fill_keyless)
+    gright = (
+        withts.filter(F.col("event_type") == "signup")
+        .groupBy("ts_d")
+        .agg(F.min("value").alias("gmark"))
+    )
+    # the backward fill serves BOTH glob and the nearest branch's
+    # backward candidate; one extra forward fill completes nearest —
+    # two keyless fills instead of three (direction='nearest' would
+    # internally run backward + forward again). The nearest pick below
+    # is literally the oracle's g_near CASE: backward wins when present
+    # and at least as close (ties to backward, exact hits distance 0).
+    # The three eager-build branches — the interp series collect and each
+    # keyless fill's min/max + boundary-carry jobs — are independent, so
+    # build them concurrently (guide §2.6 overlap independent jobs)
+    # instead of paying ~5 small driver jobs back to back.
+    def build_gb():
+        return dfops.asof_join(
+            left.select("event_id", "ts_d"), gright, on="ts_d",
+            matched_on="__b_on",
+        )
+
+    def build_gf():
+        return dfops.asof_join(
+            left.select("event_id", "ts_d"),
+            gright.withColumnRenamed("gmark", "__f_gmark"),
+            on="ts_d", direction="forward", matched_on="__f_on",
+        )
+
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futs = [
+            pool.submit(inheritable_thread_target(fn))
+            for fn in (build_interp, build_gb, build_gf)
+        ]
+        interp, gb, gf = (f.result() for f in futs)
+    glob_near = gb.join(
+        gf.select("event_id", "__f_gmark", "__f_on"), "event_id",
+    ).select(
+        "event_id",
+        "gmark",
+        F.when(
+            F.col("__b_on").isNotNull()
+            & (
+                F.col("__f_on").isNull()
+                | (F.col("ts_d") - F.col("__b_on")
+                   <= F.col("__f_on") - F.col("ts_d"))
+            ),
+            F.col("gmark"),
+        ).otherwise(F.col("__f_gmark")).alias("near_gmark"),
+    )
+    # bucketed range join (round 5): every event against the per-user
+    # signup attribution windows [signup_ts, signup_ts + _RJ_WIN_US) —
+    # the point-in-interval complement of the as-of join above
+    # (dfops.point_in_interval_join: interval -> covered buckets, point
+    # -> its one bucket, hash equi-join + exact containment filter)
+    iv = (
+        withts.filter(F.col("event_type") == "signup")
+        .select(
+            F.col("event_id").alias("iv_id"),
+            F.col("user_id").alias("iv_user"),
+            F.col("ts_d").alias("iv_lo"),
+            (F.col("ts_d") + F.lit(float(_RJ_WIN_US))).alias("iv_hi"),
+        )
+    )
+    rj = dfops.point_in_interval_join(
+        left.select(
+            "event_id", F.col("user_id").alias("iv_user"), "ts_d",
+        ),
+        iv,
+        on="ts_d",
+        lo_col="iv_lo",
+        hi_col="iv_hi",
+        by="iv_user",
+        bucket_width=float(_RJ_WIN_US),
+    )
+    in_windows = rj.groupBy("event_id").agg(
+        F.count(F.lit(1)).alias("n_windows_hit"),
+        F.min("iv_id").alias("first_window_id"),
+    )
+    return (
+        interp.join(per_user_tol, "event_id")
+        .join(glob_near, "event_id")
+        .join(in_windows, "event_id", "left")
+        .withColumn(
+            "n_windows_hit", F.coalesce("n_windows_hit", F.lit(0)),
+        )
+        # pin the pre-round-11 column order (the branch fusion above
+        # changed join order; the row VALUES are unchanged)
+        .select(
+            "event_id", "interp_v", "user_id", "mark", "gmark",
+            "near_gmark", "tol_mark", "n_windows_hit", "first_window_id",
+        )
+    )
 
 
 sql("asof_ops", """
@@ -982,13 +1130,71 @@ w AS (
     first_value(sy IGNORE NULLS) OVER
       (ORDER BY x, is_ev ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS y1
   FROM u
+),
+interp AS (
+  SELECT event_id, round(CASE
+      WHEN x0 IS NULL THEN (SELECT y FROM series ORDER BY x LIMIT 1)
+      WHEN x1 IS NULL THEN y0
+      ELSE ((y1 - y0) / (x1 - x0)) * (x - x0) + y0
+    END, 6) AS interp_v
+  FROM w WHERE is_ev
+),
+r AS (
+  SELECT user_id, CAST(epoch_us(ts) AS DOUBLE) AS ts_d, min(value) AS mark
+  FROM events WHERE event_type = 'signup' GROUP BY 1, 2
+),
+l AS (SELECT event_id, user_id, CAST(epoch_us(ts) AS DOUBLE) AS ts_d
+      FROM events),
+per_user AS (
+  SELECT l.event_id, l.user_id, r.mark
+  FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts_d >= r.ts_d
+),
+gr AS (
+  SELECT CAST(epoch_us(ts) AS DOUBLE) AS ts_d, min(value) AS gmark
+  FROM events WHERE event_type = 'signup' GROUP BY 1
+),
+g_asof AS (
+  SELECT l.event_id, gr.gmark
+  FROM l ASOF LEFT JOIN gr ON l.ts_d >= gr.ts_d
+),
+iv AS (
+  SELECT event_id AS iv_id, user_id AS iv_user,
+    CAST(epoch_us(ts) AS DOUBLE) AS iv_lo,
+    CAST(epoch_us(ts) AS DOUBLE) + 3600000000.0 AS iv_hi
+  FROM events WHERE event_type = 'signup'
+),
+rj AS (
+  SELECT l.event_id, count(*) AS n_windows_hit, min(iv.iv_id) AS first_window_id
+  FROM l JOIN iv ON iv.iv_user = l.user_id
+    AND l.ts_d >= iv.iv_lo AND l.ts_d < iv.iv_hi
+  GROUP BY l.event_id
+),
+-- merge_asof NEAREST against the global series: the w CTE already
+-- carries the backward (x0,y0) and forward (x1,y1) candidates; at an
+-- exact hit x0 = x (distance 0) wins via the tie-to-backward rule, so
+-- x1's excluded-exact frame is immaterial
+g_near AS (
+  SELECT event_id, CASE
+      WHEN x0 IS NOT NULL AND (x1 IS NULL OR x - x0 <= x1 - x) THEN y0
+      WHEN x1 IS NOT NULL THEN y1 END AS near_gmark
+  FROM w WHERE is_ev
+),
+-- merge_asof TOLERANCE: backward match is unique, so the mask is a
+-- post-filter on the matched distance
+per_user_tol AS (
+  SELECT l.event_id,
+    CASE WHEN r.ts_d IS NOT NULL AND l.ts_d - r.ts_d <= 86400000000.0
+         THEN r.mark END AS tol_mark
+  FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts_d >= r.ts_d
 )
-SELECT event_id, round(CASE
-    WHEN x0 IS NULL THEN (SELECT y FROM series ORDER BY x LIMIT 1)
-    WHEN x1 IS NULL THEN y0
-    ELSE ((y1 - y0) / (x1 - x0)) * (x - x0) + y0
-  END, 6) AS interp_v
-FROM w WHERE is_ev
+SELECT i.event_id, i.interp_v, p.user_id, p.mark, g.gmark,
+  gn.near_gmark, pt.tol_mark,
+  COALESCE(rj.n_windows_hit, 0) AS n_windows_hit, rj.first_window_id
+FROM interp i JOIN per_user p ON i.event_id = p.event_id
+JOIN g_asof g ON i.event_id = g.event_id
+JOIN g_near gn ON i.event_id = gn.event_id
+JOIN per_user_tol pt ON i.event_id = pt.event_id
+LEFT JOIN rj ON rj.event_id = i.event_id
 """)
 
 
@@ -1176,6 +1382,37 @@ def sessionization(spark, sf_dir):
         F.unix_micros(F.col("session_start")).alias("k2"),
         F.col("events").cast("long").alias("v"),
     )
+    # interval-overlap branch (round 5): each session's [first, last+1µs)
+    # span overlap-joined against the user's signup attribution windows
+    # via the bucketed dfops.interval_overlap_join (first-shared-bucket
+    # dedup — no distinct pass), rolled up per session. Single-event
+    # sessions get the 1 µs width so they can still overlap.
+    spans = out.groupBy(
+        F.col("user_id").alias("u"),
+        F.col("session_id").alias("sid"),
+    ).agg(
+        F.min("ts_d").alias("s_lo"),
+        (F.max("ts_d") + F.lit(1.0)).alias("s_hi"),
+    )
+    wins = df.filter(F.col("event_type") == "signup").select(
+        F.col("user_id").alias("u"),
+        F.col("ts_d").alias("w_lo"),
+        (F.col("ts_d") + F.lit(float(_RJ_WIN_US))).alias("w_hi"),
+    )
+    hits = dfops.interval_overlap_join(
+        spans, wins, "s_lo", "s_hi", "w_lo", "w_hi", by="u",
+        bucket_width=float(_RJ_WIN_US),
+    )
+    overlap = (
+        hits.groupBy("u", "s_lo")
+        .agg(F.count(F.lit(1)).alias("n_overlaps"))
+        .select(
+            F.lit("overlap").alias("part"),
+            F.col("u").alias("k1"),
+            F.col("s_lo").cast("long").alias("k2"),
+            F.col("n_overlaps").cast("long").alias("v"),
+        )
+    )
     # stream-static enrichment branch rollup (drained above). k1 =
     # first letter of the segment (A/B/F/H/M are distinct; 0 = stream
     # rows with no dimension match), so the branch pins the JOIN result,
@@ -1188,7 +1425,31 @@ def sessionization(spark, sf_dir):
         F.lit(0).cast("long").alias("k2"),
         F.col("n").cast("long").alias("v"),
     )
-    return batch.unionAll(live).unionAll(enrich)
+    # funnel branch (round 7): the ORDERED signup -> view -> purchase
+    # conversion (dfops.funnel_steps — per-user earliest step-i event
+    # strictly after the earliest qualifying step i-1; a purchase before
+    # signup must NOT convert). Long form: one row per user per REACHED
+    # step, k2 = step index, v = that step's integer-µs timestamp.
+    evf = df.withColumn("ts_us", ts_us(df))
+    fun = dfops.funnel_steps(
+        evf, ["signup", "view", "purchase"],
+        group_col="user_id", time_col="ts_us", step_col="event_type",
+    )
+    fun_rows = fun.select(
+        "user_id",
+        F.posexplode(
+            F.array("step_ts_0", "step_ts_1", "step_ts_2"),
+        ).alias("step", "step_ts"),
+    ).filter(F.col("step_ts").isNotNull()).select(
+        F.lit("funnel").alias("part"),
+        F.col("user_id").alias("k1"),
+        F.col("step").cast("long").alias("k2"),
+        F.col("step_ts").cast("long").alias("v"),
+    )
+    return (
+        batch.unionAll(live).unionAll(overlap).unionAll(enrich)
+        .unionAll(fun_rows)
+    )
 
 
 sql("sessionization", f"""
@@ -1212,11 +1473,48 @@ SELECT 'stream' AS part, user_id AS k1,
   CAST(min(ts_d) AS BIGINT) AS k2, count(*) AS v
 FROM sess GROUP BY user_id, session_id
 UNION ALL
+SELECT 'overlap' AS part, s.u AS k1, CAST(s.s_lo AS BIGINT) AS k2,
+  count(*) AS v
+FROM (
+  SELECT user_id AS u, min(ts_d) AS s_lo, max(ts_d) + 1.0 AS s_hi
+  FROM sess GROUP BY user_id, session_id
+) s
+JOIN (
+  SELECT user_id AS u, CAST(epoch_us(ts) AS DOUBLE) AS w_lo,
+    CAST(epoch_us(ts) AS DOUBLE) + {fl(float(_RJ_WIN_US))} AS w_hi
+  FROM events WHERE event_type = 'signup'
+) w ON w.u = s.u AND s.s_lo < w.w_hi AND w.w_lo < s.s_hi
+GROUP BY s.u, s.s_lo
+UNION ALL
 SELECT 'enrich' AS part,
   CAST(COALESCE(ord(substr(c.c_mktsegment, 1, 1)), 0) AS BIGINT) AS k1,
   CAST(0 AS BIGINT) AS k2, count(*) AS v
 FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
 GROUP BY c.c_mktsegment
+UNION ALL
+SELECT 'funnel' AS part, k1, k2, v FROM (
+  WITH f0 AS (
+    SELECT user_id, min(epoch_us(ts)) AS t0 FROM events
+    WHERE event_type = 'signup' GROUP BY user_id
+  ),
+  f1 AS (
+    SELECT e.user_id, min(epoch_us(e.ts)) AS t1
+    FROM events e JOIN f0 ON f0.user_id = e.user_id
+    WHERE e.event_type = 'view' AND epoch_us(e.ts) > f0.t0
+    GROUP BY e.user_id
+  ),
+  f2 AS (
+    SELECT e.user_id, min(epoch_us(e.ts)) AS t2
+    FROM events e JOIN f1 ON f1.user_id = e.user_id
+    WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > f1.t1
+    GROUP BY e.user_id
+  )
+  SELECT user_id AS k1, CAST(0 AS BIGINT) AS k2, t0 AS v FROM f0
+  UNION ALL
+  SELECT user_id, CAST(1 AS BIGINT), t1 FROM f1
+  UNION ALL
+  SELECT user_id, CAST(2 AS BIGINT), t2 FROM f2
+)
 """)
 
 
@@ -1227,29 +1525,119 @@ GROUP BY c.c_mktsegment
 @q("run_stats")
 def run_stats(spark, sf_dir):
     """Per-user elapsed/count/rate (reference get_elapsed_time /
-    get_count_rate)."""
+    get_count_rate), widened round 7 with GROUPED PERCENTILES
+    (``corpus.quantile_by`` audit mode): per-user p50/p90 of the event
+    value — one extra hash aggregate on the same key, joined back; the
+    oracle recomputes via quantile_cont (the proven cross-engine
+    linear-interpolation parity)."""
+    from sed_spark.ext.corpus import quantile_by
+
     df = load(spark, sf_dir, "events")
     df = df.withColumn("ts_us", ts_us(df))
     agg = df.groupBy("user_id").agg(
         (F.max("ts_us") - F.min("ts_us")).alias("elapsed_us"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    return agg.select(
+    base = agg.select(
         "user_id", "elapsed_us", "n_events",
         (
             F.col("n_events").cast("double")
             / (F.col("elapsed_us").cast("double") / F.lit(1e6))
         ).alias("rate_hz"),
     )
+    qs = quantile_by(df, "value", "user_id", [0.5, 0.9], exact=True)
+    wide = (
+        qs.groupBy("user_id")
+        .pivot("prob", [0.5, 0.9])
+        .agg(F.first("q"))
+        .select(
+            "user_id",
+            F.col("`0.5`").alias("v_p50"),
+            F.col("`0.9`").alias("v_p90"),
+        )
+    )
+    # freshness branch (round 7): per-user time-decayed activity
+    # (corpus.decayed_stats_by, 1 h half-life on the µs clock) in the
+    # order-independent quantized audit mode — exact decimal sums of
+    # per-row-rounded weights, so the oracle's arbitrary-order sum
+    # agrees bit-for-bit
+    from sed_spark.ext.corpus import decayed_stats_by
+
+    dec = decayed_stats_by(
+        df, "user_id", "ts_us", "value",
+        half_life=3.6e9, quantize_decimals=9,
+    ).select("user_id", "decayed_n", "decayed_sum")
+    # robust branch (round 7): per-user median/MAD + |x-med| > 3*MAD
+    # outlier counts (corpus.robust_stats_by, exact audit mode) — the
+    # corrupt-shard gate; the oracle recomputes the same three
+    # quantile_cont/count passes arithmetically
+    from sed_spark.ext.corpus import robust_stats_by
+
+    rob = robust_stats_by(df, "value", "user_id", k=3.0, exact=True).select(
+        "user_id",
+        F.col("mad").alias("v_mad"),
+        F.col("n_outliers").alias("v_n_out"),
+    )
+    # heavy-hitters branch (round 9): per-user top-2 event types
+    # (corpus.top_items_by — hash aggregate + row_number over the
+    # AGGREGATED table, ties by type ASC), pivoted to columns; a user
+    # with one distinct type keeps NULLs in the rank-2 pair
+    from sed_spark.ext.corpus import top_items_by
+
+    ti = top_items_by(df, "user_id", "event_type", k=2)
+    t1 = ti.filter(F.col("rank") == 1).select(
+        "user_id",
+        F.col("event_type").alias("top_type"),
+        F.col("n").alias("top_type_n"),
+    )
+    t2 = ti.filter(F.col("rank") == 2).select(
+        "user_id",
+        F.col("event_type").alias("top2_type"),
+        F.col("n").alias("top2_type_n"),
+    )
+    return (
+        base.join(wide, "user_id").join(dec, "user_id").join(rob, "user_id")
+        .join(t1, "user_id").join(t2, "user_id", "left")
+    )
 
 
 sql("run_stats",
+    "WITH tmax AS (SELECT CAST(max(epoch_us(ts)) AS DOUBLE) AS T FROM events), "
+    "med AS (SELECT user_id, quantile_cont(value, 0.5) AS med "
+    "FROM events GROUP BY user_id), "
+    "madt AS (SELECT e.user_id, "
+    "quantile_cont(abs(e.value - m.med), 0.5) AS mad "
+    "FROM events e JOIN med m USING (user_id) GROUP BY e.user_id), "
+    "rob AS (SELECT e.user_id, round(t.mad, 6) AS v_mad, "
+    "CAST(SUM(CASE WHEN abs(e.value - m.med) > 3.0 * t.mad "
+    "THEN 1 ELSE 0 END) AS BIGINT) AS v_n_out "
+    "FROM events e JOIN med m USING (user_id) JOIN madt t USING (user_id) "
+    "GROUP BY e.user_id, t.mad), "
+    "tc AS (SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n "
+    "FROM events GROUP BY user_id, event_type), "
+    "tr AS (SELECT user_id, event_type, n, row_number() OVER "
+    "(PARTITION BY user_id ORDER BY n DESC, event_type ASC) AS rn FROM tc) "
     "SELECT user_id, elapsed_us, n_events, "
     "CAST(n_events AS DOUBLE) / (CAST(elapsed_us AS DOUBLE) / "
-    f"{fl(1e6)}) AS rate_hz "
+    f"{fl(1e6)}) AS rate_hz, v_p50, v_p90, decayed_n, decayed_sum, "
+    "v_mad, v_n_out, "
+    "t1.event_type AS top_type, t1.n AS top_type_n, "
+    "t2.event_type AS top2_type, t2.n AS top2_type_n "
     "FROM (SELECT user_id, CAST(max(epoch_us(ts)) - "
-    "min(epoch_us(ts)) AS BIGINT) AS elapsed_us, COUNT(*) AS n_events "
-    "FROM events GROUP BY user_id)")
+    "min(epoch_us(ts)) AS BIGINT) AS elapsed_us, COUNT(*) AS n_events, "
+    "round(quantile_cont(value, 0.5), 6) AS v_p50, "
+    "round(quantile_cont(value, 0.9), 6) AS v_p90, "
+    "round(CAST(CAST(SUM(CAST(round(pow(2.0, -(T - "
+    "CAST(epoch_us(ts) AS DOUBLE)) / 3600000000.0), 9) "
+    "AS DECIMAL(38,9))) AS VARCHAR) AS DOUBLE), 6) AS decayed_n, "
+    "round(CAST(CAST(SUM(CAST(round(pow(2.0, -(T - "
+    "CAST(epoch_us(ts) AS DOUBLE)) / 3600000000.0) "
+    "* value, 9) AS DECIMAL(38,9))) AS VARCHAR) AS DOUBLE), 6) "
+    "AS decayed_sum "
+    "FROM events, tmax GROUP BY user_id) "
+    "JOIN rob USING (user_id) "
+    "JOIN (SELECT * FROM tr WHERE rn = 1) t1 USING (user_id) "
+    "LEFT JOIN (SELECT * FROM tr WHERE rn = 2) t2 USING (user_id)")
 
 
 @q("file_stats")

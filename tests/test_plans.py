@@ -1,6 +1,6 @@
 """Physical-plan assertions: the declarative queries must actually reach
-the scan with their filters/projections and aggregate inside whole-stage
-codegen with the intended exchanges — checked at unit scale."""
+the scan with their filters/projections and pick the intended join
+strategies — this is the 100 TB contract, checked at unit scale."""
 
 from __future__ import annotations
 
@@ -44,6 +44,57 @@ def test_range_filter_pushes_value_predicate(spark):
     assert "PushedFilters: [IsNotNull(value), GreaterThan(value,100.0)" in plan
 
 
+def test_pii_redact_is_single_stage_no_shuffle(spark):
+    # PII scan is one projection over the corpus: no Exchange anywhere,
+    # and the scan reads only (doc_id, text) of the documents schema
+    from sed_spark.ext.pii import pii_redact
+    from sed_spark.suite.common import load
+
+    plan = _plan(pii_redact(load(spark, SF_DIR, "documents")))
+    assert "Exchange" not in plan
+    for line in plan.splitlines():
+        if "ReadSchema" in line:
+            schema = line.split("ReadSchema:")[1]
+            assert "text" in schema and "lang" not in schema
+            break
+    else:
+        pytest.fail("no scan with ReadSchema in plan")
+
+
+def test_repetition_stats_shuffles_only_on_doc_keys(spark):
+    # every Exchange must hash-partition on a key set containing doc_id
+    # (or be the tiny scale_out round-robin) — never a cross-document key
+    from sed_spark.ext.text import repetition_stats
+    from sed_spark.suite.common import load
+
+    df = repetition_stats(load(spark, SF_DIR, "documents"))
+    df.collect()  # let AQE finalize
+    plan = _plan(df)
+    for line in plan.splitlines():
+        if "Exchange hashpartitioning" in line:
+            assert "doc_id" in line, line
+    assert "SortMergeJoin" not in plan or "doc_id" in plan
+
+
+def test_batch_ann_has_no_corpus_shuffle_before_prune(spark):
+    # the arrow scorer runs directly over the scan: the only Exchange in
+    # the plan is the k*M-row window shuffle AFTER the map-side top-k
+    from pyspark.sql import functions as F  # noqa: F811
+
+    from sed_spark.ext.similarity import batch_cosine_topk
+    from sed_spark.suite.common import load
+
+    emb = load(spark, SF_DIR, "embeddings")
+    q = emb.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"),
+    )
+    plan = _plan(batch_cosine_topk(emb, q, k=5))
+    lines = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+    assert len(lines) == 1 and "query_id" in lines[0]
+    # the python scorer sits below that exchange, above the scan
+    assert plan.index("MapInPandas") > plan.index("Exchange hashpartitioning")
+
+
 def test_binning_aggregate_is_whole_stage_codegen(spark):
     from sed_spark.binning import sparse_histogram
     from sed_spark.suite.common import load
@@ -63,6 +114,258 @@ def test_binning_aggregate_is_whole_stage_codegen(spark):
     )
 
 
+def test_dsir_score_is_single_projection_no_shuffle(spark):
+    # the literal-array fold must stay a pure projection: no Exchange
+    # beyond the tiny scale_out round-robin, no join, no aggregate
+    from sed_spark.ext.text import dsir_score
+    from sed_spark.suite.common import load
+
+    ratios = [float(i % 7) - 3.0 for i in range(128)]
+    plan = _plan(dsir_score(load(spark, SF_DIR, "documents"), ratios))
+    assert "Exchange hashpartitioning" not in plan
+    assert "Join" not in plan and "HashAggregate" not in plan
+
+
+def test_duplicate_spans_no_window_no_cartesian(spark):
+    # round-6 form: the interval union is an ordered array fold per
+    # document (no window-function stage, hence no sort-based exchange
+    # over the duplicated-window rows), and no join in the plan may be a
+    # cartesian product
+    from sed_spark.ext.dedup import duplicate_spans
+    from sed_spark.suite.common import load
+
+    df = duplicate_spans(load(spark, SF_DIR, "documents"), window=5)
+    df.collect()  # let AQE finalize
+    plan = _plan(df)
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
+    assert "Window" not in plan
+    # the only sort left is inside sort_array (an expression, not a
+    # physical Sort over the exploded rows)
+    for line in plan.splitlines():
+        if line.strip().startswith(("Sort ", "+- Sort ", ":- Sort ")):
+            raise AssertionError(f"unexpected physical Sort: {line}")
+
+
+def test_gumbel_topk_uses_take_ordered_not_global_window(spark):
+    # the threshold pass must be a TakeOrderedAndProject (per-partition
+    # top-k), and the flag pass must not contain a global (empty-key)
+    # window or a single-partition Exchange
+    from sed_spark.ext.corpus import gumbel_topk
+    from sed_spark.suite.common import load
+
+    docs = load(spark, SF_DIR, "documents").withColumn("w", F.rand(3))
+    keyed = docs.withColumn(
+        "gumbel_key", F.round(F.col("w"), 6),
+    )
+    thresh_plan = _plan(
+        keyed.select("gumbel_key").orderBy(F.col("gumbel_key").desc()).limit(5),
+    )
+    assert "TakeOrderedAndProject" in thresh_plan
+    out = gumbel_topk(docs, "w", k=5)
+    plan = _plan(out)
+    assert "Window" not in plan
+    assert "Exchange SinglePartition" not in plan
+
+
+def test_gumbel_topk_threshold_frame_is_row_identical(spark):
+    # a slim threshold_frame carrying the same (id, weight) multiset must
+    # yield exactly the flags of the default full-frame threshold pass
+    from sed_spark.ext.corpus import gumbel_topk
+    from sed_spark.suite.common import load
+
+    docs = load(spark, SF_DIR, "documents")
+    slim = docs.select("doc_id", F.length("text").alias("w"))
+    # an expensive-looking 1:1 enrichment joined on top of the scoring frame
+    wide = slim.join(
+        docs.select("doc_id", F.md5("text").alias("extra")), "doc_id",
+    )
+    base = gumbel_topk(wide, "w", k=7).select(
+        "doc_id", "gumbel_key", "is_sampled",
+    )
+    slimmed = gumbel_topk(wide, "w", k=7, threshold_frame=slim).select(
+        "doc_id", "gumbel_key", "is_sampled",
+    )
+    assert sorted(map(tuple, base.collect())) == sorted(
+        map(tuple, slimmed.collect()),
+    )
+
+
+def test_bpe_token_counts_joins_on_word_key(spark):
+    # the corpus is tokenized through the vocabulary join: every hash
+    # Exchange partitions on word or doc_id, never an unkeyed shuffle
+    from sed_spark.ext.vocab import bpe_token_counts
+    from sed_spark.suite.common import load
+
+    df = bpe_token_counts(
+        load(spark, SF_DIR, "documents"), [("a", "b"), ("c", "d")],
+    )
+    df.collect()
+    plan = _plan(df)
+    assert "CartesianProduct" not in plan
+    for line in plan.splitlines():
+        if "Exchange hashpartitioning" in line:
+            assert ("word" in line) or ("doc_id" in line), line
+
+
+def test_semantic_contamination_broadcasts_benchmark(spark):
+    # the benchmark side must ride a broadcast nested-loop join and the
+    # per-row max must collapse map-side: exactly ONE exchange (the
+    # corpus-id-sized partial table), never a corpus x bench shuffle
+    from sed_spark.ext import similarity
+    from sed_spark.suite.common import load
+
+    df = load(spark, SF_DIR, "embeddings")
+    out = similarity.semantic_contamination(
+        df, df.filter(F.col("vec_id") % 50 == 0), threshold=0.5,
+    )
+    plan = _plan(out)
+    assert "BroadcastNestedLoopJoin" in plan
+    assert "partial_max" in plan  # map-side combine before the exchange
+
+
+def test_training_order_shuffles_once_no_global_sort(spark):
+    # one hash exchange on the shard key feeds the per-shard window;
+    # a rangepartitioning exchange would mean a global sort snuck in
+    from sed_spark.ext import corpus
+    from sed_spark.suite.common import load
+
+    df = load(spark, SF_DIR, "documents")
+    plan = _plan(corpus.training_order(df, n_shards=8))
+    assert plan.count("Exchange") == 1
+    assert "rangepartitioning" not in plan
+    assert "hashpartitioning(shard" in plan
+    assert "Window" in plan
+
+
+def test_bm25_broadcasts_dims_and_avoids_doc_level_join(spark):
+    # both dimension sides (per-term df, corpus constants) must ride
+    # broadcasts, and the doc length must travel WITH the postings —
+    # a SortMergeJoin would mean a corpus-sized doc-level join snuck
+    # back in to fetch dl
+    from sed_spark.ext import retrieval
+    from sed_spark.suite.common import load
+
+    df = load(spark, SF_DIR, "documents")
+    plan = _plan(retrieval.bm25_score(df, ["customer", "spark"]))
+    assert plan.count("BroadcastExchange") == 2
+    assert "SortMergeJoin" not in plan
+
+
+def test_pagerank_iteration_starts_from_checkpointed_tables(spark):
+    # the per-iteration plan must hang off the checkpointed edge/rank
+    # RDDs (Scan ExistingRDD), not re-derive the graph from source: the
+    # lineage cut is what keeps round N's plan O(1) instead of O(N)
+    from sed_spark.ext import graph
+
+    edges = spark.createDataFrame(
+        [(1, 2, 1), (2, 1, 1), (1, 3, 1)], ["a_id", "b_id", "w"],
+    )
+    out = graph.pagerank(edges, weight="w", n_iter=2)
+    plan = _plan(out)
+    assert "Scan ExistingRDD" in plan
+    assert "FileScan" not in plan
+
+
+def test_range_join_is_bucketed_hash_join_not_cartesian(spark):
+    # the whole point of the bucketed formulation: the planner must see a
+    # plain equi-join on (key, bucket), never a cartesian/nested-loop
+    # product with an inequality filter
+    from sed_spark.dfops import point_in_interval_join
+    from sed_spark.suite.common import load
+
+    ev = load(spark, SF_DIR, "events").limit(1000)
+    pts = ev.selectExpr("event_id AS pid", "value AS x")
+    ivs = ev.selectExpr(
+        "event_id AS iid", "value AS lo", "value + 25.0 AS hi",
+    )
+    plan = _plan(point_in_interval_join(
+        pts, ivs, on="x", lo_col="lo", hi_col="hi", bucket_width=25.0,
+    ))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "__bucket" in plan
+
+
+def test_bpe_encode_is_vocab_join_no_cartesian(spark):
+    # the corpus is never re-tokenized row by row: encode = one
+    # vocabulary-keyed equi-join plus one per-document aggregate, with
+    # no cartesian/nested-loop join anywhere
+    from sed_spark.ext import vocab
+
+    docs = spark.createDataFrame(
+        [(i, "low lower low newer") for i in range(50)], ["doc_id", "text"],
+    )
+    plan = _plan(vocab.bpe_encode(docs, [("l", "o"), ("lo", "w")]))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert plan.count("HashAggregate") >= 2  # vocab agg + doc reassembly
+
+
+def test_grouped_hll_is_two_hash_aggregates(spark):
+    # registers_by + estimate_by must plan as hash aggregates (map-side
+    # partials collapse duplicate (group, register) rows before the
+    # shuffle) — no window, no sort, no count-distinct Expand
+    from sed_spark.ext import sketch
+
+    df = spark.createDataFrame(
+        [(f"t{i % 3}", f"u{i % 17}") for i in range(100)], ["g", "k"],
+    )
+    out = sketch.hll_estimate_by(
+        sketch.hll_registers_by(df, ["g"], "k", p=6), ["g"], p=6,
+    )
+    plan = _plan(out)
+    assert "HashAggregate" in plan
+    assert "Expand" not in plan and "Window" not in plan
+
+
+def test_skew_join_hot_branch_is_broadcast(spark):
+    from sed_spark.dfops import skew_join
+    from sed_spark.suite.common import load
+
+    cust = load(spark, SF_DIR, "customer").select("c_custkey", "c_name")
+    orders = load(spark, SF_DIR, "orders").select(
+        F.col("o_custkey").alias("c_custkey"), "o_orderkey",
+    )
+    plan = _plan(skew_join(orders, cust, "c_custkey", hot_keys=[1, 2, 3]))
+    # hot branch: broadcast hash join (no shuffle for the hot keys);
+    # cold branch still a shuffle join; two branches unioned
+    assert "BroadcastHashJoin" in plan
+    assert "Union" in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_salted_join_is_hash_join_no_cartesian(spark):
+    from sed_spark.dfops import salted_join
+    from sed_spark.suite.common import load
+
+    cust = load(spark, SF_DIR, "customer").select("c_custkey", "c_name")
+    orders = load(spark, SF_DIR, "orders").select(
+        F.col("o_custkey").alias("c_custkey"), "o_orderkey",
+    )
+    plan = _plan(salted_join(orders, cust, "c_custkey", salt=8))
+    # the salted key participates in the join: an equi-join (hash-based),
+    # never a cartesian with post-filter
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) \
+        or ("BroadcastHashJoin" in plan)
+    assert "__salt" in plan
+
+
+def test_triangle_count_no_cartesian_two_joins(spark):
+    from sed_spark.ext.graph import triangle_count
+
+    edges = spark.range(0, 1000).select(
+        (F.col("id") % 97).alias("a_id"), ((F.col("id") * 7) % 89).alias("b_id"),
+    )
+    plan = _plan(triangle_count(edges))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    # the closing step is a semi join on the (u,w) pair
+    assert "LeftSemi" in plan
+
+
 def test_dense_groupby_block_partition_single_exchange(spark):
     from sed_spark.binning.core import _groupby_sparse_agg
 
@@ -75,3 +378,82 @@ def test_dense_groupby_block_partition_single_exchange(spark):
     # shuffle inserted by EnsureRequirements
     assert plan.count("Exchange hashpartitioning") == 1
     assert "__blk" in plan
+
+
+def test_kmv_sketch_uses_take_ordered_not_global_sort(spark):
+    # the bottom-k pass must be TakeOrderedAndProject (map-side k +
+    # driver k-way merge), never a global rangepartitioning sort; the
+    # only exchange is the distinct's hash shuffle
+    from sed_spark.ext import sketch
+    from sed_spark.suite.common import load
+
+    docs = load(spark, SF_DIR, "documents")
+    toks = docs.select(
+        F.explode(F.split(F.col("text"), " ")).alias("term"),
+    )
+    plan = _plan(sketch.kmv_sketch(toks, "term", k=64))
+    assert "TakeOrderedAndProject" in plan
+    assert "rangepartitioning" not in plan
+
+
+def test_prefix_similarity_join_is_equi_join_no_cartesian(spark):
+    # the prefix self-join must plan as a hash/sort-merge equi-join on the
+    # shingle with the id inequality as a post-join condition — never a
+    # cartesian/nested-loop — and verification joins stay id-keyed
+    from sed_spark.ext.dedup import prefix_similarity_join
+    from sed_spark.suite.common import load
+
+    docs = load(spark, SF_DIR, "documents")
+    plan = _plan(prefix_similarity_join(docs, threshold=0.5))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoop" not in plan
+
+
+def test_bloom_reduced_join_pass_through_branch_has_single_join(spark):
+    # the left_anti form unions the exact anti-join of the maybe-present
+    # slice with a pass-through filter of the definitely-absent slice —
+    # exactly ONE join operator in the whole plan (the pass-through
+    # branch must not join), and the probe is a literal-array expression,
+    # never a cartesian/nested-loop
+    import re
+
+    from sed_spark.ext.sketch import bloom_reduced_join
+    from sed_spark.suite.common import load
+
+    cust = load(spark, SF_DIR, "customer")
+    orders = load(spark, SF_DIR, "orders").select(
+        F.col("o_custkey").alias("c_custkey"),
+    )
+    plan = _plan(
+        bloom_reduced_join(orders, cust.select("c_custkey"),
+                           "c_custkey", how="left_anti", m_bits=1 << 12),
+    )
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoop" not in plan
+    n_joins = len(re.findall(r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)", plan))
+    assert n_joins == 1, f"expected exactly one join, saw {n_joins}"
+
+
+def test_asof_nearest_keyed_single_exchange_two_sorts(spark):
+    # keyed nearest computes BOTH directional carries as window functions
+    # over the same user_id hash partitioning: exactly one Exchange for
+    # the window stage (plus the two input scans' none), never a second
+    # shuffle for the reverse-order carry, and no cartesian anywhere
+    from sed_spark.dfops import asof_join
+    from sed_spark.suite.common import load
+
+    ev = load(spark, SF_DIR, "events").select(
+        "event_id", "user_id", F.col("value").alias("ts"),
+    )
+    right = ev.groupBy("user_id", "ts").agg(F.min("event_id").alias("m"))
+    plan = _plan(
+        asof_join(ev, right, on="ts", by="user_id", direction="nearest",
+                  suffix="_r"),
+    )
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoop" not in plan
+    # windows over the union: every hash Exchange partitions on user_id
+    # (the aggregate pre-shuffle shares the same key set)
+    for line in plan.splitlines():
+        if "Exchange hashpartitioning" in line:
+            assert "user_id" in line, line

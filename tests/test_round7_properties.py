@@ -2,9 +2,8 @@
 
 The bug surfaces: KMV's bottom-k/merge algebra under duplicate keys and
 saturated/unsaturated sketches, weighted_cap_sample's exact-cap +
-determinism-under-repartition contract, compaction_plan's conservation
-and bound invariants, and label propagation against an independent
-Python reference on random graphs.
+determinism-under-repartition contract, and label propagation against an
+independent Python reference on random graphs.
 """
 
 from __future__ import annotations
@@ -113,34 +112,6 @@ def test_weighted_cap_sample_exact_and_partition_invariant(
         per_group[r["domain"]] = per_group.get(r["domain"], 0) + 1
     for g, n_el in eligible.items():
         assert per_group.get(g, 0) == min(cap, n_el)
-
-
-@given(
-    sizes=st.lists(st.integers(1, 10_000), min_size=1, max_size=60),
-    target=st.integers(1, 20_000),
-)
-@settings(**_SETTINGS)
-def test_compaction_plan_invariants(spark, sizes, target):
-    from sed_spark import layout
-
-    files = spark.createDataFrame(
-        [(f"f{i:03d}", s) for i, s in enumerate(sizes)],
-        "path string, size_bytes long",
-    )
-    got = layout.compaction_plan(files, target=target).collect()
-    assert len(got) == len(sizes)  # every file assigned exactly once
-    groups: dict = {}
-    for r in got:
-        groups.setdefault(r["compaction_group"], []).append(r["size_bytes"])
-    # conservation + the documented bound: total <= target + largest member
-    assert sum(sum(v) for v in groups.values()) == sum(sizes)
-    for v in groups.values():
-        assert sum(v) <= target + max(v)
-    # ordering is contiguous over (size desc, path): group ids are the
-    # cumsum intervals, so they are non-decreasing along that order
-    order = sorted(got, key=lambda r: (-r["size_bytes"], r["path"]))
-    gids = [r["compaction_group"] for r in order]
-    assert gids == sorted(gids)
 
 
 @given(
