@@ -1,7 +1,6 @@
 from sed_spark.binning.core import (
     BinnedData,
     bin_dataframe,
-    bin_index_expr,
     equidepth_edges,
     normalization_histogram_from_timed_dataframe,
     normalization_histogram_from_timestamps,
@@ -21,7 +20,6 @@ __all__ = [
     "axis_from_edges",
     "equidepth_edges",
     "bin_dataframe",
-    "bin_index_expr",
     "bin_centers_to_bin_edges",
     "bin_edges_to_bin_centers",
     "normalize_bins",

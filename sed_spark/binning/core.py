@@ -61,7 +61,6 @@ __all__ = [
     "BinnedData",
     "bin_dataframe",
     "sparse_histogram",
-    "bin_index_expr",
     "normalization_histogram_from_timestamps",
     "normalization_histogram_from_timed_dataframe",
 ]
@@ -104,38 +103,6 @@ class BinnedData:
 # ---------------------------------------------------------------------------
 # bin-index expressions
 # ---------------------------------------------------------------------------
-
-def bin_index_expr(axis: BinAxis, col: Column | None = None) -> tuple[Column, Column]:
-    """Return ``(bin_index, is_valid)`` Columns for one axis.
-
-    Uniform path is a pure JVM expression replicating the reference kernel's
-    rounding (numba_bin.py:53-61). Non-uniform explicit edges use a
-    left-closed binary-search equivalent built from ``width_bucket`` over the
-    edge array via an aggregate expression (still JVM-side).
-    """
-    c = (col if col is not None else F.col(axis.name)).cast("double")
-    if axis.uniform:
-        delta = 1.0 / ((axis.hi - axis.lo) / axis.nbins)
-        j = (c - F.lit(axis.lo)) * F.lit(delta) + F.lit(5e-12)
-        # reference validity is round(j,11) in [0, nbins]; with j already
-        # shifted by +5e-12 that is j in [0, nbins + 1e-11]
-        valid = c.isNotNull() & (j >= 0) & (j <= axis.nbins + 1e-11)
-        idx = F.least(F.floor(j), F.lit(axis.nbins - 1)).cast(IntegerType())
-        return idx, valid
-    # explicit edges: j such that edges[j] <= x < edges[j+1]; x == last edge
-    # maps to the last bin. aggregate(edges, 0, acc + (x >= e)) counts edges
-    # <= x — JVM-side, O(n_edges) but n_edges is small for explicit-edge use.
-    edges = axis.edges
-    arr = F.array(*[F.lit(float(e)) for e in edges[1:-1]])
-    # count of interior edges <= x gives the left-closed bin index
-    idx = F.aggregate(
-        arr,
-        F.lit(0),
-        lambda acc, e: acc + F.when(c >= e, 1).otherwise(0),
-    ).cast(IntegerType())
-    valid = c.isNotNull() & (c >= float(edges[0])) & (c <= float(edges[-1]))
-    return idx, valid
-
 
 def bin_index_nullable(axis: BinAxis, col: Column | None = None) -> Column:
     """Nullable bin index: null where the value is NaN/null/out-of-range.
@@ -293,8 +260,7 @@ CHUNKED_MIN_CUBE = 512_000_000
 
 # target hash-agg entries per reducer in _dense_via_groupby; a table much
 # beyond ~2e5 entries lives long enough to hit old-gen GC (sweep numbers
-# in the _dense_via_groupby docstring). Module constant so bench tooling
-# can sweep it.
+# in the _dense_via_groupby docstring)
 GROUPBY_CELLS_PER_REDUCER = 195_000
 
 
@@ -314,9 +280,7 @@ def _flat_idx_expr(
     return flat
 
 
-def _groupby_sparse_agg(
-    proj: DataFrame, cube: int, occupancy_hint: int | None = None,
-) -> DataFrame:
+def _groupby_sparse_agg(proj: DataFrame, cube: int) -> DataFrame:
     """The groupby path's sparse-aggregate plan: ``(__idx, __cnt)``.
 
     Split out of :func:`_dense_via_groupby` so the physical plan is
@@ -331,53 +295,49 @@ def _groupby_sparse_agg(
         default = spark.sparkContext.defaultParallelism
     keyed = proj.select(F.col("__idx").cast(idx_t).alias("__idx"))
     group_cols = ["__idx"]
-    if GROUPBY_CELLS_PER_REDUCER is not None:
-        groups = cube if occupancy_hint is None else min(cube, int(occupancy_hint))
-        want = min(1024, groups // GROUPBY_CELLS_PER_REDUCER)
-        if want > default:
-            # partition by CONTIGUOUS index blocks rather than raw idx
-            # hash: each reducer's output then covers a few contiguous
-            # cube regions, so the driver's scatter below streams through
-            # small windows of the dense array instead of random-storing
-            # across all 400 MB (measured 2.3 s -> 0.85 s on the 1e8-row
-            # 100^4 bench; collect time unchanged). 32 blocks per reducer
-            # keeps the block->reducer hash assignment balanced. The
-            # block id joins the grouping keys, so HashPartitioning on it
-            # still satisfies the aggregate's clustering requirement —
-            # no second exchange (plan-asserted). Peaked data routes away
-            # from this branch via occupancy_hint exactly as before.
-            #
-            # Out-of-range rows (the -1 sentinel) get a SPREAD block id
-            # (round 12, guide §2.5 single-giant-key skew): the bare
-            # repartition has no map-side partial aggregation, so every
-            # sentinel row shuffles, and with blk = idx/span they ALL
-            # hashed to one reducer — on the 1e8-row 4-D momentum
-            # workflow (26.5% out-of-range after the kx/ky/energy/delay
-            # range cuts) that one task fetched 26.5M extra rows while
-            # 511 idled, and the full path measured 11.9 s vs 6.0 s with
-            # the sentinel group spread by map-partition id (driver
-            # scatter drops idx < 0 regardless, so the result is
-            # bit-identical — verified). A pre-shuffle filter instead is
-            # NOT safe: predicate pushdown inlines the whole flat-index
-            # tree below the axis staging and the 4-D workflow measured
-            # 88 s interpreted (see plans/r12/).
-            span = max(1, cube // (32 * want))
-            blk = F.when(
-                F.col("__idx") >= 0,
-                (F.col("__idx") / F.lit(span)).cast("int"),
-            ).otherwise(-(F.spark_partition_id() + 1))
-            keyed = keyed.select(
-                "__idx", blk.alias("__blk"),
-            ).repartition(want, "__blk")
-            group_cols = ["__blk", "__idx"]
+    want = min(1024, cube // GROUPBY_CELLS_PER_REDUCER)
+    if want > default:
+        # partition by CONTIGUOUS index blocks rather than raw idx
+        # hash: each reducer's output then covers a few contiguous
+        # cube regions, so the driver's scatter below streams through
+        # small windows of the dense array instead of random-storing
+        # across all 400 MB (measured 2.3 s -> 0.85 s on the 1e8-row
+        # 100^4 bench; collect time unchanged). 32 blocks per reducer
+        # keeps the block->reducer hash assignment balanced. The
+        # block id joins the grouping keys, so HashPartitioning on it
+        # still satisfies the aggregate's clustering requirement —
+        # no second exchange (plan-asserted).
+        #
+        # Out-of-range rows (the -1 sentinel) get a SPREAD block id
+        # (round 12, guide §2.5 single-giant-key skew): the bare
+        # repartition has no map-side partial aggregation, so every
+        # sentinel row shuffles, and with blk = idx/span they ALL
+        # hashed to one reducer — on the 1e8-row 4-D momentum
+        # workflow (26.5% out-of-range after the kx/ky/energy/delay
+        # range cuts) that one task fetched 26.5M extra rows while
+        # 511 idled, and the full path measured 11.9 s vs 6.0 s with
+        # the sentinel group spread by map-partition id (driver
+        # scatter drops idx < 0 regardless, so the result is
+        # bit-identical — verified). A pre-shuffle filter instead is
+        # NOT safe: predicate pushdown inlines the whole flat-index
+        # tree below the axis staging and the 4-D workflow measured
+        # 88 s interpreted (see plans/r12/).
+        span = max(1, cube // (32 * want))
+        blk = F.when(
+            F.col("__idx") >= 0,
+            (F.col("__idx") / F.lit(span)).cast("int"),
+        ).otherwise(-(F.spark_partition_id() + 1))
+        keyed = keyed.select(
+            "__idx", blk.alias("__blk"),
+        ).repartition(want, "__blk")
+        group_cols = ["__blk", "__idx"]
     return keyed.groupBy(*group_cols).agg(
         F.count(F.lit(1)).cast("int").alias("__cnt"),
     ).select("__idx", "__cnt")
 
 
 def _dense_via_groupby(
-    proj: DataFrame, cube: int, occupancy_hint: int | None = None,
-    out_dtype="uint32",
+    proj: DataFrame, cube: int, out_dtype="uint32",
 ) -> np.ndarray:
     """JVM hash aggregate, sparse Arrow collect, flat scatter.
 
@@ -408,20 +368,11 @@ def _dense_via_groupby(
     keep the normal partial→exchange→final plan under the session
     default. AQE may still coalesce by size afterwards.
 
-    Caveat: the default trigger is CUBE size, not actual occupancy. A
-    large cube whose data concentrates in few bins (a sharp peak) would
-    shuffle raw rows onto few reducers here, where the plain plan's
-    map-side combine would have collapsed them first — for such
-    workloads pass ``occupancy_hint`` (an upper bound on the number of
-    occupied cells, e.g. the previous run's group count or the row
-    count): the reducer sizing then uses ``min(cube, hint)``, so a
-    peaked distribution keeps the session-default partial→final plan.
-    No sampling job is spent estimating it — an extra scan per query
-    costs more than the mis-sizing it would prevent at current
-    workloads (measured equal), so the hint is an explicit caller dial,
-    not hidden state. ``GROUPBY_CELLS_PER_REDUCER = None`` disables
-    the repartition entirely."""
-    agg = _groupby_sparse_agg(proj, cube, occupancy_hint)
+    Caveat: the trigger is CUBE size, not actual occupancy. A large cube
+    whose data concentrates in few bins (a sharp peak) shuffles raw rows
+    onto few reducers here, where the plain plan's map-side combine would
+    have collapsed them first."""
+    agg = _groupby_sparse_agg(proj, cube)
     # allocate straight in the caller's output dtype: assigning the
     # sparse (idx, cnt) pairs casts on write — bit-identical to the old
     # uint32-then-astype shape but skips a full read+write pass over the
@@ -512,16 +463,10 @@ def _dense_via_chunks(
                 ["ch", "data"],
             )
 
-    import os
-    import time as _time
-
-    debug = bool(os.environ.get("SED_SPARK_BIN_DEBUG"))
     pairs = proj.select("__idx").mapInArrow(to_pairs, "ch int, iv binary, cv binary")
     nred = min(nchunks, 2 * parallelism)
     reduced = pairs.repartition(nred, "ch").mapInArrow(combine, "ch int, data binary")
-    t0 = _time.perf_counter()
     tbl = reduced.toArrow()
-    t1 = _time.perf_counter()
     dense = np.zeros(cube, dtype=out_dtype)  # cast-on-write, see groupby
     data_col = tbl.column("data")
     for i, c in enumerate(tbl.column("ch").to_pylist()):
@@ -530,9 +475,6 @@ def _dense_via_chunks(
         lo = c * span
         n = min(len(chunk), cube - lo)  # defensive trim for the last chunk
         dense[lo:lo + n] = chunk[:n]
-    if debug:
-        print(f"[bin chunked] nchunks={nchunks} span={span} "
-              f"collect={t1 - t0:.2f}s assemble={_time.perf_counter() - t1:.2f}s")
     return dense
 
 
@@ -544,7 +486,6 @@ def bin_dataframe(
     jitter=None,
     jitter_seed: int | None = None,
     dtype: str = "float32",
-    occupancy_hint: int | None = None,
 ) -> BinnedData:
     """N-dimensional histogram, densified to a :class:`BinnedData`.
 
@@ -552,10 +493,6 @@ def bin_dataframe(
     (src/sed/binning/binning.py:200-427). The final cast to float32 follows
     binning.py:408,421. The physical path follows the cube size: the
     groupby path up to ``CHUNKED_MIN_CUBE`` cells, the chunked path above.
-    ``occupancy_hint`` bounds the expected number of occupied cells for
-    the groupby path's reducer sizing (see :func:`_dense_via_groupby`) —
-    pass it when the data is known to be sharply peaked relative to the
-    cube.
     """
     norm = normalize_bins(bins, axes, ranges)
     shape = tuple(ax.nbins for ax in norm)
@@ -569,9 +506,7 @@ def bin_dataframe(
     flat = _flat_idx_expr(norm, snames)
     proj = srcdf.select(F.coalesce(flat, F.lit(-1).cast("long")).alias("__idx"))
     if cube <= CHUNKED_MIN_CUBE:
-        dense = _dense_via_groupby(
-            proj, cube, occupancy_hint=occupancy_hint, out_dtype=dtype,
-        )
+        dense = _dense_via_groupby(proj, cube, out_dtype=dtype)
     else:
         dense = _dense_via_chunks(proj, cube, out_dtype=dtype)
     coords = {ax.name: ax.bin_centers() for ax in norm}

@@ -7,10 +7,11 @@ Two parts, mirroring the reference's ``MomentumCorrector``
 * the non-affine distortion correction ``apply_dfield`` — bilinear lookup of
   each event's (x, y) in a precomputed inverse deformation field
   (momentum.py:2104-2140, scipy ``map_coordinates(order=1)`` semantics).
-  This is the engine's ONE genuinely non-expressible transform: implemented
-  as an Arrow-batched pandas UDF over the dense grid, which Spark ships to
-  executors inside the serialized closure (one copy per executor process —
-  the 2×2048×2048 float64 field is ~64 MB, well within broadcast budget).
+  Grids of up to ``DFIELD_JOIN_MAX_NODES`` nodes (every field the suite and
+  the benchmark use, 256×256 included) take a broadcast join against a
+  per-cell corner table plus Column arithmetic; larger grids take an
+  Arrow-batched pandas UDF that ships the dense field to executors inside
+  its serialized closure.
 
 The driver-side deformation-field *estimation* (spline warp from symmetry
 landmarks, momentum.py:627-826) needs scipy and is deferred; the dataflow
@@ -164,18 +165,34 @@ def bilinear_sample_pair(
 DFIELD_JOIN_MAX_NODES = 2_000_000
 
 
+def _dfield_geometry(dfield, detector_ranges):
+    """Validate ``dfield`` and return ``(fx, fy, xmin, ymin, x_scale,
+    y_scale)``: its two components and the map from detector coordinates
+    to grid index space, ``index = (coord - min) * scale``."""
+    dfield = np.ascontiguousarray(np.asarray(dfield, dtype=np.float64))
+    if dfield.ndim != 3 or dfield.shape[0] != 2:
+        raise ValueError("dfield must have shape (2, H, W)")
+    (xmin, xmax), (ymin, ymax) = detector_ranges
+    h, w = dfield.shape[1], dfield.shape[2]
+    # grid node i sits at detector coordinate lo + i*span/n (the field is in
+    # forward-bin index space, reference r_axis_steps = span/n); with the
+    # standard 2048-node field on (0, 2048) this reduces to index == raw x,
+    # exactly the reference's map_coordinates(dfield, (x, y)) raw indexing
+    # (momentum.py:2131-2139). generate_inverse_dfield rescales its VALUES
+    # to detector units with the same span/n convention, so no output
+    # scaling is applied here (the reference's trailing ``* r_axis_steps``
+    # is 1.0 in its self-consistent configuration).
+    return dfield[0], dfield[1], xmin, ymin, h / (xmax - xmin), w / (ymax - ymin)
+
+
 def _apply_dfield_join(
     df: DataFrame,
-    fx: np.ndarray,
-    fy: np.ndarray,
+    dfield: np.ndarray,
     x_column: str,
     y_column: str,
     new_x_column: str,
     new_y_column: str,
-    xmin: float,
-    ymin: float,
-    x_scale: float,
-    y_scale: float,
+    detector_ranges,
 ) -> DataFrame:
     """JVM-only bilinear lookup: one broadcast hash join + arithmetic.
 
@@ -188,8 +205,7 @@ def _apply_dfield_join(
     no JVM→Python Arrow feed, which is ~15 s per 1e8 rows at local[32] and
     the entire cost of the UDF path.
     """
-    import pandas as pd
-
+    fx, fy, xmin, ymin, x_scale, y_scale = _dfield_geometry(dfield, detector_ranges)
     h, w = fx.shape
     # corner-value grids padded with one zero ring on every side; cell
     # (r0, c0) for r0 in [-1, h-1] x [-1, w-1] covers every partially
@@ -249,60 +265,21 @@ def _apply_dfield_join(
     )
 
 
-def apply_dfield(
+def _apply_dfield_udf(
     df: DataFrame,
     dfield: np.ndarray,
-    x_column: str = "X",
-    y_column: str = "Y",
-    new_x_column: str = "Xm",
-    new_y_column: str = "Ym",
-    detector_ranges: tuple[tuple[float, float], tuple[float, float]] = (
-        (0.0, 2048.0),
-        (0.0, 2048.0),
-    ),
-    method: str = "auto",
+    x_column: str,
+    y_column: str,
+    new_x_column: str,
+    new_y_column: str,
+    detector_ranges,
 ) -> DataFrame:
-    """Non-affine distortion correction via inverse deformation field.
-
-    Reference semantics (src/sed/calibrator/momentum.py:2104-2140): scale
-    each event's (x, y) into grid index space, then bilinear-sample
-    ``dfield[0]`` → corrected x and ``dfield[1]`` → corrected y.
-
-    Two physical strategies (``method``: ``auto`` | ``join`` | ``udf``):
-    a JVM broadcast-join against a per-cell corner table (stays in
-    whole-stage codegen — the fast path whenever the grid broadcast is
-    cheap), or an Arrow-batched pandas UDF doing the vectorized lookup
-    (for grids too large to broadcast as a corner table).
-    """
-    dfield = np.ascontiguousarray(np.asarray(dfield, dtype=np.float64))
-    if dfield.ndim != 3 or dfield.shape[0] != 2:
-        raise ValueError("dfield must have shape (2, H, W)")
-    (xmin, xmax), (ymin, ymax) = detector_ranges
-    h, w = dfield.shape[1], dfield.shape[2]
-    # grid node i sits at detector coordinate lo + i*span/n (the field is in
-    # forward-bin index space, reference r_axis_steps = span/n); with the
-    # standard 2048-node field on (0, 2048) this reduces to index == raw x,
-    # exactly the reference's map_coordinates(dfield, (x, y)) raw indexing
-    # (momentum.py:2131-2139). generate_inverse_dfield rescales its VALUES
-    # to detector units with the same span/n convention, so no output
-    # scaling is applied here (the reference's trailing ``* r_axis_steps``
-    # is 1.0 in its self-consistent configuration).
-    x_scale = h / (xmax - xmin)
-    y_scale = w / (ymax - ymin)
-    fx, fy = dfield[0], dfield[1]
-
-    if method == "auto":
-        method = "join" if h * w <= DFIELD_JOIN_MAX_NODES else "udf"
-    if method == "join":
-        return _apply_dfield_join(
-            df, fx, fy, x_column, y_column, new_x_column, new_y_column,
-            xmin, ymin, x_scale, y_scale,
-        )
-    if method != "udf":
-        raise ValueError(f"unknown dfield method {method!r}")
-
+    """Arrow-batched pandas UDF doing the vectorized ``bilinear_sample``
+    lookup; the dense field travels to executors in the UDF's closure, so
+    it serves grids too large to broadcast as a corner table."""
     from pyspark.sql.types import StructField, StructType
 
+    fx, fy, xmin, ymin, x_scale, y_scale = _dfield_geometry(dfield, detector_ranges)
     out_type = StructType(
         [StructField("x", DoubleType()), StructField("y", DoubleType())],
     )
@@ -324,4 +301,36 @@ def apply_dfield(
         out.withColumn(new_x_column, F.col(f"{tmp}.x"))
         .withColumn(new_y_column, F.col(f"{tmp}.y"))
         .drop(tmp)
+    )
+
+
+def apply_dfield(
+    df: DataFrame,
+    dfield: np.ndarray,
+    x_column: str = "X",
+    y_column: str = "Y",
+    new_x_column: str = "Xm",
+    new_y_column: str = "Ym",
+    detector_ranges: tuple[tuple[float, float], tuple[float, float]] = (
+        (0.0, 2048.0),
+        (0.0, 2048.0),
+    ),
+) -> DataFrame:
+    """Non-affine distortion correction via inverse deformation field.
+
+    Reference semantics (src/sed/calibrator/momentum.py:2104-2140): scale
+    each event's (x, y) into grid index space, then bilinear-sample
+    ``dfield[0]`` → corrected x and ``dfield[1]`` → corrected y.
+
+    The grid size picks the physical strategy: up to
+    ``DFIELD_JOIN_MAX_NODES`` nodes, a JVM broadcast join against a
+    per-cell corner table (stays in whole-stage codegen); above it, an
+    Arrow-batched pandas UDF doing the vectorized lookup. Both give the
+    same values bit for bit.
+    """
+    fx = _dfield_geometry(dfield, detector_ranges)[0]
+    build = _apply_dfield_join if fx.size <= DFIELD_JOIN_MAX_NODES else _apply_dfield_udf
+    return build(
+        df, dfield, x_column, y_column, new_x_column, new_y_column,
+        detector_ranges,
     )

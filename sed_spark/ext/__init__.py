@@ -14,8 +14,10 @@ hash splits, rate/cap/mixture/Gumbel/quantile/weighted sampling,
 grouped percentile/robust/decayed stats, heavy hitters, corpus diff),
 tokenizer training (vocabulary stats, distributed BPE + unigram-LM +
 WordPiece), mergeable sketches (CMS, HLL, KMV, Bloom incl. bitmap
-semi-join reduction), graph ops (connected components, PageRank,
-triangles, LPA), and multimodal binary-column plumbing.
+semi-join reduction).
+
+No sed module or benchmark workload calls this package; the ``filters``
+and ``run_stats`` suite queries check five ``corpus`` statistics.
 
 All hot paths are JVM-side Column expressions (higher-order array
 functions); the only Python workers are vectorized Arrow stages with

@@ -464,8 +464,8 @@ def prefix_similarity_join(
     Output-size caveat: the ANSWER itself is quadratic in duplicate-group
     size — k byte-identical documents have k·(k-1)/2 qualifying pairs,
     and a lossless join must emit every one. Run :func:`exact_dedup`
-    first (as ``examples/training_data_pipeline.py`` does) so groups
-    collapse to one representative before the near-dup sweep.
+    first so groups collapse to one representative before the near-dup
+    sweep.
 
     ``set_col`` generalizes the join beyond text: name an
     ``array<string>`` column (URL sets, feature bags, tag sets) and the

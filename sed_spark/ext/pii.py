@@ -13,8 +13,7 @@ no lookaround — so the same pattern doubles as the oracle definition
 downstream systems can check against.
 
 Real deployments layer model-based NER on top for names/addresses; that
-is a Pandas-UDF stage by construction (model inference), which the
-multimodal module's ``mapInPandas`` plumbing already demonstrates.
+is a Pandas-UDF stage by construction (model inference).
 """
 
 from __future__ import annotations

@@ -695,9 +695,7 @@ def semantic_dedup(
     dominance rule, deterministic and closed-form (no iterative closure).
     With chains a ~ b ~ c where a ≁ c, both b and c are dropped even
     though b (c's only near-duplicate) is itself dropped; that matches
-    the paper's greedy one-pass sweep. For transitive-closure semantics
-    feed the pair graph to :func:`sed_spark.ext.graph.dedup_clusters`
-    instead.
+    the paper's greedy one-pass sweep.
 
     ``keep`` picks the priority order:
 

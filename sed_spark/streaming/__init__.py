@@ -12,7 +12,7 @@ from the same expression library as batch:
 * :func:`timed_table_stream` — the timed table as a tumbling-window
   aggregate of the live stream (+watermark for late events).
 * :func:`streaming_histogram` — the N-D binning query on the stream: the
-  SAME ``bin_index_expr`` columns as batch binning, grouped per time
+  SAME ``bin_index_nullable`` columns as batch binning, grouped per time
   window, in update mode. A dashboard reads the sink and densifies with
   the batch code path.
 

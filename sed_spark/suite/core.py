@@ -49,7 +49,7 @@ HIST_SPECS = {
 
 
 def _hist_sql(table: str, axes) -> str:
-    """Oracle mirroring bin_index_expr: j = (x-lo)*delta + 5e-12,
+    """Oracle mirroring bin_index_nullable: j = (x-lo)*delta + 5e-12,
     floor, last-edge-inclusive, strict in-range."""
     bin_cols, valid = [], []
     for ax in axes:
@@ -98,7 +98,7 @@ for _name, (_table, _spec) in HIST_SPECS.items():
 
 # 1-D histogram in BOTH bin grammars, tag-unioned so one oracle row covers
 # the uniform-range kernel AND the explicit-centers (non-uniform edges)
-# aggregate-count path of bin_index_expr.
+# aggregate-count path of bin_index_nullable.
 _CENTERS = np.array([10.0, 30.0, 70.0, 150.0, 310.0, 470.0])
 _H1_AXES = normalize_bins([100], ["value"], [(0.0, 500.0)])
 
@@ -743,13 +743,10 @@ def _dfield_grids():
     return np.broadcast_to(fx, (_DF_H, _DF_W)), np.broadcast_to(fy, (_DF_H, _DF_W))
 
 
-def _dfield_warp(spark, sf_dir, method):
-    fx, fy = _dfield_grids()
-    out = momentum_cal.apply_dfield(
-        _with_xy(spark, sf_dir),
-        np.stack([fx, fy]),
-        x_column="X", y_column="Y", new_x_column="Xm", new_y_column="Ym",
-        detector_ranges=_DF_RANGES, method=method,
+def _dfield_warp(spark, sf_dir, build):
+    out = build(
+        _with_xy(spark, sf_dir), np.stack(_dfield_grids()),
+        "X", "Y", "Xm", "Ym", _DF_RANGES,
     )
     return out.select("event_id", "Xm", "Ym")
 
@@ -759,12 +756,12 @@ def _dfield_warp(spark, sf_dir, method):
 # strategy's output is its own column pair, equi-joined on event_id
 @q("dfield_warp")
 def dfield_warp(spark, sf_dir):
-    via_join = _dfield_warp(spark, sf_dir, "join").select(
+    via_join = _dfield_warp(spark, sf_dir, momentum_cal._apply_dfield_join).select(
         "event_id",
         F.col("Xm").alias("Xm_join"),
         F.col("Ym").alias("Ym_join"),
     )
-    via_udf = _dfield_warp(spark, sf_dir, "udf").select(
+    via_udf = _dfield_warp(spark, sf_dir, momentum_cal._apply_dfield_udf).select(
         "event_id",
         F.col("Xm").alias("Xm_udf"),
         F.col("Ym").alias("Ym_udf"),
@@ -851,7 +848,7 @@ def flagship_momentum(spark, sf_dir):
     fx, fy = _dfield_grids()
     wf = momentum_cal.apply_dfield(
         _flagship_src(spark, sf_dir), np.stack([fx, fy]),
-        detector_ranges=_DF_RANGES, method="join",
+        detector_ranges=_DF_RANGES,
     )
     wf = momentum_cal.append_k_axis(wf, x_column="Xm", y_column="Ym", **_KPARAMS)
     wf = energy_cal.apply_energy_correction(
@@ -1207,17 +1204,16 @@ _DWELL_AX = normalize_bins([10], ["value"], [(0.0, 500.0)])[0]
 
 @q("dwell_norm")
 def dwell_norm(spark, sf_dir):
-    from sed_spark.binning.core import bin_index_expr
+    from sed_spark.binning.core import bin_index_nullable
 
     df = load(spark, sf_dir, "events")
     df = df.withColumn("ts_us", ts_us(df))
     w = Window.partitionBy("user_id").orderBy("event_id")
     dt = F.col("ts_us") - F.lag("ts_us").over(w)
-    idx, valid = bin_index_expr(_DWELL_AX, F.col("value"))
     return (
         df.withColumn("dt_us", dt)
-        .withColumn("bin_value", idx)
-        .filter(valid)
+        .withColumn("bin_value", bin_index_nullable(_DWELL_AX, F.col("value")))
+        .filter(F.col("bin_value").isNotNull())
         .groupBy("bin_value")
         .agg(F.sum("dt_us").alias("dwell_us"))
     )

@@ -150,21 +150,6 @@ def test_normalize_bins_errors():
         normalize_bins([10, 10], axes=["t"], ranges=[(0, 1), (0, 1)])
 
 
-def test_bin_dataframe_occupancy_hint_same_result(spark, events_df):
-    # the hint only resizes the aggregation's reducer count — a sharply
-    # peaked workload can opt out of the cube-sized raw-key shuffle; the
-    # histogram itself must be identical
-    from sed_spark.binning import bin_dataframe
-
-    kw = dict(
-        bins=[40, 40], axes=["X", "Y"],
-        ranges=[(0.0, 2048.0), (0.0, 2048.0)],
-    )
-    base = bin_dataframe(events_df, **kw)
-    hinted = bin_dataframe(events_df, occupancy_hint=100, **kw)
-    assert (base.data == hinted.data).all()
-
-
 # ---------------------------------------------------------------------------
 # literal-edges grammar + equi-depth edges
 # ---------------------------------------------------------------------------

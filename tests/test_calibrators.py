@@ -200,13 +200,9 @@ def test_apply_dfield_join_matches_udf_and_numpy(spark):
     pdf["id"] = np.arange(len(pdf))
     df = spark.createDataFrame(pdf)
     ranges = ((0.0, 2048.0), (0.0, 2048.0))
-    out_join = (
-        momentum_cal.apply_dfield(df, dfield, detector_ranges=ranges, method="join")
-        .orderBy("id").toPandas()
-    )
-    out_udf = (
-        momentum_cal.apply_dfield(df, dfield, detector_ranges=ranges, method="udf")
-        .orderBy("id").toPandas()
+    out_join, out_udf = (
+        build(df, dfield, "X", "Y", "Xm", "Ym", ranges).orderBy("id").toPandas()
+        for build in (momentum_cal._apply_dfield_join, momentum_cal._apply_dfield_udf)
     )
     rows = (pdf["X"].to_numpy() - 0.0) * (h / 2048.0)
     cols = (pdf["Y"].to_numpy() - 0.0) * (w / 2048.0)

@@ -234,54 +234,6 @@ def test_winnow_shared_substring_guarantee(spark):
     assert rows[0] != rows[2]
 
 
-def test_resize_stub_composes_with_decode(spark):
-    from sed_spark.ext.multimodal import decode_stub, resize_stub, to_binary_payload
-
-    df = to_binary_payload(
-        spark.createDataFrame([(0, "hello"), (1, "")], ["doc_id", "text"]),
-    )
-    resized = resize_stub(df, target=(8, 4))
-    rows = {r["doc_id"]: r for r in resized.collect()}
-    assert all(r["width"] == 8 and r["height"] == 4 for r in rows.values())
-    assert all(len(bytes(r["payload"])) == 32 for r in rows.values())
-    # deterministic: same payload -> same resized bytes
-    again = {r["doc_id"]: r for r in resize_stub(df, target=(8, 4)).collect()}
-    assert bytes(rows[0]["payload"]) == bytes(again[0]["payload"])
-    # binary output feeds straight back into the decode stage
-    feats = decode_stub(resized)
-    assert feats.count() == 2
-    assert all(r["n_bytes"] == 32 for r in feats.collect())
-
-
-def test_frame_sample_stub_expansion(spark):
-    from sed_spark.ext.multimodal import frame_sample_stub, to_binary_payload
-
-    text = "x" * 100  # 7 frames of 16 bytes -> sampled idx 0 and 4
-    df = to_binary_payload(
-        spark.createDataFrame([(0, text), (1, "")], ["doc_id", "text"]),
-    )
-    rows = frame_sample_stub(df, every=4, frame_bytes=16).collect()
-    got = sorted((r["doc_id"], r["frame_idx"], r["n_frames"]) for r in rows)
-    assert got == [(0, 0, 7), (0, 4, 7)]
-    by_idx = {r["frame_idx"]: bytes(r["frame"]) for r in rows}
-    assert by_idx[0] == b"x" * 16
-    assert by_idx[4] == b"x" * 16
-
-
-def test_frame_sample_stub_validates_args(spark):
-    import pytest
-
-    from sed_spark.ext.multimodal import frame_sample_stub, to_binary_payload
-
-    df = to_binary_payload(
-        spark.createDataFrame([(0, "abc")], ["doc_id", "text"]),
-    )
-    with pytest.raises(ValueError, match="every"):
-        frame_sample_stub(df, every=0)
-    with pytest.raises(ValueError, match="frame_bytes"):
-        frame_sample_stub(df, frame_bytes=0)
-
-
 def test_benchmark_contamination(spark):
     from sed_spark.ext.dedup import benchmark_contamination
 

@@ -4,7 +4,12 @@
 import numpy as np
 import pytest
 
-from sed_spark.calibrator.momentum import apply_dfield, bilinear_sample
+from sed_spark.calibrator.momentum import (
+    _apply_dfield_join,
+    _apply_dfield_udf,
+    apply_dfield,
+    bilinear_sample,
+)
 from sed_spark.calibrator.momentum_estimation import (
     coordinate_transform_field,
     generate_inverse_dfield,
@@ -132,10 +137,8 @@ def test_inverse_dfield_round_trip_scaled_ranges(spark):
     yd = rng.uniform(8 * step, (w - 8) * step, 200)
     pdf = pd.DataFrame({"X": xd, "Y": yd, "id": np.arange(200)})
     df = spark.createDataFrame(pdf)
-    for method in ("join", "udf"):
-        out = apply_dfield(
-            df, inv, detector_ranges=ranges, method=method,
-        ).orderBy("id").toPandas()
+    for build in (_apply_dfield_join, _apply_dfield_udf):
+        out = build(df, inv, "X", "Y", "Xm", "Ym", ranges).orderBy("id").toPandas()
         # p (detector) -> index space -> forward field -> detector: must
         # land back on the probe point
         p_idx_r = out["Xm"].to_numpy() / step

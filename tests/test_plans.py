@@ -237,35 +237,6 @@ def test_training_order_shuffles_once_no_global_sort(spark):
     assert "Window" in plan
 
 
-def test_bm25_broadcasts_dims_and_avoids_doc_level_join(spark):
-    # both dimension sides (per-term df, corpus constants) must ride
-    # broadcasts, and the doc length must travel WITH the postings —
-    # a SortMergeJoin would mean a corpus-sized doc-level join snuck
-    # back in to fetch dl
-    from sed_spark.ext import retrieval
-    from sed_spark.suite.common import load
-
-    df = load(spark, SF_DIR, "documents")
-    plan = _plan(retrieval.bm25_score(df, ["customer", "spark"]))
-    assert plan.count("BroadcastExchange") == 2
-    assert "SortMergeJoin" not in plan
-
-
-def test_pagerank_iteration_starts_from_checkpointed_tables(spark):
-    # the per-iteration plan must hang off the checkpointed edge/rank
-    # RDDs (Scan ExistingRDD), not re-derive the graph from source: the
-    # lineage cut is what keeps round N's plan O(1) instead of O(N)
-    from sed_spark.ext import graph
-
-    edges = spark.createDataFrame(
-        [(1, 2, 1), (2, 1, 1), (1, 3, 1)], ["a_id", "b_id", "w"],
-    )
-    out = graph.pagerank(edges, weight="w", n_iter=2)
-    plan = _plan(out)
-    assert "Scan ExistingRDD" in plan
-    assert "FileScan" not in plan
-
-
 def test_range_join_is_bucketed_hash_join_not_cartesian(spark):
     # the whole point of the bucketed formulation: the planner must see a
     # plain equi-join on (key, bucket), never a cartesian/nested-loop
@@ -351,19 +322,6 @@ def test_salted_join_is_hash_join_no_cartesian(spark):
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) \
         or ("BroadcastHashJoin" in plan)
     assert "__salt" in plan
-
-
-def test_triangle_count_no_cartesian_two_joins(spark):
-    from sed_spark.ext.graph import triangle_count
-
-    edges = spark.range(0, 1000).select(
-        (F.col("id") % 97).alias("a_id"), ((F.col("id") * 7) % 89).alias("b_id"),
-    )
-    plan = _plan(triangle_count(edges))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # the closing step is a semi join on the (u,w) pair
-    assert "LeftSemi" in plan
 
 
 def test_dense_groupby_block_partition_single_exchange(spark):

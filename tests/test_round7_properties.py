@@ -1,9 +1,8 @@
 """Property-based checks of the round-7 operators.
 
 The bug surfaces: KMV's bottom-k/merge algebra under duplicate keys and
-saturated/unsaturated sketches, weighted_cap_sample's exact-cap +
-determinism-under-repartition contract, and label propagation against an
-independent Python reference on random graphs.
+saturated/unsaturated sketches, and weighted_cap_sample's exact-cap +
+determinism-under-repartition contract.
 """
 
 from __future__ import annotations
@@ -114,47 +113,3 @@ def test_weighted_cap_sample_exact_and_partition_invariant(
         assert per_group.get(g, 0) == min(cap, n_el)
 
 
-@given(
-    n_nodes=st.integers(2, 25),
-    n_edges=st.integers(1, 60),
-    n_iter=st.integers(1, 4),
-    seed=st.integers(0, 2**31 - 1),
-)
-@settings(**_SETTINGS)
-def test_label_propagation_matches_python_reference(
-    spark, n_nodes, n_edges, n_iter, seed,
-):
-    import random
-
-    from sed_spark.ext.graph import label_propagation
-
-    rng = random.Random(seed)
-    edges = [
-        (rng.randrange(n_nodes), rng.randrange(n_nodes))
-        for _ in range(n_edges)
-    ]
-    df = spark.createDataFrame(edges, ["a_id", "b_id"])
-    nodes = spark.createDataFrame([(i,) for i in range(n_nodes)], ["node"])
-    got = {
-        r["node"]: r["community"]
-        for r in label_propagation(df, n_iter=n_iter, nodes=nodes).collect()
-    }
-
-    adj: dict = {i: set() for i in range(n_nodes)}
-    for a, b in edges:
-        if a != b:
-            adj[a].add(b)
-            adj[b].add(a)
-    labels = {i: i for i in range(n_nodes)}
-    for _ in range(n_iter):
-        nxt = {}
-        for v in range(n_nodes):
-            if not adj[v]:
-                nxt[v] = labels[v]
-                continue
-            counts: dict = {}
-            for u in adj[v]:
-                counts[labels[u]] = counts.get(labels[u], 0) + 1
-            nxt[v] = min(counts, key=lambda x: (-counts[x], x))
-        labels = nxt
-    assert got == labels
