@@ -9,9 +9,10 @@ Two parts, mirroring the reference's ``MomentumCorrector``
   (momentum.py:2104-2140, scipy ``map_coordinates(order=1)`` semantics).
   Grids of up to ``DFIELD_JOIN_MAX_NODES`` nodes (every field the suite and
   the benchmark use, 256×256 included) take a broadcast join against a
-  per-cell corner table plus Column arithmetic; larger grids take an
-  Arrow-batched pandas UDF that ships the dense field to executors inside
-  its serialized closure.
+  per-cell corner relation plus Column arithmetic. The corner relation is
+  built once per field and session and enters plans as a small RDD-backed
+  leaf, not as literal rows. Larger grids take an Arrow-batched pandas UDF
+  that ships the dense field to executors inside its serialized closure.
 
 The driver-side deformation-field *estimation* (spline warp from symmetry
 landmarks, momentum.py:627-826) needs scipy and is deferred; the dataflow
@@ -20,9 +21,14 @@ operator below accepts any precomputed field.
 
 from __future__ import annotations
 
+import hashlib
+import threading
+from collections import OrderedDict
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
@@ -31,6 +37,7 @@ __all__ = [
     "append_k_axis",
     "bilinear_sample",
     "apply_dfield",
+    "dfield_digest",
 ]
 
 
@@ -164,11 +171,28 @@ def bilinear_sample_pair(
 # broadcast (8 doubles per node) and the Arrow-batched UDF path wins
 DFIELD_JOIN_MAX_NODES = 2_000_000
 
+DEFAULT_DETECTOR_RANGES = ((0.0, 2048.0), (0.0, 2048.0))
 
-def _dfield_geometry(dfield, detector_ranges):
-    """Validate ``dfield`` and return ``(fx, fy, xmin, ymin, x_scale,
-    y_scale)``: its two components and the map from detector coordinates
-    to grid index space, ``index = (coord - min) * scale``."""
+
+class _Field(NamedTuple):
+    """A validated field: its two float64 components and the map from
+    detector coordinates to grid index space, ``index = (coord - min) *
+    scale``."""
+
+    fx: np.ndarray
+    fy: np.ndarray
+    xmin: float
+    ymin: float
+    x_scale: float
+    y_scale: float
+
+
+def _dfield_geometry(dfield, detector_ranges) -> _Field:
+    """Validate ``dfield`` and convert it to float64. A ``_Field`` passes
+    through unchanged, so ``apply_dfield`` converts a field once however
+    its builder is reached."""
+    if isinstance(dfield, _Field):
+        return dfield
     dfield = np.ascontiguousarray(np.asarray(dfield, dtype=np.float64))
     if dfield.ndim != 3 or dfield.shape[0] != 2:
         raise ValueError("dfield must have shape (2, H, W)")
@@ -182,7 +206,97 @@ def _dfield_geometry(dfield, detector_ranges):
     # to detector units with the same span/n convention, so no output
     # scaling is applied here (the reference's trailing ``* r_axis_steps``
     # is 1.0 in its self-consistent configuration).
-    return dfield[0], dfield[1], xmin, ymin, h / (xmax - xmin), w / (ymax - ymin)
+    return _Field(dfield[0], dfield[1], xmin, ymin, h / (xmax - xmin), w / (ymax - ymin))
+
+
+def _digest(fx: np.ndarray, fy: np.ndarray) -> str:
+    h = hashlib.blake2b(digest_size=16)
+    h.update(np.asarray((2, *fx.shape), dtype=np.int64).tobytes())
+    h.update(np.ascontiguousarray(fx, dtype=np.float64))
+    h.update(np.ascontiguousarray(fy, dtype=np.float64))
+    return h.hexdigest()
+
+
+def dfield_digest(dfield: np.ndarray) -> str:
+    """Content digest of a ``(2, H, W)`` field: its shape and raw float64
+    bytes. Fields equal bit for bit share it; ``-0.0`` and ``0.0``, or two
+    NaN payloads, do not. The corner-relation cache keys on it."""
+    fx, fy = np.asarray(dfield, dtype=np.float64)
+    return _digest(fx, fy)
+
+
+# corner relations already built, keyed by (session, field digest), oldest
+# first; the lock makes lookups, inserts and evictions safe for callers
+# building plans on several threads
+_CORNER_CACHE: OrderedDict[tuple[int, str], tuple[SparkSession, DataFrame]] = OrderedDict()
+_CORNER_CACHE_MAX = 4
+_CORNER_LOCK = threading.Lock()
+
+
+def _corner_relation(spark: SparkSession, fx: np.ndarray, fy: np.ndarray) -> DataFrame:
+    """The per-cell corner table of field ``(fx, fy)``, built once per
+    session and field content.
+
+    Every call on an equal field reuses one relation, so each plan carries
+    the same small ``LogicalRDD`` leaf instead of a fresh 66k-row literal
+    ``LocalRelation`` (256² field) that the analyzer, the optimizer and
+    AQE would walk again. A relation whose SparkContext has stopped is
+    never returned.
+    """
+    # the entry holds its session, so no other session can reuse its id
+    key = (id(spark), _digest(fx, fy))
+    with _CORNER_LOCK:
+        hit = _CORNER_CACHE.get(key)
+        if hit is not None and spark.sparkContext._jsc is not None:
+            _CORNER_CACHE.move_to_end(key)
+            return hit[1]
+        relation = _build_corner_relation(spark, fx, fy)
+        _CORNER_CACHE[key] = (spark, relation)
+        _CORNER_CACHE.move_to_end(key)
+        while len(_CORNER_CACHE) > _CORNER_CACHE_MAX:
+            _CORNER_CACHE.popitem(last=False)
+        return relation
+
+
+def _build_corner_relation(spark: SparkSession, fx: np.ndarray, fy: np.ndarray) -> DataFrame:
+    """Corner table keyed by cell ``r0 * (w + 1) + c0`` carrying the four
+    corner values of both components, padded one cell outward with zeros
+    so out-of-bounds corners reproduce ``bilinear_sample``'s constant-0
+    semantics exactly."""
+    h, w = fx.shape
+    # corner-value grids padded with one zero ring on every side; cell
+    # (r0, c0) for r0 in [-1, h-1] x [-1, w-1] covers every partially
+    # in-bounds lookup, totals (h+1)*(w+1) rows
+    pfx = np.zeros((h + 2, w + 2))
+    pfy = np.zeros((h + 2, w + 2))
+    pfx[1:h + 1, 1:w + 1] = fx
+    pfy[1:h + 1, 1:w + 1] = fy
+    key = np.arange(-1, h)[:, None] * np.int64(w + 1) + np.arange(-1, w)[None, :]
+    local = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "__cell": key.ravel(),
+                "__fx00": pfx[0:h + 1, 0:w + 1].ravel(),
+                "__fx01": pfx[0:h + 1, 1:w + 2].ravel(),
+                "__fx10": pfx[1:h + 2, 0:w + 1].ravel(),
+                "__fx11": pfx[1:h + 2, 1:w + 2].ravel(),
+                "__fy00": pfy[0:h + 1, 0:w + 1].ravel(),
+                "__fy01": pfy[0:h + 1, 1:w + 2].ravel(),
+                "__fy10": pfy[1:h + 2, 0:w + 1].ravel(),
+                "__fy11": pfy[1:h + 2, 1:w + 2].ravel(),
+            },
+        ),
+    )
+    # re-root the literal rows under an RDD-backed leaf: the RDD is a
+    # ParallelCollectionRDD over rows the driver holds, so Spark can
+    # recompute a lost partition from them (unlike localCheckpoint, whose
+    # blocks die with their executor)
+    jdf = spark._jsparkSession.createDataFrame(local._jdf.rdd(), local._jdf.schema())
+    return DataFrame(jdf, spark)
+
+
+def _quoted(name: str) -> Column:
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def _apply_dfield_join(
@@ -196,39 +310,18 @@ def _apply_dfield_join(
 ) -> DataFrame:
     """JVM-only bilinear lookup: one broadcast hash join + arithmetic.
 
-    The grid becomes a dimension table keyed by cell (floor(row),
-    floor(col)) carrying all four corner values of BOTH field components,
-    padded one cell outward with zeros so out-of-bounds corners reproduce
-    ``bilinear_sample``'s constant-0 semantics exactly. Events join once
-    (broadcast — no shuffle of the event table) and the blend is a pure
-    Column expression, so the whole transform stays in whole-stage codegen:
-    no JVM→Python Arrow feed, which is ~15 s per 1e8 rows at local[32] and
-    the entire cost of the UDF path.
+    Events join the field's corner relation (:func:`_corner_relation`) on
+    their cell (floor(row), floor(col)), broadcast so the event table is
+    not shuffled, and the blend is a pure Column expression, so the whole
+    transform stays in whole-stage codegen: no JVM→Python Arrow feed, which
+    is ~15 s per 1e8 rows at local[32] and the entire cost of the UDF path.
+    One ``withColumns`` before the join and one ``select`` after it; the
+    output keeps the input's columns in order, with ``new_x_column`` and
+    ``new_y_column`` replaced in place or appended.
     """
     fx, fy, xmin, ymin, x_scale, y_scale = _dfield_geometry(dfield, detector_ranges)
     h, w = fx.shape
-    # corner-value grids padded with one zero ring on every side; cell
-    # (r0, c0) for r0 in [-1, h-1] x [-1, w-1] covers every partially
-    # in-bounds lookup, totals (h+1)*(w+1) rows
-    pfx = np.zeros((h + 2, w + 2))
-    pfy = np.zeros((h + 2, w + 2))
-    pfx[1:h + 1, 1:w + 1] = fx
-    pfy[1:h + 1, 1:w + 1] = fy
-    key = np.arange(-1, h) [:, None] * np.int64(w + 1) + np.arange(-1, w)[None, :]
-    dim = pd.DataFrame(
-        {
-            "__cell": key.ravel() ,
-            "__fx00": pfx[0:h + 1, 0:w + 1].ravel(),
-            "__fx01": pfx[0:h + 1, 1:w + 2].ravel(),
-            "__fx10": pfx[1:h + 2, 0:w + 1].ravel(),
-            "__fx11": pfx[1:h + 2, 1:w + 2].ravel(),
-            "__fy00": pfy[0:h + 1, 0:w + 1].ravel(),
-            "__fy01": pfy[0:h + 1, 1:w + 2].ravel(),
-            "__fy10": pfy[1:h + 2, 0:w + 1].ravel(),
-            "__fy11": pfy[1:h + 2, 1:w + 2].ravel(),
-        },
-    )
-    dim_df = df.sparkSession.createDataFrame(dim)
+    corners = _corner_relation(df.sparkSession, fx, fy)
 
     rows = (F.col(x_column).cast("double") - F.lit(xmin)) * F.lit(x_scale)
     cols = (F.col(y_column).cast("double") - F.lit(ymin)) * F.lit(y_scale)
@@ -247,7 +340,7 @@ def _apply_dfield_join(
             "__cell": F.when(in_cells, (r0 * F.lit(w + 1) + c0).cast("long")),
         },
     )
-    joined = out.join(F.broadcast(dim_df), "__cell", "left")
+    joined = out.join(F.broadcast(corners), "__cell", "left")
     fr, fc = F.col("__fr"), F.col("__fc")
 
     def blend(p):
@@ -257,12 +350,9 @@ def _apply_dfield_join(
         bot = v10 * (F.lit(1.0) - fc) + v11 * fc
         return top * (F.lit(1.0) - fr) + bot * fr
 
-    return (
-        joined.withColumn(new_x_column, blend("fx"))
-        .withColumn(new_y_column, blend("fy"))
-        .drop("__fr", "__fc", "__cell",
-              *[f"__{p}{c}" for p in ("fx", "fy") for c in ("00", "01", "10", "11")])
-    )
+    blended = {new_x_column: blend("fx"), new_y_column: blend("fy")}
+    kept = [blended.pop(c).alias(c) if c in blended else _quoted(c) for c in df.columns]
+    return joined.select(*kept, *(v.alias(k) for k, v in blended.items()))
 
 
 def _apply_dfield_udf(
@@ -311,10 +401,7 @@ def apply_dfield(
     y_column: str = "Y",
     new_x_column: str = "Xm",
     new_y_column: str = "Ym",
-    detector_ranges: tuple[tuple[float, float], tuple[float, float]] = (
-        (0.0, 2048.0),
-        (0.0, 2048.0),
-    ),
+    detector_ranges: tuple[tuple[float, float], tuple[float, float]] = DEFAULT_DETECTOR_RANGES,
 ) -> DataFrame:
     """Non-affine distortion correction via inverse deformation field.
 
@@ -322,15 +409,17 @@ def apply_dfield(
     each event's (x, y) into grid index space, then bilinear-sample
     ``dfield[0]`` → corrected x and ``dfield[1]`` → corrected y.
 
-    The grid size picks the physical strategy: up to
-    ``DFIELD_JOIN_MAX_NODES`` nodes, a JVM broadcast join against a
-    per-cell corner table (stays in whole-stage codegen); above it, an
+    The field is validated and converted to float64 once per call. The
+    grid size picks the physical strategy: up to ``DFIELD_JOIN_MAX_NODES``
+    nodes, a JVM broadcast join against a per-cell corner relation that is
+    built once per field and session and reused by every later call with
+    an equal field (stays in whole-stage codegen); above it, an
     Arrow-batched pandas UDF doing the vectorized lookup. Both give the
     same values bit for bit.
     """
-    fx = _dfield_geometry(dfield, detector_ranges)[0]
-    build = _apply_dfield_join if fx.size <= DFIELD_JOIN_MAX_NODES else _apply_dfield_udf
+    field = _dfield_geometry(dfield, detector_ranges)
+    build = _apply_dfield_join if field.fx.size <= DFIELD_JOIN_MAX_NODES else _apply_dfield_udf
     return build(
-        df, dfield, x_column, y_column, new_x_column, new_y_column,
+        df, field, x_column, y_column, new_x_column, new_y_column,
         detector_ranges,
     )

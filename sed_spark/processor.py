@@ -267,7 +267,23 @@ class SedProcessor:
         return self
 
     def apply_momentum_correction(self, dfield: np.ndarray, **kwds) -> "SedProcessor":
+        """Distortion correction through the inverse deformation field
+        ``dfield`` of shape ``(2, H, W)``; records the field's shape,
+        detector ranges and content digest under ``momentum_correction``
+        (reference src/sed/calibrator/momentum.py:1742-1813)."""
+        dfield = np.ascontiguousarray(dfield, dtype=np.float64)
         self._dataframe = momentum_cal.apply_dfield(self._dataframe, dfield, **kwds)
+        ranges = kwds.get("detector_ranges", momentum_cal.DEFAULT_DETECTOR_RANGES)
+        self._attributes.add(
+            {
+                "applied": True,
+                "dfield_shape": list(dfield.shape[1:]),
+                "detector_ranges": [[float(lo), float(hi)] for lo, hi in ranges],
+                "dfield_digest": momentum_cal.dfield_digest(dfield),
+            },
+            "momentum_correction",
+            duplicate_policy="merge",
+        )
         return self
 
     def calibrate_delay_axis(self, **kwds) -> "SedProcessor":

@@ -229,3 +229,113 @@ def test_energy_add_offsets(spark):
         df, constant=1.0, columns="bam", weights=1.0, energy_scale="binding",
     ).toPandas()
     np.testing.assert_allclose(out2["energy"], pdf["energy"] - pdf["bam"] - 1.0, rtol=1e-12)
+
+
+def _fresh_corner_cache(monkeypatch, stub=False, delay=None):
+    """Empty the corner-relation cache for one test and count builds;
+    with ``stub`` the builder returns a token instead of a relation, after
+    sleeping ``delay[0]`` seconds when a ``delay`` list is given."""
+    import time
+    from collections import OrderedDict
+
+    monkeypatch.setattr(momentum_cal, "_CORNER_CACHE", OrderedDict())
+    builds = []
+    real = momentum_cal._build_corner_relation
+
+    def build(spark, fx, fy):
+        if delay:
+            time.sleep(delay[0])
+        builds.append((fx.copy(), fy.copy()))
+        return ("relation", len(builds)) if stub else real(spark, fx, fy)
+
+    monkeypatch.setattr(momentum_cal, "_build_corner_relation", build)
+    return builds
+
+
+def _live_session():
+    """Stand-in for a SparkSession whose context is running."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(sparkContext=SimpleNamespace(_jsc=object()))
+
+
+def test_corner_relation_built_once_per_field_content(spark, monkeypatch):
+    builds = _fresh_corner_cache(monkeypatch)
+    rng = np.random.default_rng(12)
+    dfield = rng.uniform(0, 2048, (2, 9, 7))
+    pdf = pd.DataFrame({"X": rng.uniform(0, 2048, 300), "Y": rng.uniform(0, 2048, 300)})
+    pdf["id"] = np.arange(len(pdf))
+    df = spark.createDataFrame(pdf)
+    first = momentum_cal.apply_dfield(df, dfield).orderBy("id").toPandas()
+    # equal content, different array objects and memory layout
+    again = momentum_cal.apply_dfield(df, np.asfortranarray(dfield.copy())).orderBy("id").toPandas()
+    assert len(builds) == 1
+    np.testing.assert_array_equal(first["Xm"].to_numpy(), again["Xm"].to_numpy())
+    np.testing.assert_array_equal(first["Ym"].to_numpy(), again["Ym"].to_numpy())
+
+
+def test_corner_relation_keys_on_bit_pattern(monkeypatch):
+    builds = _fresh_corner_cache(monkeypatch, stub=True)
+    spark = _live_session()
+    fx = np.zeros((3, 4))
+    fy = np.full((3, 4), np.nan)
+    base = momentum_cal._corner_relation(spark, fx, fy)
+    # NaN keys by its bits, so an equal NaN-bearing field still hits
+    assert momentum_cal._corner_relation(spark, fx.copy(), fy.copy()) is base
+    one_off = fx.copy()
+    one_off[2, 3] = 1e-300
+    neg_zero = fx.copy()
+    neg_zero[0, 0] = -0.0
+    assert momentum_cal._corner_relation(spark, one_off, fy) is not base
+    assert momentum_cal._corner_relation(spark, neg_zero, fy) is not base
+    assert len(builds) == 3
+    assert np.signbit(builds[2][0][0, 0])
+
+
+def test_corner_relation_cap_evicts_oldest(monkeypatch):
+    builds = _fresh_corner_cache(monkeypatch, stub=True)
+    spark = _live_session()
+    cap = momentum_cal._CORNER_CACHE_MAX
+    fields = [np.full((2, 2), float(i)) for i in range(cap + 1)]
+    for f in fields:
+        momentum_cal._corner_relation(spark, f, f)
+    assert len(momentum_cal._CORNER_CACHE) == cap
+    momentum_cal._corner_relation(spark, fields[-1], fields[-1])
+    assert len(builds) == cap + 1
+    momentum_cal._corner_relation(spark, fields[0], fields[0])
+    assert len(builds) == cap + 2
+
+
+def test_corner_relation_of_stopped_context_is_rebuilt(monkeypatch):
+    builds = _fresh_corner_cache(monkeypatch, stub=True)
+    session = _live_session()
+    context = session.sparkContext
+    f = np.ones((2, 3))
+    stale = momentum_cal._corner_relation(session, f, f)
+    assert momentum_cal._corner_relation(session, f, f) is stale
+    context._jsc = None  # what SparkContext.stop() leaves behind
+    assert momentum_cal._corner_relation(session, f, f) is not stale
+    assert len(builds) == 2
+
+
+def test_corner_relation_cache_is_thread_safe(monkeypatch):
+    from concurrent.futures import ThreadPoolExecutor
+
+    delay = [0.02]
+    builds = _fresh_corner_cache(monkeypatch, stub=True, delay=delay)
+    spark = _live_session()
+    cap = momentum_cal._CORNER_CACHE_MAX
+    # more distinct fields than the cap, so threads hit, insert and evict
+    fields = [np.full((2, 2), float(i)) for i in range(cap + 2)]
+
+    def call(i):
+        return momentum_cal._corner_relation(spark, fields[i], fields[i])
+
+    with ThreadPoolExecutor(8) as pool:
+        # concurrent first calls on one field share a single slow build
+        assert len(set(pool.map(call, [0] * 16))) == 1
+        assert len(builds) == 1
+        delay[0] = 0.0
+        tokens = list(pool.map(call, [i % len(fields) for i in range(2000)]))
+    assert all(t is not None for t in tokens)
+    assert len(momentum_cal._CORNER_CACHE) == cap

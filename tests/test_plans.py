@@ -415,3 +415,27 @@ def test_asof_nearest_keyed_single_exchange_two_sorts(spark):
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
             assert "user_id" in line, line
+
+
+def test_dfield_join_is_one_broadcast_join_without_literal_rows(spark):
+    # a 256² field takes the join path; its 66k-row corner relation must
+    # enter the plan as an RDD-backed leaf, not as LocalRelation rows
+    import numpy as np
+
+    from sed_spark.calibrator.momentum import apply_dfield
+
+    dfield = np.random.default_rng(3).uniform(0, 2048, (2, 256, 256))
+    events = spark.range(1000).select(
+        (F.col("id") * 2.0).alias("X"), F.lit(1.5).alias("Xm"),
+        (F.col("id") * 1.5).alias("Y"), F.col("id"),
+    )
+    out = apply_dfield(events, dfield)
+    logical = out._jdf.queryExecution().optimizedPlan().toString()
+    plan = _plan(out)
+    assert plan.count("BroadcastHashJoin") == 1
+    for leaf in ("LocalRelation", "LocalTableScan"):
+        assert leaf not in logical and leaf not in plan
+    # Xm keeps its position; Ym is appended
+    assert out.columns == ["X", "Xm", "Y", "id", "Ym"]
+    plain = apply_dfield(events.drop("Xm"), dfield)
+    assert plain.columns == ["X", "Y", "id", "Xm", "Ym"]

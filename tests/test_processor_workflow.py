@@ -115,3 +115,22 @@ def test_view_event_histogram_headless(spark):
     )
     assert set(hists) == {"t"}
     assert hists["t"].data.sum() == 500
+
+
+def test_momentum_correction_recorded_in_attributes(spark):
+    from sed_spark.calibrator.momentum import dfield_digest
+
+    pdf = pd.DataFrame({"X": [10.0, 200.0], "Y": [30.0, 40.0]})
+    proc = SedProcessor(spark=spark, config={"core": {"loader": "generic"}})
+    proc.load(dataframe=spark.createDataFrame(pdf))
+    dfield = np.stack(np.meshgrid(np.arange(8.0), np.arange(8.0), indexing="ij"))
+    proc.apply_momentum_correction(
+        dfield.astype(np.float32), detector_ranges=((0.0, 256.0), (0.0, 256.0)),
+    )
+    meta = proc.attributes.metadata["momentum_correction"]
+    assert meta == {
+        "applied": True,
+        "dfield_shape": [8, 8],
+        "detector_ranges": [[0.0, 256.0], [0.0, 256.0]],
+        "dfield_digest": dfield_digest(dfield),
+    }
