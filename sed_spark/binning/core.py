@@ -23,6 +23,10 @@ goes through BigDecimal and costs ~10x the rest of the expression combined.
 Explicit (non-uniform) edges use left-closed bins with the last edge
 inclusive (src/sed/binning/numba_bin.py:72-102).
 
+Per-axis jitter (reference binning.py:497-523) adds half a bin of noise
+hashed from the row id (:func:`sed_spark.dfops.jitter_noise`), so a fresh
+unseeded draw reuses the compiled stage of the previous one.
+
 Physical strategy (``bin_dataframe``) is chosen by output-cube size:
 
 * default (cube ≤ ``CHUNKED_MIN_CUBE`` cells): flat bin index →
@@ -56,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
 from sed_spark.binning.spec import BinAxis, bin_centers_to_bin_edges, normalize_bins
+from sed_spark.dfops import jitter_noise, jitter_salt, uniform_hash_expr
 
 __all__ = [
     "BinnedData",
@@ -159,6 +164,10 @@ def _axis_source_projection(
     collapse to a single Project. The companion half of the fix is
     :func:`bin_index_nullable` — no pre-aggregation filter exists for
     predicate pushdown to duplicate expressions into.
+
+    Each jittered axis draws its own :func:`sed_spark.dfops.jitter_noise`
+    (salt from ``jitter_seed + axis position``, or a fresh token when
+    ``jitter_seed`` is None).
     """
     sels: list[Column] = [F.col(c) for c in keep_cols]
     names: list[str] = []
@@ -182,18 +191,14 @@ def _axis_source_projection(
                         raise ValueError(
                             "seed_column jitter supports uniform mode only",
                         )
-                    from sed_spark.dfops import uniform_hash_expr
-
                     u = uniform_hash_expr(
                         seed_col,
                         salt=str(seed if seed is not None else i),
                         method=pars.get("hash_method", "xxhash64"),
                     )
                     noise = u * 2.0 - 1.0
-                elif mode == "uniform":
-                    noise = (F.rand(seed) if seed is not None else F.rand()) * 2.0 - 1.0
                 else:
-                    noise = F.randn(seed) if seed is not None else F.randn()
+                    noise = jitter_noise(mode, jitter_salt(seed))
                 src = src + F.lit(amp * binsize) * noise
         name = f"__src_{i}"
         sels.append(src.alias(name))
@@ -494,6 +499,28 @@ def bin_dataframe(
     binning.py:408,421. The physical path follows the cube size: the
     groupby path up to ``CHUNKED_MIN_CUBE`` cells, the chunked path above.
     """
+    return bin_dataframe_where(df, None, bins, axes, ranges, jitter, jitter_seed, dtype)
+
+
+def bin_dataframe_where(
+    df: DataFrame,
+    where: Column | None,
+    bins,
+    axes: Sequence[str] | None = None,
+    ranges: Sequence[tuple[float, float]] | None = None,
+    jitter=None,
+    jitter_seed: int | None = None,
+    dtype: str = "float32",
+) -> BinnedData:
+    """:func:`bin_dataframe` counting only the rows where ``where`` is true.
+
+    ``where`` is evaluated inside the bin-index projection, as
+    ``when(where, index)``: a failing (or null) row gets the -1
+    out-of-range sentinel. A ``df.filter(where)`` instead would be pushed
+    below the calibration projections by Catalyst, and each conjunct would
+    carry a copy of its column's expression (the dfield blend three times
+    per row for a two-sided cut on ``kx``; see :func:`bin_index_nullable`).
+    """
     norm = normalize_bins(bins, axes, ranges)
     shape = tuple(ax.nbins for ax in norm)
     cube = int(np.prod(shape))
@@ -502,8 +529,13 @@ def bin_dataframe(
             f"dense output of {cube} cells will not fit on the driver; "
             "use sparse_histogram instead",
         )
-    srcdf, snames = _axis_source_projection(df, norm, jitter, jitter_seed)
+    keep: list[str] = []
+    if where is not None:
+        df, keep = df.withColumn("__where", where), ["__where"]
+    srcdf, snames = _axis_source_projection(df, norm, jitter, jitter_seed, keep)
     flat = _flat_idx_expr(norm, snames)
+    if where is not None:
+        flat = F.when(F.col("__where"), flat)
     proj = srcdf.select(F.coalesce(flat, F.lit(-1).cast("long")).alias("__idx"))
     if cube <= CHUNKED_MIN_CUBE:
         dense = _dense_via_groupby(proj, cube, out_dtype=dtype)

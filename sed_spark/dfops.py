@@ -20,6 +20,7 @@ Scale notes
 from __future__ import annotations
 
 import math
+import secrets
 from collections.abc import Sequence
 
 import numpy as np
@@ -36,6 +37,7 @@ __all__ = [
     "forward_fill",
     "backward_fill",
     "offset_by_other_columns",
+    "range_condition",
     "add_time_stamped_data",
     "split_channel_bitwise",
     "split_dld_time_from_sector_id",
@@ -45,6 +47,8 @@ __all__ = [
     "asof_join",
     "point_in_interval_join",
     "interval_overlap_join",
+    "jitter_noise",
+    "jitter_salt",
     "salted_join",
     "skew_join",
     "skew_report",
@@ -55,6 +59,34 @@ __all__ = [
 # ---------------------------------------------------------------------------
 # filters / projections
 # ---------------------------------------------------------------------------
+
+def range_condition(
+    col: str,
+    lower_bound: float = -math.inf,
+    upper_bound: float = math.inf,
+    index_column: str | None = None,
+) -> Column | None:
+    """The predicate of :func:`apply_filter`: ``lower < col < upper``, or
+    None when both bounds are infinite.
+
+    Strict inequalities; a null value gives a null (failing) predicate;
+    NaN compares greater than every double in Spark, so it passes a lower
+    bound alone and fails any finite upper bound.
+    """
+    if col == "index":
+        if index_column is None:
+            raise ValueError(
+                "col='index' requires index_column naming the row-index column",
+            )
+        col = index_column
+    cond = None
+    if lower_bound != -math.inf:
+        cond = F.col(col) > F.lit(lower_bound)
+    if upper_bound != math.inf:
+        upper = F.col(col) < F.lit(upper_bound)
+        cond = upper if cond is None else (cond & upper)
+    return cond
+
 
 def apply_filter(
     df: DataFrame,
@@ -71,18 +103,7 @@ def apply_filter(
     index (``index_column``, e.g. ``event_id`` or a load-time row number),
     since Spark has no implicit index.
     """
-    if col == "index":
-        if index_column is None:
-            raise ValueError(
-                "col='index' requires index_column naming the row-index column",
-            )
-        col = index_column
-    cond = None
-    if lower_bound != -math.inf:
-        cond = F.col(col) > F.lit(lower_bound)
-    if upper_bound != math.inf:
-        upper = F.col(col) < F.lit(upper_bound)
-        cond = upper if cond is None else (cond & upper)
+    cond = range_condition(col, lower_bound, upper_bound, index_column)
     return df if cond is None else df.filter(cond)
 
 
@@ -110,15 +131,16 @@ def uniform_hash_expr(
     id_col: str, salt: str = "", method: str = "xxhash64",
 ) -> Column:
     """Deterministic uniform-[0,1) value from (id, salt) — the content-keyed
-    noise source of :func:`apply_jitter` and the binning jitter, and the
-    assignment primitive behind ``sed_spark.ext.corpus.hash_split`` and
-    ``rate_sample``.
+    noise source of :func:`apply_jitter`'s and the binning jitter's
+    ``seed_column`` option, and the assignment primitive behind
+    ``sed_spark.ext.corpus.hash_split`` and ``rate_sample``. The default
+    (statistical) jitter draws from :func:`jitter_noise` instead.
 
-    ``"xxhash64"`` (Spark-native, fastest): the signed 64-bit hash scaled
-    into [0, 1); double precision (53 bits of the hash) is ample.
-    ``"md5"``: the first 8 hex digits over 2^32 — slower per row, but any
-    engine with an md5 builtin reproduces it bit-for-bit (DuckDB in the
-    oracle, hashlib in tests).
+    ``"xxhash64"`` (Spark-native, fastest): the signed 64-bit hash of the
+    id's string form scaled into [0, 1); double precision (53 bits of the
+    hash) is ample. ``"md5"``: the first 8 hex digits over 2^32 — slower
+    per row, but any engine with an md5 builtin reproduces it bit-for-bit
+    (DuckDB in the oracle, hashlib in tests).
     """
     if method == "xxhash64":
         return (
@@ -140,27 +162,65 @@ def uniform_hash_expr(
     raise ValueError(f"unknown method {method!r}")
 
 
+def jitter_salt(seed: int | str | None) -> str:
+    """The hash salt of a jitter draw: ``str(seed)``, or a fresh random
+    token when ``seed`` is None."""
+    return secrets.token_hex(8) if seed is None else str(seed)
+
+
+def _hashed_uniform(salt: str) -> Column:
+    # the top 53 bits of xxhash64(row id, salt) as a double in [0, 1)
+    row_id = F.monotonically_increasing_id()
+    return F.shiftrightunsigned(F.xxhash64(row_id, F.lit(salt)), 11) * F.lit(2.0 ** -53)
+
+
+def jitter_noise(jitter_type: str, salt: str) -> Column:
+    """Unit jitter noise hashed from the row id
+    (``monotonically_increasing_id``): uniform on [-1, 1), or standard
+    normal (Box–Muller on two uniforms with different salts).
+
+    Spark's ``rand(seed)`` writes its seed into the generated Java as a
+    literal, so every fresh draw compiled a new class. Here the salt is a
+    string literal, which codegen keeps in the class's reference array, so
+    every draw reuses one compiled class. Like ``rand``, the expression is
+    nondeterministic to Catalyst, so project it as its own column: such a
+    projection is never inlined into its consumers, no filter is pushed
+    below it, and it is evaluated for every row, so the row-id instances
+    in it (two for a normal draw) count the same rows.
+    """
+    if jitter_type == "uniform":
+        return _hashed_uniform(salt) * 2.0 - 1.0
+    if jitter_type == "normal":
+        u1 = _hashed_uniform(salt + ":r")
+        u2 = _hashed_uniform(salt + ":a")
+        return F.sqrt(F.log1p(-u1) * -2.0) * F.cos(u2 * (2.0 * math.pi))
+    raise ValueError("jitter_type must be 'uniform' or 'normal'")
+
+
 def apply_jitter(
     df: DataFrame,
     cols: str | Sequence[str],
     cols_jittered: str | Sequence[str] | None = None,
     amps: float | Sequence[float] = 0.5,
     jitter_type: str = "uniform",
-    seed: int | None = None,
+    seed: int | str | None = None,
     seed_column: str | None = None,
     hash_method: str = "xxhash64",
 ) -> DataFrame:
     """Add jitter noise to one or more columns.
 
     Reference semantics (src/sed/core/dfops.py:17-71): ONE noise vector per
-    row shared across all listed columns; uniform noise covers [-amp, amp],
+    row shared across all listed columns; uniform noise covers [-amp, amp),
     normal noise has stdev ``amp``; default amplitude 0.5 (half a digital
-    step). Implemented as a single ``rand``/``randn`` column reused by every
-    target column — stays inside whole-stage codegen, no UDF.
+    step). Implemented as a single :func:`jitter_noise` column, hashed from
+    the row id and reused by every target column — stays inside
+    whole-stage codegen, no UDF, and the generated code does not depend on
+    the seed.
 
-    ``seed`` makes the draw reproducible per partition (Spark's ``rand`` is
-    deterministic given seed + partition layout — re-partitioning the input
-    changes the draw). ``seed_column`` switches uniform jitter to a
+    ``seed`` (salted as :func:`jitter_salt`) makes the draw reproducible on
+    the same partition layout (the row id is partition index and row
+    position, so re-partitioning the input changes the draw); ``None``
+    gives a fresh draw. ``seed_column`` switches uniform jitter to a
     CONTENT-KEYED draw: the noise is a pure function of (row key, seed)
     via :func:`uniform_hash_expr`, so results are
     identical across partitionings, cluster sizes, and engines
@@ -187,10 +247,8 @@ def apply_jitter(
             )
         u = uniform_hash_expr(seed_column, salt=str(seed or 0), method=hash_method)
         noise = u * 2.0 - 1.0
-    elif jitter_type == "uniform":
-        noise = (F.rand(seed) if seed is not None else F.rand()) * 2.0 - 1.0
     else:
-        noise = F.randn(seed) if seed is not None else F.randn()
+        noise = jitter_noise(jitter_type, jitter_salt(seed))
 
     tmp = "__sed_jitter_noise__"
     out = df.withColumn(tmp, noise)

@@ -24,6 +24,7 @@ from sed_spark.binning import (
     normalization_histogram_from_timed_dataframe,
     normalization_histogram_from_timestamps,
 )
+from sed_spark.binning.core import bin_dataframe_where
 from sed_spark.calibrator import delay as delay_cal
 from sed_spark.calibrator import energy as energy_cal
 from sed_spark.calibrator import momentum as momentum_cal
@@ -185,18 +186,36 @@ class SedProcessor:
     ) -> "SedProcessor":
         """In-place jitter on the listed columns, defaulting to the config's
         jitter_cols with @ aliases resolved
-        (reference src/sed/core/processor.py:1974-2025)."""
+        (reference src/sed/core/processor.py:1974-2025).
+
+        Records the columns, ``jitter_type``, per-column amplitudes and the
+        seed under ``jitter`` (a later call under ``jitter_1``, ...).
+        Without a seed it records the generated salt instead; passing it
+        back as ``seed`` redraws the same noise on the same partition
+        layout."""
         dfconf = self.config.get("dataframe", {})
         if cols is None:
             cols = dfconf.get("jitter_cols", [])
         if amps is None:
             amps = dfconf.get("jitter_amps", 0.5)
         cols = [self._col(c) for c in cols]
+        salt = dfops.jitter_salt(seed)
         self._dataframe = dfops.apply_jitter(
             self._dataframe, cols, cols_jittered=cols, amps=amps,
-            jitter_type=jitter_type, seed=seed,
+            jitter_type=jitter_type, seed=salt,
         )
-        self._attributes.add({"jitter": {"cols": cols}}, "jitter", "merge")
+        if isinstance(amps, (int, float)):
+            amps = [amps] * len(cols)
+        self._attributes.add(
+            {
+                "cols": cols,
+                "jitter_type": jitter_type,
+                "amps": [float(a) for a in amps],
+                "seed": salt if seed is None else seed,
+            },
+            "jitter",
+            duplicate_policy="append",
+        )
         return self
 
     def add_time_stamped_data(
@@ -310,26 +329,30 @@ class SedProcessor:
     ) -> BinnedData:
         """Run the N-D histogram (reference src/sed/core/processor.py:2150-2314).
 
+        ``filters`` are :func:`sed_spark.dfops.apply_filter` range cuts.
+        They are evaluated inside the bin-index projection
+        (:func:`sed_spark.binning.core.bin_dataframe_where`), so a cut on a
+        calibrated axis does not re-evaluate that axis's expression.
+
         ``max_file_id`` replaces the reference's partition pruning
-        (processor.py:2229-2235) with a ``file_id`` predicate. ``file_id``
-        is derived from ``input_file_name()``, which Spark cannot prune
-        on, so today the predicate filters rows after a scan of every
-        file.
+        (processor.py:2229-2235) with a ``file_id`` predicate, kept a real
+        filter so that it can prune files. ``file_id`` is derived from
+        ``input_file_name()``, which Spark cannot prune on, so today the
+        predicate filters rows after a scan of every file.
         """
         df = self._dataframe
         if max_file_id is not None:
             from pyspark.sql import functions as F
 
             df = df.filter(F.col("file_id") < max_file_id)
-        if filters:
-            for f in filters:
-                df = dfops.apply_filter(
-                    df,
-                    f["col"],
-                    f.get("lower_bound", -math.inf),
-                    f.get("upper_bound", math.inf),
-                )
-        result = bin_dataframe(df, bins, axes, ranges, **kwds)
+        where = None
+        for f in filters or ():
+            cut = dfops.range_condition(
+                f["col"], f.get("lower_bound", -math.inf), f.get("upper_bound", math.inf),
+            )
+            if cut is not None:
+                where = cut if where is None else (where & cut)
+        result = bin_dataframe_where(df, where, bins, axes, ranges, **kwds)
 
         if normalize_to_acquisition_time:
             axis = (

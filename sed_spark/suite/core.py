@@ -177,10 +177,10 @@ sql("hist_1d",
 
 
 # jitter + binning, ORACLE-CHECKED: the content-keyed draw (noise = a
-# pure function of the event id, not Spark's partition-layout-dependent
-# rand) makes the jittered histogram deterministic, so the row upgrades
+# pure function of the event id, not of the partition-layout-dependent
+# row id) makes the jittered histogram deterministic, so the row upgrades
 # from rows-only to a full hash-match — and the md5 hash method lets
-# DuckDB reproduce the identical noise. rand-based jitter remains the
+# DuckDB reproduce the identical noise. Row-id-hashed jitter remains the
 # statistical default (dfops.apply_jitter without seed_column) and is
 # exercised by the bench workflows.
 @q("hist_1d_jitter")

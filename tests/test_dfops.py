@@ -40,6 +40,59 @@ def test_jitter_normal(spark):
     assert abs(out["a_jittered"].std() - 2.0) < 0.1
 
 
+def _noise(df, **kw):
+    """Jitter a zero column and return the noise as float64 numpy."""
+    out = dfops.apply_jitter(df, "a", cols_jittered="j", **kw)
+    return out.select("j").toPandas()["j"].to_numpy(dtype=np.float64)
+
+
+@pytest.fixture(scope="module")
+def zeros_2e5(spark):
+    df = spark.range(200_000).select(F.lit(0.0).alias("a")).repartition(4).cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+def test_jitter_uniform_is_flat_and_bounded(zeros_2e5):
+    n, amp, nb = 200_000, 0.5, 20
+    v = _noise(zeros_2e5, amps=amp)
+    assert v.min() >= -amp and v.max() < amp
+    counts, _ = np.histogram(v, bins=nb, range=(-amp, amp))
+    p = 1.0 / nb
+    sigma = np.sqrt(n * p * (1 - p))
+    assert np.all(np.abs(counts - n * p) < 5 * sigma), counts
+
+
+def test_jitter_normal_moments(zeros_2e5):
+    n, amp = 200_000, 2.0
+    v = _noise(zeros_2e5, amps=amp, jitter_type="normal")
+    assert np.all(np.isfinite(v))
+    assert abs(v.mean()) < 5 * amp / np.sqrt(n)
+    assert abs(v.std() / amp - 1.0) < 0.05
+    z = (v - v.mean()) / v.std()
+    # sample kurtosis has standard error sqrt(24/n) ~ 0.011
+    assert abs(np.mean(z**4) - 3.0) < 0.1
+
+
+@pytest.mark.parametrize("jitter_type", ["uniform", "normal"])
+def test_unseeded_jitter_draws_are_uncorrelated(zeros_2e5, jitter_type):
+    both = dfops.apply_jitter(
+        dfops.apply_jitter(zeros_2e5, "a", cols_jittered="j1", jitter_type=jitter_type),
+        "a", cols_jittered="j2", jitter_type=jitter_type,
+    ).select("j1", "j2").toPandas()
+    assert abs(np.corrcoef(both["j1"], both["j2"])[0, 1]) < 0.02
+
+
+@pytest.mark.parametrize("jitter_type", ["uniform", "normal"])
+def test_jitter_seed_reproduces_its_draw(zeros_2e5, jitter_type):
+    a = _noise(zeros_2e5, jitter_type=jitter_type, seed=11)
+    b = _noise(zeros_2e5, jitter_type=jitter_type, seed=11)
+    c = _noise(zeros_2e5, jitter_type=jitter_type, seed=12)
+    np.testing.assert_array_equal(a, b)
+    assert np.count_nonzero(a != c) > 0.99 * len(a)
+
+
 @pytest.mark.parametrize("forward", [True, False])
 def test_fill_matches_pandas(spark, forward):
     rng = np.random.default_rng(0)

@@ -439,3 +439,45 @@ def test_dfield_join_is_one_broadcast_join_without_literal_rows(spark):
     assert out.columns == ["X", "Xm", "Y", "id", "Ym"]
     plain = apply_dfield(events.drop("Xm"), dfield)
     assert plain.columns == ["X", "Y", "id", "Xm", "Ym"]
+
+
+def test_compute_cuts_do_not_repeat_the_dfield_blend(spark, monkeypatch):
+    # compute's range cuts live in the bin-index projection: no Filter may
+    # carry the dfield blend (a pushed-down kx cut would repeat it per
+    # conjunct), while the max_file_id predicate stays a real Filter
+    import numpy as np
+
+    from sed_spark.binning import core
+    from sed_spark.processor import SedProcessor
+
+    seen = []
+    real = core._dense_via_groupby
+
+    def spy(proj, cube, out_dtype="uint32"):
+        seen.append(proj)
+        return real(proj, cube, out_dtype)
+
+    monkeypatch.setattr(core, "_dense_via_groupby", spy)
+    events = spark.createDataFrame(
+        [(2.0 * k, 1.5 * k, k % 4) for k in range(1000)], "X double, Y double, file_id int",
+    )
+    dfield = np.random.default_rng(3).uniform(0, 2048, (2, 256, 256))
+    proc = SedProcessor(spark=spark, config={"core": {"loader": "generic"}})
+    proc.load(dataframe=events)
+    proc.apply_momentum_correction(dfield)
+    proc.apply_momentum_calibration(
+        x_column="Xm", y_column="Ym", r_center=1024.0, c_center=1024.0,
+        r_conversion=0.01, c_conversion=0.01, r_start=0.0, c_start=0.0,
+        r_step=1.0, c_step=1.0,
+    )
+    proc.compute(
+        bins=[10], axes=["Y"], ranges=[(0.0, 1500.0)], max_file_id=3,
+        filters=[{"col": "kx", "lower_bound": -8.0, "upper_bound": 8.0},
+                 {"col": "ky", "lower_bound": -8.0, "upper_bound": 8.0}],
+    )
+    plan = _plan(seen[-1])
+    assert plan.count("BroadcastHashJoin") == 1
+    filters = [ln for ln in plan.splitlines() if ln.lstrip(" :+-*()0123456789").startswith("Filter")]
+    assert any("file_id" in ln for ln in filters), plan
+    for ln in filters:
+        assert "__fx" not in ln and "__fy" not in ln, ln

@@ -134,3 +134,98 @@ def test_momentum_correction_recorded_in_attributes(spark):
         "detector_ranges": [[0.0, 256.0], [0.0, 256.0]],
         "dfield_digest": dfield_digest(dfield),
     }
+
+
+def test_jitter_recorded_in_attributes(spark):
+    pdf = pd.DataFrame({"X": np.arange(50.0), "Y": np.arange(50.0)})
+    df = spark.createDataFrame(pdf)
+    proc = SedProcessor(spark=spark, config={"core": {"loader": "generic"}})
+    proc.load(dataframe=df)
+    proc.add_jitter(cols=["X", "Y"], amps=[0.25, 0.5], jitter_type="normal", seed=5)
+    proc.add_jitter(cols=["X"], amps=0.5)
+    meta = proc.attributes.metadata
+    assert meta["jitter"] == {
+        "cols": ["X", "Y"], "jitter_type": "normal", "amps": [0.25, 0.5], "seed": 5,
+    }
+    unseeded = meta["jitter_1"]
+    assert unseeded["jitter_type"] == "uniform" and unseeded["amps"] == [0.5]
+    # an unseeded call records its generated salt, which redraws its noise
+    assert isinstance(unseeded["seed"], str) and len(unseeded["seed"]) == 16
+    again = SedProcessor(spark=spark, config={"core": {"loader": "generic"}})
+    again.load(dataframe=df)
+    again.add_jitter(cols=["X", "Y"], amps=[0.25, 0.5], jitter_type="normal", seed=5)
+    again.add_jitter(cols=["X"], amps=0.5, seed=unseeded["seed"])
+    assert proc.dataframe.collect() == again.dataframe.collect()
+
+
+def _compilations(spark) -> int:
+    """Janino compilations so far in this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_fresh_unseeded_jitter_reuses_compiled_code(spark):
+    # the noise seed is not in the generated code: after one warm chain, a
+    # chain with a fresh unseeded draw compiles no new class
+    from sed_spark.binning import bin_dataframe
+
+    rng = np.random.default_rng(4)
+    pdf = pd.DataFrame({c: rng.uniform(0, 256, 4000) for c in ("X", "Y", "t")})
+    events = spark.createDataFrame(pdf).repartition(2).cache()
+    events.count()
+    g = np.arange(32) * 8.0
+    dfield = np.stack(np.meshgrid(g + 1.0, g - 1.0, indexing="ij"))
+    cuts = [{"col": "Xm", "lower_bound": 10.0, "upper_bound": 200.0}]
+
+    def chain():
+        proc = SedProcessor(spark=spark, config={"core": {"loader": "generic"}})
+        proc.load(dataframe=events)
+        proc.add_jitter(cols=["X", "Y", "t"])
+        proc.apply_momentum_correction(
+            dfield, detector_ranges=((0.0, 256.0), (0.0, 256.0)),
+        )
+        return proc.compute(bins=[50], axes=["t"], ranges=[(0.0, 256.0)], filters=cuts)
+
+    def binned():
+        return bin_dataframe(events, [40, 40], ["X", "Y"], [(0.0, 256.0)] * 2,
+                             jitter={"X": None, "Y": {"mode": "normal"}})
+
+    try:
+        for run in (chain, binned):
+            run()  # warm
+            before = _compilations(spark)
+            res = run()
+            assert _compilations(spark) - before == 0, run.__name__
+            assert res.sum() > 0
+    finally:
+        events.unpersist()
+
+
+def test_compute_cuts_match_apply_filter(spark):
+    # cuts folded into the bin index keep apply_filter's semantics: strict
+    # bounds, null fails, NaN passes a lone lower bound and fails an upper
+    from sed_spark import dfops
+    from sed_spark.binning import bin_dataframe
+
+    nan = float("nan")
+    vals = [None, nan, -1.0, 0.0, 0.5, 1.0, 2.0, 3.0, 4.0, 5.0]
+    rows = [(float(i % 6), v) for i in range(40) for v in vals]
+    df = spark.createDataFrame(rows, "e double, c double")
+    proc = SedProcessor(spark=spark, config={"core": {"loader": "generic"}})
+    proc.load(dataframe=df)
+    cases = [
+        [{"col": "c", "lower_bound": 0.0, "upper_bound": 3.0}],
+        [{"col": "c", "lower_bound": 0.0}],
+        [{"col": "c", "upper_bound": 3.0}],
+        [{"col": "c"}],
+        [{"col": "c", "lower_bound": -2.0}, {"col": "e", "upper_bound": 4.0}],
+    ]
+    args = ([6], ["e"], [(0.0, 6.0)])
+    for filters in cases:
+        want = df
+        for f in filters:
+            want = dfops.apply_filter(want, f["col"], f.get("lower_bound", -np.inf),
+                                      f.get("upper_bound", np.inf))
+        got = proc.compute(*args, filters=filters)
+        np.testing.assert_array_equal(got.data, bin_dataframe(want, *args).data)
+    assert proc.compute(*args, filters=cases[1]).sum() == 40 * 7

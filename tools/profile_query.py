@@ -1,7 +1,9 @@
 """Per-query profiling harness for optimization rounds.
 
 Times one suite query through the noop sink (same methodology as bench.py
-phase 3) and writes its ``explain("formatted")`` to
+phase 3), counts the janino compilations each rep made (Spark's
+``CodegenMetrics`` compilation counter: a rep that misses the codegen cache
+shows a nonzero count), and writes its ``explain("formatted")`` to
 ``plans/<tag>/<name>_<suffix>.txt``.
 
 Usage:
@@ -50,14 +52,17 @@ def main() -> None:
             "spark.log.level": "ERROR",
         },
     )
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
     plans_dir = os.path.join(REPO, "plans", args.tag)
     os.makedirs(plans_dir, exist_ok=True)
 
     for name in args.queries:
         spec = suite.REGISTRY[name]
-        reps = []
+        reps, compiled = [], []
         for i in range(args.reps):
             spark.sparkContext.setJobDescription(f"profile:{name}:build")
+            c0 = compilations.getCount()
             t0 = time.perf_counter()
             df = spec["spark"](spark, sf_dir)
             t1 = time.perf_counter()
@@ -74,8 +79,10 @@ def main() -> None:
             df.write.mode("overwrite").format("noop").save()
             t3 = time.perf_counter()
             reps.append((round(t1 - t0, 3), round(t3 - t2, 3)))
+            compiled.append(compilations.getCount() - c0)
         tot = [round(b + e, 3) for b, e in reps]
-        print(f"{name}: (build,exec) reps={reps} total_min={min(tot)}")
+        print(f"{name}: (build,exec) reps={reps} total_min={min(tot)} "
+              f"compilations={compiled}")
     spark.stop()
 
 
