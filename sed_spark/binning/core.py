@@ -9,9 +9,8 @@ src/sed/binning/numba_bin.py) — collapses in Spark to ONE declarative job:
 Catalyst/Tungsten provide column pruning to the parquet scan, whole-stage
 codegen of the floor expressions, map-side partial aggregation, and a shuffle
 whose width AQE sizes at runtime. The sparse (bin, count) result is collected
-and densified on the driver; for event data the number of OCCUPIED bins is
-bounded by the cube size, orders of magnitude below the event count, so the
-collect is small even at 100 TB input.
+and densified on the driver; it holds one row per OCCUPIED bin, so its size
+is bounded by the cube, not by the event count.
 
 Bin-index semantics replicate the reference kernel
 (src/sed/binning/numba_bin.py:53-61): ``j = round((x-lo)*1/width, 11)``
@@ -27,29 +26,18 @@ Per-axis jitter (reference binning.py:497-523) adds half a bin of noise
 hashed from the row id (:func:`sed_spark.dfops.jitter_noise`), so a fresh
 unseeded draw reuses the compiled stage of the previous one.
 
-Physical strategy (``bin_dataframe``) is chosen by output-cube size:
-
-* default (cube ≤ ``CHUNKED_MIN_CUBE`` cells): flat bin index →
-  ``groupBy.count()`` → sparse Arrow collect → driver scatter. The whole
-  reduction is JVM-side (whole-stage codegen + Tungsten hash/sort
-  aggregate); ``toArrow`` encodes result partitions to Arrow IPC **in
-  parallel on the executors**, so the driver only concatenates buffers and
-  does one vectorized ``dense[idx] = cnt``. Measured on 1e8 rows → 100⁴
-  cells this is ~2.5× faster than any path that streams raw rows into
-  Python: the JVM→Python Arrow feed alone costs more than the entire
-  aggregation (~15 s vs ~9 s total at local[32]).
-* huge cube (> ``CHUNKED_MIN_CUBE``): the sparse collect can exceed the
-  dense array's own size (occupancy × 12 B vs cube × 4 B), so each task
-  sort-deduplicates its flat indices with ``np.unique``, packs sparse
-  (idx, count) pairs into per-chunk blobs, and a second stage keyed on
-  chunk id reduces them to dense sub-arrays — the driver collect is then
-  exactly cube-sized regardless of occupancy. This pays the Python Arrow
-  feed, which is why it is reserved for cubes where the sparse collect
-  would not fit.
+Dense output (``bin_dataframe``) has one physical plan: a flat row-major
+bin index → partial count per map task → one hash exchange on the index at
+the session's shuffle partitions (AQE coalesces them) → final count →
+sparse Arrow collect → one vectorized ``dense[idx] = cnt`` on the driver.
+The reduction never leaves the JVM; ``toArrow`` encodes the result
+partitions on the executors. Cubes above 512M cells are refused before any
+Spark job; ``sparse_histogram`` serves them without densifying.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 from typing import Any
@@ -258,17 +246,6 @@ def sparse_histogram(
     return agg, norm, bin_names
 
 
-# above this many output cells the worst-case sparse driver collect
-# (occupancy × 12 B) outgrows the dense cube itself and the chunked
-# dense-sub-array path wins despite paying the JVM→Python Arrow feed
-CHUNKED_MIN_CUBE = 512_000_000
-
-# target hash-agg entries per reducer in _dense_via_groupby; a table much
-# beyond ~2e5 entries lives long enough to hit old-gen GC (sweep numbers
-# in the _dense_via_groupby docstring)
-GROUPBY_CELLS_PER_REDUCER = 195_000
-
-
 def _flat_idx_expr(
     axes: list[BinAxis],
     source_names: Sequence[str],
@@ -285,60 +262,17 @@ def _flat_idx_expr(
     return flat
 
 
-def _groupby_sparse_agg(proj: DataFrame, cube: int) -> DataFrame:
-    """The groupby path's sparse-aggregate plan: ``(__idx, __cnt)``.
+def _groupby_sparse_agg(proj: DataFrame) -> DataFrame:
+    """The sparse aggregate ``(__idx, __cnt)`` of the flat index column.
 
-    Split out of :func:`_dense_via_groupby` so the physical plan is
-    plan-assertable (tests/test_plans.py pins the single-exchange
-    contract of the block-partitioned shape).
+    Partial count per map task, one ``hashpartitioning(__idx)`` exchange at
+    the session's shuffle partitions, final count. Split out of
+    :func:`_dense_via_groupby` so tests/test_plans.py can assert the plan.
     """
-    idx_t = "int" if cube <= np.iinfo(np.int32).max else "long"
-    spark = proj.sparkSession
-    try:
-        default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # "auto" on some deployments
-        default = spark.sparkContext.defaultParallelism
-    keyed = proj.select(F.col("__idx").cast(idx_t).alias("__idx"))
-    group_cols = ["__idx"]
-    want = min(1024, cube // GROUPBY_CELLS_PER_REDUCER)
-    if want > default:
-        # partition by CONTIGUOUS index blocks rather than raw idx
-        # hash: each reducer's output then covers a few contiguous
-        # cube regions, so the driver's scatter below streams through
-        # small windows of the dense array instead of random-storing
-        # across all 400 MB (measured 2.3 s -> 0.85 s on the 1e8-row
-        # 100^4 bench; collect time unchanged). 32 blocks per reducer
-        # keeps the block->reducer hash assignment balanced. The
-        # block id joins the grouping keys, so HashPartitioning on it
-        # still satisfies the aggregate's clustering requirement —
-        # no second exchange (plan-asserted).
-        #
-        # Out-of-range rows (the -1 sentinel) get a SPREAD block id
-        # (round 12, guide §2.5 single-giant-key skew): the bare
-        # repartition has no map-side partial aggregation, so every
-        # sentinel row shuffles, and with blk = idx/span they ALL
-        # hashed to one reducer — on the 1e8-row 4-D momentum
-        # workflow (26.5% out-of-range after the kx/ky/energy/delay
-        # range cuts) that one task fetched 26.5M extra rows while
-        # 511 idled, and the full path measured 11.9 s vs 6.0 s with
-        # the sentinel group spread by map-partition id (driver
-        # scatter drops idx < 0 regardless, so the result is
-        # bit-identical — verified). A pre-shuffle filter instead is
-        # NOT safe: predicate pushdown inlines the whole flat-index
-        # tree below the axis staging and the 4-D workflow measured
-        # 88 s interpreted (see plans/r12/).
-        span = max(1, cube // (32 * want))
-        blk = F.when(
-            F.col("__idx") >= 0,
-            (F.col("__idx") / F.lit(span)).cast("int"),
-        ).otherwise(-(F.spark_partition_id() + 1))
-        keyed = keyed.select(
-            "__idx", blk.alias("__blk"),
-        ).repartition(want, "__blk")
-        group_cols = ["__blk", "__idx"]
-    return keyed.groupBy(*group_cols).agg(
+    keyed = proj.select(F.col("__idx").cast("int").alias("__idx"))
+    return keyed.groupBy("__idx").agg(
         F.count(F.lit(1)).cast("int").alias("__cnt"),
-    ).select("__idx", "__cnt")
+    )
 
 
 def _dense_via_groupby(
@@ -346,140 +280,18 @@ def _dense_via_groupby(
 ) -> np.ndarray:
     """JVM hash aggregate, sparse Arrow collect, flat scatter.
 
-    ``toArrow`` Arrow-encodes the aggregated partitions on the executors in
-    parallel; int32 index + count halve the wire size (counts above 2^31
-    per single bin would need >2e9 rows in one bin — re-widen if that day
-    comes).
-
-    The aggregation's reducer count is sized from the cube: near-full
-    occupancy means up to ``cube`` distinct groups, and a reducer hash
-    table much beyond ~2e5 entries lives long enough to hit old-gen GC.
-    Measured on the 1e8-row 100^4 bench (local[32]): 64 reducers →
-    17-48 s run-to-run; interleaved warm min-of-4: 250 → 7.5 s (outliers
-    to 27 s), 512 → 7.2 s (tightest spread), 769 → 6.5 s (spread to
-    12 s) — hence the ~195k-cells-per-reducer target
-    (``GROUPBY_CELLS_PER_REDUCER``); past ~8 s the remaining variance
-    is this VM's GC/scheduling noise, not plan shape. The count is
-    expressed
-    PER-QUERY as an explicit ``repartition(want, "__idx")`` below the
-    aggregate — no session-conf set/restore, so concurrent queries on
-    the same session are unaffected. ``HashPartitioning(__idx, want)``
-    satisfies the aggregate's clustered-distribution requirement, so
-    EnsureRequirements inserts no second exchange; the trade is that the
-    exchange moves raw keys instead of map-side partials, which at the
-    occupancies where the override kicks in (> ~25M cells ⇒ near-unique
-    keys per map task) is the same volume — measured equal-or-better
-    (see the sweep numbers above). Small cubes skip the repartition and
-    keep the normal partial→exchange→final plan under the session
-    default. AQE may still coalesce by size afterwards.
-
-    Caveat: the trigger is CUBE size, not actual occupancy. A large cube
-    whose data concentrates in few bins (a sharp peak) shuffles raw rows
-    onto few reducers here, where the plain plan's map-side combine would
-    have collapsed them first."""
-    agg = _groupby_sparse_agg(proj, cube)
-    # allocate straight in the caller's output dtype: assigning the
-    # sparse (idx, cnt) pairs casts on write — bit-identical to the old
-    # uint32-then-astype shape but skips a full read+write pass over the
-    # cube (measured 2.5-3.5 s of pure driver time on a 1e8-cell cube,
-    # the single largest fixed cost of the 100^4 bench metrics)
+    ``toArrow`` Arrow-encodes the aggregated partitions on the executors;
+    int32 index and count keep the collect at 8 bytes per occupied bin (a
+    count above 2^31 would need more than 2e9 rows in one bin). The dense
+    array is allocated in the caller's dtype, so the scatter casts on write
+    instead of costing a second pass over the cube.
+    """
     dense = np.zeros(cube, dtype=out_dtype)
-    for batch in agg.toArrow().to_batches():
+    for batch in _groupby_sparse_agg(proj).toArrow().to_batches():
         idx = batch.column(0).to_numpy(zero_copy_only=False)
         cnt = batch.column(1).to_numpy(zero_copy_only=False)
         ok = idx >= 0  # -1 sentinel group = out-of-range rows
         dense[idx[ok]] = cnt[ok]  # groupBy keys are globally unique
-    return dense
-
-
-def _dense_via_chunks(
-    proj: DataFrame, cube: int, out_dtype="uint32",
-) -> np.ndarray:
-    """Large cube: per-task sort-unique → chunked blob shuffle → dense chunks.
-
-    Replaces the reference's per-partition Numba kernels + striped tree-sum
-    (src/sed/binning/binning.py:317-397) with two Arrow-batched map stages:
-    no task ever allocates the full cube, shuffle volume is the summed task
-    occupancy, and the driver receives exactly one dense sub-array per chunk.
-    """
-    import pyarrow as pa
-
-    parallelism = proj.sparkSession.sparkContext.defaultParallelism
-    # chunk span: small enough for cheap reduce-side accumulators, large
-    # enough that blob-per-chunk overhead stays negligible
-    nchunks = min(max(2 * parallelism, 64), max(1, cube // 65536))
-    span = (cube + nchunks - 1) // nchunks
-    # int32 indices halve both Arrow transfer and shuffle volume
-    idx_dtype = np.int32 if cube <= np.iinfo(np.int32).max else np.int64
-    if idx_dtype is np.int32:
-        proj = proj.select(F.col("__idx").cast("int").alias("__idx"))
-
-    def to_pairs(batches):
-        chunks = [b.column(0).to_numpy(zero_copy_only=False) for b in batches]
-        if not chunks:
-            return
-        idx = np.concatenate(chunks) if len(chunks) > 1 else chunks[0]
-        idx = idx[idx >= 0]  # drop the -1 out-of-range sentinel
-        if len(idx) == 0:
-            return
-        nz, cnt = np.unique(idx, return_counts=True)  # sorted ascending
-        nz = nz.astype(idx_dtype, copy=False)
-        cnt32 = cnt.astype(np.int32)
-        bounds = np.searchsorted(nz, np.arange(1, nchunks + 1) * span)
-        start = 0
-        chunk_ids, ivs, cvs = [], [], []
-        for c, stop in enumerate(bounds):
-            if stop > start:
-                chunk_ids.append(c)
-                ivs.append(nz[start:stop].tobytes())
-                cvs.append(cnt32[start:stop].tobytes())
-            start = stop
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(chunk_ids, pa.int32()),
-                pa.array(ivs, pa.large_binary()),
-                pa.array(cvs, pa.large_binary()),
-            ],
-            ["ch", "iv", "cv"],
-        )
-
-    def combine(batches):
-        acc: dict[int, np.ndarray] = {}
-        for b in batches:
-            chs = b.column(0).to_numpy(zero_copy_only=False)
-            ivs, cvs = b.column(1), b.column(2)
-            for k in range(len(chs)):
-                c = int(chs[k])
-                iv = np.frombuffer(ivs[k].as_py(), dtype=idx_dtype)
-                cv = np.frombuffer(cvs[k].as_py(), dtype=np.int32)
-                arr = acc.get(c)
-                if arr is None:
-                    # the last chunk covers cube - c*span < span cells
-                    arr = acc[c] = np.zeros(
-                        min(span, cube - c * span), dtype=np.uint64,
-                    )
-                arr[iv - c * span] += cv.astype(np.uint64)
-        for c, arr in acc.items():
-            # uint32 on the wire, like the reference's accumulator
-            # (numba_bin.py:43) — halves the driver collect
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([c], pa.int32()),
-                 pa.array([arr.astype(np.uint32).tobytes()], pa.large_binary())],
-                ["ch", "data"],
-            )
-
-    pairs = proj.select("__idx").mapInArrow(to_pairs, "ch int, iv binary, cv binary")
-    nred = min(nchunks, 2 * parallelism)
-    reduced = pairs.repartition(nred, "ch").mapInArrow(combine, "ch int, data binary")
-    tbl = reduced.toArrow()
-    dense = np.zeros(cube, dtype=out_dtype)  # cast-on-write, see groupby
-    data_col = tbl.column("data")
-    for i, c in enumerate(tbl.column("ch").to_pylist()):
-        # zero-copy view into the Arrow buffer; copies once into `dense`
-        chunk = np.frombuffer(data_col[i].as_buffer(), dtype=np.uint32)
-        lo = c * span
-        n = min(len(chunk), cube - lo)  # defensive trim for the last chunk
-        dense[lo:lo + n] = chunk[:n]
     return dense
 
 
@@ -496,8 +308,8 @@ def bin_dataframe(
 
     Spark equivalent of the reference's ``bin_dataframe``
     (src/sed/binning/binning.py:200-427). The final cast to float32 follows
-    binning.py:408,421. The physical path follows the cube size: the
-    groupby path up to ``CHUNKED_MIN_CUBE`` cells, the chunked path above.
+    binning.py:408,421. A cube above 512M cells raises ``ValueError``
+    before any Spark job; use :func:`sparse_histogram` for those.
     """
     return bin_dataframe_where(df, None, bins, axes, ranges, jitter, jitter_seed, dtype)
 
@@ -523,11 +335,13 @@ def bin_dataframe_where(
     """
     norm = normalize_bins(bins, axes, ranges)
     shape = tuple(ax.nbins for ax in norm)
-    cube = int(np.prod(shape))
-    if cube * 4 > 2**33:
+    cube = math.prod(shape)
+    # the dense float32 cube and a full-occupancy sparse collect each take
+    # 2-4 GB of driver heap here, and every flat index still fits int32
+    if cube > 512_000_000:
         raise ValueError(
-            f"dense output of {cube} cells will not fit on the driver; "
-            "use sparse_histogram instead",
+            f"dense cube of {cube} cells {shape} exceeds the 512000000-cell "
+            "limit of bin_dataframe; use sparse_histogram instead",
         )
     keep: list[str] = []
     if where is not None:
@@ -537,15 +351,10 @@ def bin_dataframe_where(
     if where is not None:
         flat = F.when(F.col("__where"), flat)
     proj = srcdf.select(F.coalesce(flat, F.lit(-1).cast("long")).alias("__idx"))
-    if cube <= CHUNKED_MIN_CUBE:
-        dense = _dense_via_groupby(proj, cube, out_dtype=dtype)
-    else:
-        dense = _dense_via_chunks(proj, cube, out_dtype=dtype)
+    dense = _dense_via_groupby(proj, cube, out_dtype=dtype)
     coords = {ax.name: ax.bin_centers() for ax in norm}
     return BinnedData(
-        # builders already produced `dtype`; astype(copy=False) is a no-op
-        # kept as the contract guard
-        data=dense.reshape(shape).astype(dtype, copy=False),
+        data=dense.reshape(shape),
         dims=[ax.name for ax in norm],
         coords=coords,
         attrs={"units": "counts"},

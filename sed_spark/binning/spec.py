@@ -73,6 +73,11 @@ def bin_edges_to_bin_centers(edges: np.ndarray) -> np.ndarray:
     return (edges[1:] + edges[:-1]) / 2
 
 
+def _spec_error(axis: str, message: str) -> ValueError:
+    # numpy.histogramdd's wording where it has one, prefixed by the axis
+    return ValueError(f"axis {axis!r}: {message}")
+
+
 def normalize_bins(
     bins,
     axes: Sequence[str] | None = None,
@@ -83,6 +88,9 @@ def normalize_bins(
 
     ``shift_half_binwidth`` applies the reference's center-alignment shift
     for integer-count specs; pass False to treat ranges as literal edges.
+    A non-positive bin count, a range that is not finite or has
+    ``lo >= hi``, and centers that are fewer than 2, not finite or not
+    strictly increasing raise ``ValueError`` naming the axis.
     """
     if isinstance(bins, dict):
         axes = list(bins.keys())
@@ -125,9 +133,15 @@ def normalize_bins(
             raise ValueError("ranges required when bins are integers")
         if len(ranges) != len(axes):
             raise ValueError("axes and ranges must have the same number of elements")
-        for name, nb, (lo, hi) in zip(axes, bins, ranges):
+        for i, (name, nb, (lo, hi)) in enumerate(zip(axes, bins, ranges)):
             nb = int(nb)
             lo, hi = float(lo), float(hi)
+            if nb <= 0:
+                raise _spec_error(name, f"`bins[{i}]` must be positive, when an integer")
+            if not (np.isfinite(lo) and np.isfinite(hi)):
+                raise _spec_error(name, f"supplied range of [{lo}, {hi}] is not finite")
+            if lo >= hi:
+                raise _spec_error(name, "max must be larger than min in range parameter")
             if shift_half_binwidth:
                 half = (hi - lo) / nb / 2
                 lo, hi = lo - half, hi - half
@@ -135,7 +149,16 @@ def normalize_bins(
         return out
 
     if all(isinstance(b, np.ndarray) for b in bins):
-        for name, centers in zip(axes, bins):
+        for i, (name, centers) in enumerate(zip(axes, bins)):
+            centers = np.asarray(centers, dtype=np.float64)
+            if centers.ndim != 1 or len(centers) < 2:
+                raise _spec_error(name, f"`bins[{i}]` must hold at least 2 bin centers")
+            if not np.all(np.isfinite(centers)):
+                raise _spec_error(name, f"`bins[{i}]` must be finite")
+            if not np.all(np.diff(centers) > 0):
+                raise _spec_error(
+                    name, f"`bins[{i}]` must be monotonically increasing, when an array",
+                )
             edges = bin_centers_to_bin_edges(centers)
             out.append(
                 BinAxis(

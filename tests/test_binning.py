@@ -4,6 +4,8 @@ Mirrors the reference's kernel-vs-oracle strategy
 (reference tests/test_binning.py:80-175: numba kernel asserted against
 np.histogramdd)."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -11,7 +13,6 @@ from pyspark.sql import functions as F
 from sed_spark.binning import bin_dataframe, normalize_bins
 from sed_spark.binning.core import (
     _axis_source_projection,
-    _dense_via_chunks,
     _dense_via_groupby,
     _flat_idx_expr,
 )
@@ -87,7 +88,7 @@ def test_exact_last_edge(spark):
 
 
 def _flat_index_frame(df, bins, axes, ranges):
-    """The ``__idx`` projection ``bin_dataframe`` feeds its dense builders."""
+    """The ``__idx`` projection ``bin_dataframe`` feeds its dense builder."""
     norm = normalize_bins(bins, axes, ranges)
     srcdf, snames = _axis_source_projection(df, norm, None, None)
     flat = _flat_idx_expr(norm, snames)
@@ -95,7 +96,7 @@ def _flat_index_frame(df, bins, axes, ranges):
 
 
 def test_methods_agree_4d(events_df, events_pdf):
-    """Both physical strategies (groupby, chunked) produce the numpy cube."""
+    """The dense builder produces the numpy cube."""
     bins = [12, 12, 12, 12]
     ranges = [(0.0, 2048.0), (0.0, 2048.0), (60_000.0, 120_000.0),
               (2_000.0, 20_000.0)]
@@ -107,21 +108,36 @@ def test_methods_agree_4d(events_df, events_pdf):
         events_pdf[axes].to_numpy(), bins=bins, range=shifted_ranges(bins, ranges),
     )
     np.testing.assert_allclose(a, ref)
-    b = _dense_via_chunks(proj, cube, out_dtype="float32").reshape(bins)
-    np.testing.assert_array_equal(a, b)
 
 
-def test_chunked_non_divisible_cube(events_df, events_pdf):
-    """51^3 = 132651 cells -> nchunks=2, span=66326, last chunk is one cell
-    short of span: the combine/assembly path must trim, not broadcast-error."""
+def test_odd_cube_matches_numpy(events_df, events_pdf):
+    """51^3 = 132651 cells, no power-of-two axis: the flat row-major index
+    and the scatter land every count in numpy's cell."""
     bins = [51, 51, 51]
     ranges = [(0.0, 2048.0), (0.0, 2048.0), (60_000.0, 120_000.0)]
     axes = ["X", "Y", "t"]
     proj = _flat_index_frame(events_df, bins, axes, ranges)
     cube = int(np.prod(bins))
-    a = _dense_via_groupby(proj, cube, out_dtype="float32")
-    b = _dense_via_chunks(proj, cube, out_dtype="float32")
-    np.testing.assert_array_equal(a, b)
+    a = _dense_via_groupby(proj, cube, out_dtype="float32").reshape(bins)
+    ref, _ = np.histogramdd(
+        events_pdf[axes].to_numpy(), bins=bins, range=shifted_ranges(bins, ranges),
+    )
+    np.testing.assert_array_equal(a, ref)
+
+
+def test_oversized_cube_raises_before_any_job(spark):
+    axes = ["a", "b", "c", "d"]
+    df = spark.range(10).selectExpr(*[f"CAST(id AS DOUBLE) AS {a}" for a in axes])
+    tracker = spark.sparkContext.statusTracker()
+    df.count()  # the frame itself is fine
+    before = tracker.getJobIdsForGroup(None)
+    # 22628 x 22627 cells is just above the limit; 65536^4 = 2^64 cells
+    # wraps to 0 in an int64 product
+    for bins, cells in [([22_628, 22_627], 512_003_756), ([65_536] * 4, 2**64)]:
+        with pytest.raises(ValueError, match=rf"{cells} cells .*512000000-cell.*sparse_histogram"):
+            bin_dataframe(df, bins=bins, axes=axes[:len(bins)],
+                          ranges=[(0.0, 10.0)] * len(bins))
+    assert tracker.getJobIdsForGroup(None) == before
 
 
 def test_jitter_binning_total_preserved(events_df):
@@ -148,6 +164,29 @@ def test_normalize_bins_errors():
         normalize_bins(10, axes=["t"])  # no ranges
     with pytest.raises(ValueError):
         normalize_bins([10, 10], axes=["t"], ranges=[(0, 1), (0, 1)])
+
+
+@pytest.mark.parametrize(
+    ("bins", "ranges", "message"),
+    [
+        ([0], [(0.0, 1.0)], "'t': `bins[0]` must be positive, when an integer"),
+        ([-3], [(0.0, 1.0)], "'t': `bins[0]` must be positive, when an integer"),
+        ([(0.0, 1.0, 0)], None, "'t': `bins[0]` must be positive, when an integer"),
+        ([10], [(10.0, 0.0)], "'t': max must be larger than min in range parameter"),
+        ([10], [(5.0, 5.0)], "'t': max must be larger than min in range parameter"),
+        ([10], [(np.nan, 1.0)], "'t': supplied range of [nan, 1.0] is not finite"),
+        ([10], [(0.0, np.inf)], "'t': supplied range of [0.0, inf] is not finite"),
+        ([np.array([1.0])], None, "'t': `bins[0]` must hold at least 2 bin centers"),
+        ([np.array([1.0, 0.5, 2.0])], None,
+         "'t': `bins[0]` must be monotonically increasing, when an array"),
+        ([np.array([1.0, 1.0, 2.0])], None,
+         "'t': `bins[0]` must be monotonically increasing, when an array"),
+        ([np.array([0.0, 1.0, np.inf])], None, "'t': `bins[0]` must be finite"),
+    ],
+)
+def test_normalize_bins_rejects_bad_specs(bins, ranges, message):
+    with pytest.raises(ValueError, match=re.escape(message)):
+        normalize_bins(bins, axes=["t"], ranges=ranges)
 
 
 # ---------------------------------------------------------------------------

@@ -1,53 +1,10 @@
-"""PII detection/redaction and Gopher-style repetition statistics."""
+"""Gopher-style repetition statistics and the quality gate."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from sed_spark.ext.pii import pii_redact, pii_stats
 from sed_spark.ext.text import repetition_stats
-
-
-def test_pii_stats_counts(spark):
-    rows = [
-        (0, "reach me at a.b+c@mail.example.org or x@y.io thanks"),
-        (1, "server 192.168.1.10 and 10.0.0.1 are up"),
-        (2, "call 555-123-4567 or 555.987.6543 today"),
-        (3, "no pii here at all"),
-        (4, "mixed bob@corp.com from 172.16.254.3 call 800-555-0199"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {
-        r["doc_id"]: (r["n_emails"], r["n_ipv4"], r["n_phones"])
-        for r in pii_stats(df).collect()
-    }
-    assert got == {
-        0: (2, 0, 0),
-        1: (0, 2, 0),
-        2: (0, 0, 2),
-        3: (0, 0, 0),
-        4: (1, 1, 1),
-    }
-
-
-def test_pii_redact_replaces_all_and_keeps_clean_text(spark):
-    rows = [
-        (0, "bob@corp.com then 10.0.0.1 then 555-123-4567 end"),
-        (1, "nothing sensitive"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {r["doc_id"]: r["redacted"] for r in pii_redact(df).collect()}
-    assert got[0] == "<EMAIL> then <IP> then <PHONE> end"
-    assert got[1] == "nothing sensitive"
-
-
-def test_pii_phone_not_half_matched_as_ip(spark):
-    # a dotted phone has two dots; the 3-dot IPv4 pattern must not
-    # consume part of it before the phone pass runs
-    df = spark.createDataFrame([(0, "dial 555.123.4567 now")], ["doc_id", "text"])
-    row = pii_redact(df).collect()[0]
-    assert row["redacted"] == "dial <PHONE> now"
-    assert (row["n_ipv4"], row["n_phones"]) == (0, 1)
 
 
 def test_repetition_stats_known_values(spark):
@@ -96,17 +53,6 @@ def test_repetition_matches_pure_python(spark):
             r["top_ngram_char_frac"],
             round(top[1] * len(top[0]) / len(text), 6),
         )
-
-
-def test_pii_redact_counts_match_emitted_placeholders(spark):
-    # a phone absorbed into an email match is counted once as an email,
-    # never phantom-counted as a phone
-    df = spark.createDataFrame(
-        [(0, "reach 555-123-4567@example.com now")], ["doc_id", "text"],
-    )
-    r = pii_redact(df).collect()[0]
-    assert r["redacted"] == "reach <EMAIL> now"
-    assert (r["n_emails"], r["n_ipv4"], r["n_phones"]) == (1, 0, 0)
 
 
 def test_quality_gate_first_fail_attribution(spark):

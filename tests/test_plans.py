@@ -44,23 +44,6 @@ def test_range_filter_pushes_value_predicate(spark):
     assert "PushedFilters: [IsNotNull(value), GreaterThan(value,100.0)" in plan
 
 
-def test_pii_redact_is_single_stage_no_shuffle(spark):
-    # PII scan is one projection over the corpus: no Exchange anywhere,
-    # and the scan reads only (doc_id, text) of the documents schema
-    from sed_spark.ext.pii import pii_redact
-    from sed_spark.suite.common import load
-
-    plan = _plan(pii_redact(load(spark, SF_DIR, "documents")))
-    assert "Exchange" not in plan
-    for line in plan.splitlines():
-        if "ReadSchema" in line:
-            schema = line.split("ReadSchema:")[1]
-            assert "text" in schema and "lang" not in schema
-            break
-    else:
-        pytest.fail("no scan with ReadSchema in plan")
-
-
 def test_repetition_stats_shuffles_only_on_doc_keys(spark):
     # every Exchange must hash-partition on a key set containing doc_id
     # (or be the tiny scale_out round-robin) — never a cross-document key
@@ -324,18 +307,34 @@ def test_salted_join_is_hash_join_no_cartesian(spark):
     assert "__salt" in plan
 
 
-def test_dense_groupby_block_partition_single_exchange(spark):
-    from sed_spark.binning.core import _groupby_sparse_agg
+def test_dense_binning_is_one_partial_final_aggregate(spark, monkeypatch):
+    # a 100^4 = 1e8-cell cube plans as partial count -> one hash exchange
+    # on __idx -> final count: no repartition below the aggregate
+    import numpy as np
 
-    proj = spark.range(0, 10_000).select(
-        (F.col("id") % 100_000_000).cast("long").alias("__idx"),
+    from sed_spark.binning import core
+
+    seen = []
+
+    def spy(proj, cube, out_dtype="uint32"):
+        seen.append(core._groupby_sparse_agg(proj))
+        return np.zeros(cube, dtype=out_dtype)  # untouched pages, no job
+
+    monkeypatch.setattr(core, "_dense_via_groupby", spy)
+    axes = ["a", "b", "c", "d"]
+    df = spark.range(0, 1000).select(
+        *[F.col("id").cast("double").alias(a) for a in axes],
     )
-    plan = _plan(_groupby_sparse_agg(proj, 100_000_000))
-    # exactly ONE exchange: the explicit block repartition; the aggregate
-    # reuses it (HashPartitioning on __blk ⊆ grouping keys), no second
-    # shuffle inserted by EnsureRequirements
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "__blk" in plan
+    res = core.bin_dataframe(df, bins=[100] * 4, axes=axes,
+                             ranges=[(0.0, 1000.0)] * 4)
+    assert res.shape == (100,) * 4
+    plan = _plan(seen[0])
+    assert "partial_count(1)" in plan
+    assert plan.count("HashAggregate(") == 2
+    assert plan.count("Exchange ") == 1
+    assert plan.count("Exchange hashpartitioning(__idx") == 1
+    assert "__blk" not in plan
+    assert "REPARTITION_BY_NUM" not in plan
 
 
 def test_kmv_sketch_uses_take_ordered_not_global_sort(spark):
