@@ -47,7 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
-from sed_spark.binning.spec import BinAxis, bin_centers_to_bin_edges, normalize_bins
+from sed_spark.binning.spec import BinAxis, normalize_bins
 from sed_spark.dfops import jitter_noise, jitter_salt, uniform_hash_expr
 
 __all__ = [
@@ -377,35 +377,36 @@ def normalization_histogram_from_timestamps(
 
     Reference (src/sed/binning/binning.py:430-463): per-event dwell time
     ``ts.diff()`` then a sum grouped by ``pd.cut(axis, edges)`` — i.e.
-    RIGHT-closed intervals (lo, hi]. The diff is a window ``lag`` within each
-    file partition ordered by the load order (the reference's diff also
-    restarts at dask partition boundaries).
+    RIGHT-closed intervals (lo, hi] against the edges themselves, so
+    non-uniform centers bin as they do there. The diff is a window ``lag``
+    within each file partition ordered by the load order (the reference's
+    diff also restarts at dask partition boundaries). Bins without a
+    dwell time sum to 0, as the reference's grouped sum does. Fewer than 2,
+    non-finite or non-increasing centers raise ``ValueError`` naming the
+    axis.
     """
     from pyspark.sql import Window
 
-    edges = bin_centers_to_bin_edges(np.asarray(bin_centers, dtype=np.float64))
-    nbins = len(edges) - 1
-    lo, hi = float(edges[0]), float(edges[-1])
-    width = (hi - lo) / nbins
+    centers = np.asarray(bin_centers, dtype=np.float64)
+    (ax,) = normalize_bins([centers], [axis])
+    edges = ax.edges
 
     w = Window.partitionBy(group_col).orderBy(order_col)
     dt = F.col(time_stamp_column) - F.lag(time_stamp_column).over(w)
     x = F.col(axis).cast("double")
-    # pd.cut: right-closed (lo, hi] -> ceil((x-lo)/width) - 1
-    j = F.ceil((x - F.lit(lo)) / F.lit(width)) - 1
-    valid = x.isNotNull() & (x > lo) & (x <= hi)
+    # pd.cut: right-closed (lo, hi] -> the number of inner edges below x
+    inner = F.array(*[F.lit(float(e)) for e in edges[1:-1]])
+    j = F.aggregate(inner, F.lit(0), lambda acc, e: acc + F.when(x > e, 1).otherwise(0))
+    valid = (x > float(edges[0])) & (x <= float(edges[-1]))
     binned = (
         df.withColumn("__dt", dt)
-        .withColumn("__bin", j.cast(IntegerType()))
         .filter(valid)
-        .groupBy("__bin")
+        .groupBy(j.alias("__bin"))
         .agg(F.sum("__dt").alias("norm"))
         .toPandas()
     )
-    dense = np.full(nbins, np.nan)
-    if len(binned):
-        dense[binned["__bin"].to_numpy(dtype=np.int64)] = binned["norm"].to_numpy()
-    centers = np.asarray(bin_centers, dtype=np.float64)
+    dense = np.zeros(ax.nbins)
+    dense[binned["__bin"].to_numpy(dtype=np.int64)] = binned["norm"].fillna(0.0).to_numpy()
     return BinnedData(data=dense, dims=[axis], coords={axis: centers})
 
 

@@ -287,6 +287,13 @@ def _build_corner_relation(spark: SparkSession, fx: np.ndarray, fy: np.ndarray) 
             },
         ),
     )
+    # the Arrow conversion reads NaN as null, and the blend reads a null
+    # corner as the padding's 0; padding is 0.0, never null, so every null
+    # here is a NaN node and goes back to NaN
+    local = local.select(
+        "__cell",
+        *[F.coalesce(F.col(c), F.lit(float("nan"))).alias(c) for c in local.columns[1:]],
+    )
     # re-root the literal rows under an RDD-backed leaf: the RDD is a
     # ParallelCollectionRDD over rows the driver holds, so Spark can
     # recompute a lost partition from them (unlike localCheckpoint, whose

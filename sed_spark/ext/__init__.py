@@ -13,8 +13,7 @@ quality gates), corpus management (URL/domain rollups, blocklists,
 hash splits, rate/cap/mixture/Gumbel/quantile/weighted sampling,
 grouped percentile/robust/decayed stats, heavy hitters, corpus diff),
 tokenizer training (vocabulary stats, distributed BPE + unigram-LM +
-WordPiece), mergeable sketches (CMS, HLL, KMV, Bloom incl. bitmap
-semi-join reduction).
+WordPiece).
 
 No sed module or benchmark workload calls this package; the ``filters``
 and ``run_stats`` suite queries check five ``corpus`` statistics.
@@ -31,68 +30,22 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["scale_out", "lit_double_array", "lit_long_array"]
-
-
-#: LRU memo for constructed literal-array Columns (round 12, extending
-#: round 11's similarity-module memoization to every caller): Columns are
-#: immutable expression trees safe to reuse across plans, and the bench
-#: rebuilds each query per rep, re-paying the ANTLR parse for identical
-#: centroid/bitmap/log-ratio arrays. Keys are the literal VALUES — this
-#: caches query syntax (like a compiled-regex cache), never input data or
-#: results. LRU eviction (not wholesale clear) so steady-state mixed
-#: workloads never hit a reconstruction cliff.
-_ARR_CACHE: dict = {}
-_ARR_CACHE_MAX = 4096
-
-
-def _lru_cached(cache: dict, cap: int, key, builder):
-    col = cache.get(key)
-    if col is not None:
-        # dicts preserve insertion order; re-inserting = move to MRU end
-        del cache[key]
-        cache[key] = col
-        return col
-    if len(cache) >= cap:
-        cache.pop(next(iter(cache)))  # evict LRU (oldest) entry only
-    col = builder()
-    cache[key] = col
-    return col
+__all__ = ["scale_out", "lit_double_array"]
 
 
 def lit_double_array(values) -> Column:
     """Literal ``array<double>`` built via ONE SQL parse instead of
     per-element ``F.lit`` py4j calls — ``F.lit(list)`` converts element
     by element over the gateway (measured 2.4 s for a 4.5k-element
-    bitmap vs 8 ms for the parsed text), and literal arrays of
-    centroids/planes/codebooks/bitmaps are everywhere in the expression-
-    only operators. Values must be finite (falls back to the per-element
-    path otherwise); ``{v!r}D`` round-trips every finite IEEE double
-    through the SQL parser bit-exactly. Memoized on the values (the
-    Column is an immutable expression tree — see ``_ARR_CACHE``)."""
-    vals = tuple(float(v) for v in values)
+    bitmap vs 8 ms for the parsed text). Values must be finite (falls
+    back to the per-element path otherwise); ``{v!r}D`` round-trips every
+    finite IEEE double through the SQL parser bit-exactly."""
+    vals = [float(v) for v in values]
     if not vals:
         return F.lit([]).cast("array<double>")
-    return _lru_cached(_ARR_CACHE, _ARR_CACHE_MAX, ("d", vals),
-                       lambda: _build_double_array(vals))
-
-
-def _build_double_array(vals: tuple) -> Column:
     if all(math.isfinite(v) for v in vals):
         return F.expr("array(" + ",".join(f"{v!r}D" for v in vals) + ")")
     return F.array(*[F.lit(v) for v in vals])
-
-
-def lit_long_array(values) -> Column:
-    """Literal ``array<bigint>`` via one SQL parse (see
-    :func:`lit_double_array`); memoized on the values."""
-    vals = tuple(int(v) for v in values)
-    if not vals:
-        return F.lit([]).cast("array<bigint>")
-    return _lru_cached(
-        _ARR_CACHE, _ARR_CACHE_MAX, ("l", vals),
-        lambda: F.expr("array(" + ",".join(f"{v}L" for v in vals) + ")"),
-    )
 
 
 def scale_out(df: DataFrame, factor: int = 1) -> DataFrame:

@@ -14,6 +14,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sed_spark.ext import lit_double_array
+
 __all__ = [
     "dot_expr",
     "norm2_expr",
@@ -65,42 +67,6 @@ __all__ = [
 EXPANDED_SCORING = False
 
 
-#: Memoized literal-expression construction. Building a Column tree is
-#: driver-side work dominated by py4j round-trips (one per F.lit /
-#: operator) or ANTLR parsing (F.expr); a 64-dim centroid array costs
-#: ~10 ms and an 8-branch ANN query repeats hundreds of them — measured
-#: 1-2 s of pure construction PER QUERY BUILD, paid again on every
-#: rebuild of the same query (the bench rebuilds per rep). Columns are
-#: immutable expression trees, safe to reuse across plans, so
-#: logically-identical constructions are cached keyed on their literal
-#: VALUES (never on input data or results — this caches query syntax,
-#: like a compiled-regex cache, not computation).
-_COL_CACHE: dict = {}
-_COL_CACHE_MAX = 4096
-
-
-def _col_cached(key, builder) -> Column:
-    # LRU eviction (round 12; was a wholesale clear()) — a mixed steady-
-    # state workload no longer hits a reconstruction-latency cliff when
-    # the cache fills
-    from sed_spark.ext import _lru_cached
-
-    return _lru_cached(_COL_CACHE, _COL_CACHE_MAX, key, builder)
-
-
-def _expr_cached(sql: str) -> Column:
-    """``F.expr`` with the parsed Column memoized on the SQL text."""
-    return _col_cached(("sql", sql), lambda: F.expr(sql))
-
-
-def _lit_arr(values) -> Column:
-    """Literal double-array Column, memoized on the float values."""
-    from sed_spark.ext import lit_double_array
-
-    vals = tuple(float(v) for v in values)
-    return _col_cached(("arr", vals), lambda: lit_double_array(vals))
-
-
 def _sum(arr: Column) -> Column:
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
 
@@ -145,11 +111,11 @@ def cosine_topk(
 
     df = scale_out(df)
     if EXPANDED_SCORING:
-        sim = _expr_cached(
+        sim = F.expr(
             _expanded_cosine_sql(vec_col, query_vec, round_decimals),
         )
     else:
-        q = _lit_arr(query_vec)
+        q = lit_double_array(query_vec)
         sim = cosine_expr(F.col(vec_col), q)
         if round_decimals is not None:
             sim = F.round(sim, round_decimals)
@@ -345,7 +311,7 @@ def hyperplane_lsh_buckets(
     """
     bucket = None
     for i, p in enumerate(planes):
-        arr = _lit_arr(p)
+        arr = lit_double_array(p)
         bit = F.when(dot_expr(F.col(vec_col), arr) >= 0, F.lit(1 << i)).otherwise(
             F.lit(0),
         )
@@ -380,27 +346,19 @@ def lsh_band_buckets(
     df = scale_out(df)
     per = len(planes) // n_bands
 
-    def build_entries():
-        entries = []
-        for b in range(n_bands):
-            bucket = None
-            for i, p in enumerate(planes[b * per:(b + 1) * per]):
-                arr = _lit_arr(p)
-                bit = F.when(
-                    dot_expr(F.col(vec_col), arr) >= 0, F.lit(1 << i),
-                ).otherwise(F.lit(0))
-                bucket = bit if bucket is None else bucket + bit
-            entries.append(F.struct(F.lit(b).alias("band"),
-                                    bucket.cast("int").alias("bucket")))
-        return F.array(*entries)
-
-    key = (
-        "lsh_bands", vec_col, n_bands,
-        tuple(tuple(float(v) for v in p) for p in planes),
-    )
-    entries_arr = _col_cached(key, build_entries)
+    entries = []
+    for b in range(n_bands):
+        bucket = None
+        for i, p in enumerate(planes[b * per:(b + 1) * per]):
+            arr = lit_double_array(p)
+            bit = F.when(
+                dot_expr(F.col(vec_col), arr) >= 0, F.lit(1 << i),
+            ).otherwise(F.lit(0))
+            bucket = bit if bucket is None else bucket + bit
+        entries.append(F.struct(F.lit(b).alias("band"),
+                                bucket.cast("int").alias("bucket")))
     return (
-        df.select(F.col(id_col), F.col(vec_col), F.explode(entries_arr).alias("bb"))
+        df.select(F.col(id_col), F.col(vec_col), F.explode(F.array(*entries)).alias("bb"))
         .select(id_col, vec_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     )
 
@@ -573,26 +531,22 @@ def _centroid_sims_expr(
     bit-identical — each centroid's ``sqrt(|c|²)`` precomputes to a
     Python literal with the identical sequential accumulation)."""
     if not EXPANDED_SCORING:
-        key = (
-            "cent_sims", vec_col, round_decimals,
-            tuple(tuple(float(v) for v in c) for c in centroids),
-        )
-        return _col_cached(key, lambda: F.array(
+        return F.array(
             *[
                 F.round(
                     cosine_expr(
                         F.col(vec_col),
-                        _lit_arr(c),
+                        lit_double_array(c),
                     ),
                     round_decimals,
                 )
                 for c in centroids
             ],
-        ))
+        )
     sims = [
         _expanded_cosine_sql(vec_col, c, round_decimals) for c in centroids
     ]
-    return _expr_cached("array(" + ", ".join(sims) + ")")
+    return F.expr("array(" + ", ".join(sims) + ")")
 
 
 def kmeans_fit(
@@ -906,11 +860,11 @@ def _score_probed(
     round_decimals: int,
 ) -> DataFrame:
     if EXPANDED_SCORING:
-        sim = _expr_cached(
+        sim = F.expr(
             _expanded_cosine_sql(vec_col, query_vec, round_decimals),
         )
     else:
-        qarr = _lit_arr(query_vec)
+        qarr = lit_double_array(query_vec)
         sim = F.round(cosine_expr(F.col(vec_col), qarr), round_decimals)
     cond = (
         F.col("bucket") == probes[0] if len(probes) == 1
@@ -1056,7 +1010,7 @@ def _with_pq_codes(
     stage1 = df.select(
         *keep,
         *[
-            _expr_cached(
+            F.expr(
                 "array(" + ", ".join(
                     _pq_score_sql(vec_col, m, dsub, c) for c in book
                 ) + ")",
@@ -1067,7 +1021,7 @@ def _with_pq_codes(
     return stage1.select(
         *keep,
         *[
-            _expr_cached(
+            F.expr(
                 f"CAST(array_position(__sc_{m}, array_max(__sc_{m})) - 1 "
                 "AS INT)",
             ).alias(f"__code_{m}")
@@ -1218,8 +1172,8 @@ def pq_topk(
     num = None
     den = None
     for mm in range(len(codebooks)):
-        t_arr = _lit_arr(t_tabs[mm])
-        n_arr = _lit_arr(n_tabs[mm])
+        t_arr = lit_double_array(t_tabs[mm])
+        n_arr = lit_double_array(n_tabs[mm])
         idx = (F.col(f"__code_{mm}") + 1).cast("int")
         tm = F.element_at(t_arr, idx)
         nm = F.element_at(n_arr, idx)
@@ -1286,7 +1240,7 @@ def ivfpq_train(
         df, coarse_centroids, id_col=id_col, vec_col=vec_col,
     )
     res = assigned.withColumn(
-        "__residual", _expr_cached(_residual_sql(vec_col, coarse_centroids)),
+        "__residual", F.expr(_residual_sql(vec_col, coarse_centroids)),
     )
     return pq_train(
         res, m=m, k=k, vec_col="__residual", id_col=id_col,
@@ -1332,7 +1286,7 @@ def ivfpq_topk(
         round_decimals=round_decimals,
     ).filter(F.col("bucket").isin(probes))
     res = assigned.withColumn(
-        "__residual", _expr_cached(_residual_sql(vec_col, coarse_centroids)),
+        "__residual", F.expr(_residual_sql(vec_col, coarse_centroids)),
     )
     coded = _with_pq_codes(
         res, codebooks, "__residual", keep=[id_col, "bucket"],
@@ -1390,16 +1344,16 @@ def ivfpq_topk(
     for mi in range(mm_count):
         idx = (F.col(f"__code_{mi}") + 1).cast("int")
         num = num + F.element_at(
-            _lit_arr(t_tabs[mi]), idx,
+            lit_double_array(t_tabs[mi]), idx,
         )
         den = den + F.lit(2.0) * bucket_case({
             b: F.element_at(
-                _lit_arr(m_tabs[b][mi]), idx,
+                lit_double_array(m_tabs[b][mi]), idx,
             )
             for b in probes
         })
         den = den + F.element_at(
-            _lit_arr(n_tabs[mi]), idx,
+            lit_double_array(n_tabs[mi]), idx,
         )
     score = F.round(num / F.sqrt(den), round_decimals)
     return (
@@ -1471,7 +1425,7 @@ def sq8_encode(
         " AS INT) "
         "ELSE 0 END)"
     )
-    return df.select(F.col(id_col), _expr_cached(expr).alias("codes"))
+    return df.select(F.col(id_col), F.expr(expr).alias("codes"))
 
 
 def sq8_topk(
@@ -1551,9 +1505,9 @@ def sq8_topk(
             "sqrt(aggregate(__deq, CAST(0.0 AS DOUBLE), "
             f"(acc, x) -> acc + x * x)), {round_decimals})"
         )
-    staged = df.select(F.col(id_col), _expr_cached(deq).alias("__deq"))
+    staged = df.select(F.col(id_col), F.expr(deq).alias("__deq"))
     return (
-        staged.select(F.col(id_col), _expr_cached(score).alias("cos_sim"))
+        staged.select(F.col(id_col), F.expr(score).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -1726,42 +1680,36 @@ def random_project(
     if out_dim < 1 or in_dim < 1:
         raise ValueError(f"dims must be positive, got {in_dim}->{out_dim}")
 
-    def build_guarded():
-        signs = rp_sign_matrix(in_dim, out_dim, salt)
-        scale = 1.0 / math.sqrt(float(out_dim))
-        comps = [
-            _expr_cached(_rp_component_hof_sql(vec_col, row, scale,
-                                               round_decimals=round_decimals))
-            for row in signs
-        ]
-        # fail LOUDLY on a dimension mismatch: out-of-range array
-        # indexing yields NULL and one NULL poisons every signed sum, so
-        # a short vector would otherwise project to an all-NULL row and
-        # silently vanish from every downstream shortlist (the driver
-        # mirror raises IndexError for the same input — keep the engine
-        # path as loud).
-        # A NULL vector is NOT a mismatch: it passes through as a NULL
-        # projection (left-join enrichments produce them routinely; the
-        # legacy size(NULL) = -1 would otherwise abort the job with a
-        # nonsense "got -1")
-        return F.when(
-            F.col(vec_col).isNull(),
-            F.lit(None).cast("array<double>"),
-        ).when(
-            F.size(F.col(vec_col)) == in_dim, F.array(*comps),
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(f"random_project: expected {in_dim}-dim "
-                          f"{vec_col}, got "),
-                    F.size(F.col(vec_col)).cast("string"),
-                ),
+    signs = rp_sign_matrix(in_dim, out_dim, salt)
+    scale = 1.0 / math.sqrt(float(out_dim))
+    comps = [
+        F.expr(_rp_component_hof_sql(vec_col, row, scale,
+                                     round_decimals=round_decimals))
+        for row in signs
+    ]
+    # fail LOUDLY on a dimension mismatch: out-of-range array
+    # indexing yields NULL and one NULL poisons every signed sum, so
+    # a short vector would otherwise project to an all-NULL row and
+    # silently vanish from every downstream shortlist (the driver
+    # mirror raises IndexError for the same input — keep the engine
+    # path as loud).
+    # A NULL vector is NOT a mismatch: it passes through as a NULL
+    # projection (left-join enrichments produce them routinely; the
+    # legacy size(NULL) = -1 would otherwise abort the job with a
+    # nonsense "got -1")
+    guarded = F.when(
+        F.col(vec_col).isNull(),
+        F.lit(None).cast("array<double>"),
+    ).when(
+        F.size(F.col(vec_col)) == in_dim, F.array(*comps),
+    ).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"random_project: expected {in_dim}-dim "
+                      f"{vec_col}, got "),
+                F.size(F.col(vec_col)).cast("string"),
             ),
-        )
-
-    guarded = _col_cached(
-        ("rp", vec_col, in_dim, out_dim, salt, round_decimals),
-        build_guarded,
+        ),
     )
     return df.withColumn(out_col, guarded)
 

@@ -1289,33 +1289,10 @@ _SESSION_GAP_US = 1.8e9  # 30 min
 
 @q("sessionization")
 def sessionization(spark, sf_dir):
-    """Gap sessionization in BOTH execution shapes, tag-unioned:
-    ``batch`` = per-event session ids from the two-window gap scan;
-    ``stream`` = the SAME sessions discovered live by a Structured
-    Streaming ``session_window`` aggregate (availableNow replay), pinned
-    as per-session (user, start, count) rollups against the identical
-    batch oracle. The streaming gap is ``_SESSION_GAP_US + 1``:
-    ``session_window`` merges on ``diff < gap`` while the batch rule
-    opens a session on ``diff > gap`` — for integer-microsecond
-    timestamps the two predicates coincide exactly at that offset.
-
-    The two availableNow replays (session_window aggregate, stream-static
-    enrich rollup) drain CONCURRENTLY and under
-    ``spark.sql.shuffle.partitions`` lowered to
-    :func:`state_store_partitions` (cores//4, restored afterwards); batch
-    branches are unaffected (they plan at action time, after the conf is
-    restored)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    from sed_spark.streaming import (
-        run_available_now,
-        state_store_partitions,
-        streaming_enrich,
-        streaming_sessionize,
-    )
-
+    """Gap sessionization (``dfops.sessionize``), tag-unioned with two
+    rollups of its sessions: ``batch`` = per-event session ids from the
+    two-window gap scan; ``overlap`` = per-session signup-window overlap
+    counts; ``funnel`` = the ordered signup -> view -> purchase steps."""
     df = load(spark, sf_dir, "events")
     df = df.withColumn("ts_d", ts_us(df).cast("double"))
     out = dfops.sessionize(
@@ -1326,57 +1303,6 @@ def sessionization(spark, sf_dir):
         F.col("event_id").alias("k1"),
         F.col("user_id").alias("k2"),
         F.col("session_id").cast("long").alias("v"),
-    )
-
-    ev = load(spark, sf_dir, "events")
-
-    def drain_session():
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .parquet(f"{sf_dir}/events*.parquet")
-            .withColumn("__event_time", F.timestamp_micros(ts_us(ev)))
-        )
-        sess = streaming_sessionize(stream, gap_us=int(_SESSION_GAP_US) + 1)
-        spark.catalog.dropTempView("stream_session_sink")
-        run_available_now(sess, "stream_session_sink", output_mode="complete")
-
-    def drain_enrich():
-        # stream-static enrichment (round 7): the live event stream
-        # left-joined against the broadcast customer dimension
-        # (streaming_enrich — no join state, static side probed per
-        # batch), rolled up per market segment.
-        dim = load(spark, sf_dir, "customer").select(
-            F.col("c_custkey").alias("user_id"),
-            F.col("c_mktsegment").alias("segment"),
-        )
-        stream2 = spark.readStream.schema(ev.schema).parquet(
-            f"{sf_dir}/events*.parquet",
-        )
-        enriched = streaming_enrich(stream2, dim, "user_id", how="left")
-        rollup = enriched.groupBy("segment").agg(
-            F.count(F.lit(1)).alias("n"),
-        )
-        spark.catalog.dropTempView("stream_enrich_sink")
-        run_available_now(rollup, "stream_enrich_sink", output_mode="complete")
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_store_partitions(spark)),
-    )
-    try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(pool.map(
-                inheritable_thread_target(lambda f: f()),
-                [drain_session, drain_enrich],
-            ))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
-    live = spark.table("stream_session_sink").select(
-        F.lit("stream").alias("part"),
-        F.col("user_id").alias("k1"),
-        F.unix_micros(F.col("session_start")).alias("k2"),
-        F.col("events").cast("long").alias("v"),
     )
     # interval-overlap branch (round 5): each session's [first, last+1µs)
     # span overlap-joined against the user's signup attribution windows
@@ -1409,18 +1335,6 @@ def sessionization(spark, sf_dir):
             F.col("n_overlaps").cast("long").alias("v"),
         )
     )
-    # stream-static enrichment branch rollup (drained above). k1 =
-    # first letter of the segment (A/B/F/H/M are distinct; 0 = stream
-    # rows with no dimension match), so the branch pins the JOIN result,
-    # not just the rollup.
-    enrich = spark.table("stream_enrich_sink").select(
-        F.lit("enrich").alias("part"),
-        F.coalesce(
-            F.ascii(F.substring("segment", 1, 1)), F.lit(0),
-        ).cast("long").alias("k1"),
-        F.lit(0).cast("long").alias("k2"),
-        F.col("n").cast("long").alias("v"),
-    )
     # funnel branch (round 7): the ORDERED signup -> view -> purchase
     # conversion (dfops.funnel_steps — per-user earliest step-i event
     # strictly after the earliest qualifying step i-1; a purchase before
@@ -1442,10 +1356,7 @@ def sessionization(spark, sf_dir):
         F.col("step").cast("long").alias("k2"),
         F.col("step_ts").cast("long").alias("v"),
     )
-    return (
-        batch.unionAll(live).unionAll(overlap).unionAll(enrich)
-        .unionAll(fun_rows)
-    )
+    return batch.unionAll(overlap).unionAll(fun_rows)
 
 
 sql("sessionization", f"""
@@ -1465,10 +1376,6 @@ SELECT 'batch' AS part, event_id AS k1, user_id AS k2,
   CAST(session_id AS BIGINT) AS v
 FROM sess
 UNION ALL
-SELECT 'stream' AS part, user_id AS k1,
-  CAST(min(ts_d) AS BIGINT) AS k2, count(*) AS v
-FROM sess GROUP BY user_id, session_id
-UNION ALL
 SELECT 'overlap' AS part, s.u AS k1, CAST(s.s_lo AS BIGINT) AS k2,
   count(*) AS v
 FROM (
@@ -1481,12 +1388,6 @@ JOIN (
   FROM events WHERE event_type = 'signup'
 ) w ON w.u = s.u AND s.s_lo < w.w_hi AND w.w_lo < s.s_hi
 GROUP BY s.u, s.s_lo
-UNION ALL
-SELECT 'enrich' AS part,
-  CAST(COALESCE(ord(substr(c.c_mktsegment, 1, 1)), 0) AS BIGINT) AS k1,
-  CAST(0 AS BIGINT) AS k2, count(*) AS v
-FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-GROUP BY c.c_mktsegment
 UNION ALL
 SELECT 'funnel' AS part, k1, k2, v FROM (
   WITH f0 AS (

@@ -247,3 +247,44 @@ def test_equidepth_edges_errors(spark):
     empty = df.filter("v IS NULL")
     with pytest.raises(ValueError, match="no non-null"):
         equidepth_edges(empty, "v", 4, exact=True)
+
+
+# ---------------------------------------------------------------------------
+# acquisition-time normalization
+# ---------------------------------------------------------------------------
+
+def test_normalization_histogram_from_timestamps_matches_pandas(spark):
+    import pandas as pd
+
+    from sed_spark.binning import normalization_histogram_from_timestamps
+
+    rng = np.random.default_rng(11)
+    n = 600
+    pdf = pd.DataFrame(
+        {
+            "file_id": np.repeat([0, 1, 2], n // 3),
+            "row_index": np.tile(np.arange(n // 3), 3),
+            "timeStamp": np.cumsum(rng.uniform(0.0, 2.0, n)),
+            "X": rng.uniform(-1.0, 5.0, n),
+        },
+    )
+    # on an edge, just past an edge, NaN, on the last edge
+    pdf.loc[:5, "X"] = [0.5, 0.6, 2.0, 2.2, np.nan, 4.0]
+    # the dwell time follows row_index within each file, not the row order
+    df = spark.createDataFrame(pdf.sample(frac=1.0, random_state=1))
+    dt = pdf.groupby("file_id")["timeStamp"].diff()
+    # uniform centers with an empty last bin, then non-uniform centers
+    for centers in (np.arange(7.0), np.array([0.0, 1.0, 3.0])):
+        cut = pd.cut(pdf["X"], bin_centers_to_bin_edges(centers))
+        want = dt.groupby(cut, observed=False).sum().to_numpy()
+        res = normalization_histogram_from_timestamps(
+            df, "X", centers, "timeStamp", "row_index",
+        )
+        np.testing.assert_array_equal(res.coords["X"], centers)
+        np.testing.assert_allclose(res.data, want, rtol=1e-12)
+
+    for bad in (np.array([1.0]), np.array([3.0, 1.0, 0.0])):
+        with pytest.raises(ValueError, match="axis 'X'"):
+            normalization_histogram_from_timestamps(
+                df, "X", bad, "timeStamp", "row_index",
+            )

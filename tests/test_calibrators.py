@@ -183,7 +183,6 @@ def test_apply_dfield_join_matches_udf_and_numpy(spark):
     rng = np.random.default_rng(4)
     fx = rng.uniform(0, 2048, (h, w))
     fy = rng.uniform(0, 2048, (h, w))
-    dfield = np.stack([fx, fy])
     # include out-of-range and exactly-on-edge points
     pdf = pd.DataFrame(
         {
@@ -197,23 +196,36 @@ def test_apply_dfield_join_matches_udf_and_numpy(spark):
             ),
         },
     )
-    pdf["id"] = np.arange(len(pdf))
-    df = spark.createDataFrame(pdf)
-    ranges = ((0.0, 2048.0), (0.0, 2048.0))
-    out_join, out_udf = (
-        build(df, dfield, "X", "Y", "Xm", "Ym", ranges).orderBy("id").toPandas()
-        for build in (momentum_cal._apply_dfield_join, momentum_cal._apply_dfield_udf)
+    # an 8x8 field with one NaN node: every event whose cell touches it
+    # samples NaN, the rest stay finite
+    nan_fx = rng.uniform(0, 2048, (8, 8))
+    nan_fy = rng.uniform(0, 2048, (8, 8))
+    nan_fx[3, 5] = nan_fy[3, 5] = np.nan
+    nan_pdf = pd.DataFrame(
+        {"X": rng.uniform(0, 2048, 3000), "Y": rng.uniform(0, 2048, 3000)},
     )
-    rows = (pdf["X"].to_numpy() - 0.0) * (h / 2048.0)
-    cols = (pdf["Y"].to_numpy() - 0.0) * (w / 2048.0)
-    want_x = bilinear_sample(fx, rows, cols)
-    want_y = bilinear_sample(fy, rows, cols)
-    for out in (out_join, out_udf):
-        np.testing.assert_allclose(out["Xm"], want_x, rtol=0, atol=1e-9)
-        np.testing.assert_allclose(out["Ym"], want_y, rtol=0, atol=1e-9)
-    # the two physical strategies agree bit-for-bit
-    np.testing.assert_array_equal(out_join["Xm"].to_numpy(), out_udf["Xm"].to_numpy())
-    np.testing.assert_array_equal(out_join["Ym"].to_numpy(), out_udf["Ym"].to_numpy())
+    ranges = ((0.0, 2048.0), (0.0, 2048.0))
+    for fx, fy, pdf in ((fx, fy, pdf), (nan_fx, nan_fy, nan_pdf)):
+        h, w = fx.shape
+        pdf["id"] = np.arange(len(pdf))
+        df = spark.createDataFrame(pdf)
+        dfield = np.stack([fx, fy])
+        out_join, out_udf = (
+            build(df, dfield, "X", "Y", "Xm", "Ym", ranges).orderBy("id").toPandas()
+            for build in (momentum_cal._apply_dfield_join, momentum_cal._apply_dfield_udf)
+        )
+        rows = (pdf["X"].to_numpy() - 0.0) * (h / 2048.0)
+        cols = (pdf["Y"].to_numpy() - 0.0) * (w / 2048.0)
+        want_x = bilinear_sample(fx, rows, cols)
+        want_y = bilinear_sample(fy, rows, cols)
+        for out in (out_join, out_udf):
+            for got, want in ((out["Xm"].to_numpy(), want_x), (out["Ym"].to_numpy(), want_y)):
+                np.testing.assert_array_equal(np.isnan(got), np.isnan(want))
+                np.testing.assert_allclose(got, want, rtol=0, atol=1e-9)
+        # the two physical strategies agree bit-for-bit
+        np.testing.assert_array_equal(out_join["Xm"].to_numpy(), out_udf["Xm"].to_numpy())
+        np.testing.assert_array_equal(out_join["Ym"].to_numpy(), out_udf["Ym"].to_numpy())
+    assert np.isnan(want_x).sum() > 100  # the NaN node reaches events
 
 
 def test_energy_add_offsets(spark):

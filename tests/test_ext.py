@@ -24,6 +24,16 @@ def _np_cos(a, b):
     return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
 
 
+def test_lit_double_array_keeps_signed_zero(spark):
+    # each literal array carries its own values: -0.0 after 0.0 (equal
+    # as floats) still evaluates to -0.0
+    from sed_spark.ext import lit_double_array
+
+    spark.range(1).select(lit_double_array([0.0]).alias("a")).collect()
+    got = spark.range(1).select(lit_double_array([-0.0]).alias("a")).collect()
+    assert np.copysign(1.0, got[0]["a"][0]) == -1.0
+
+
 def test_cosine_topk_matches_numpy(emb_df):
     df, vecs = emb_df
     q = [float(v) for v in vecs[10]]

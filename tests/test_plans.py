@@ -255,23 +255,6 @@ def test_bpe_encode_is_vocab_join_no_cartesian(spark):
     assert plan.count("HashAggregate") >= 2  # vocab agg + doc reassembly
 
 
-def test_grouped_hll_is_two_hash_aggregates(spark):
-    # registers_by + estimate_by must plan as hash aggregates (map-side
-    # partials collapse duplicate (group, register) rows before the
-    # shuffle) — no window, no sort, no count-distinct Expand
-    from sed_spark.ext import sketch
-
-    df = spark.createDataFrame(
-        [(f"t{i % 3}", f"u{i % 17}") for i in range(100)], ["g", "k"],
-    )
-    out = sketch.hll_estimate_by(
-        sketch.hll_registers_by(df, ["g"], "k", p=6), ["g"], p=6,
-    )
-    plan = _plan(out)
-    assert "HashAggregate" in plan
-    assert "Expand" not in plan and "Window" not in plan
-
-
 def test_skew_join_hot_branch_is_broadcast(spark):
     from sed_spark.dfops import skew_join
     from sed_spark.suite.common import load
@@ -337,22 +320,6 @@ def test_dense_binning_is_one_partial_final_aggregate(spark, monkeypatch):
     assert "REPARTITION_BY_NUM" not in plan
 
 
-def test_kmv_sketch_uses_take_ordered_not_global_sort(spark):
-    # the bottom-k pass must be TakeOrderedAndProject (map-side k +
-    # driver k-way merge), never a global rangepartitioning sort; the
-    # only exchange is the distinct's hash shuffle
-    from sed_spark.ext import sketch
-    from sed_spark.suite.common import load
-
-    docs = load(spark, SF_DIR, "documents")
-    toks = docs.select(
-        F.explode(F.split(F.col("text"), " ")).alias("term"),
-    )
-    plan = _plan(sketch.kmv_sketch(toks, "term", k=64))
-    assert "TakeOrderedAndProject" in plan
-    assert "rangepartitioning" not in plan
-
-
 def test_prefix_similarity_join_is_equi_join_no_cartesian(spark):
     # the prefix self-join must plan as a hash/sort-merge equi-join on the
     # shingle with the id inequality as a post-join condition — never a
@@ -364,31 +331,6 @@ def test_prefix_similarity_join_is_equi_join_no_cartesian(spark):
     plan = _plan(prefix_similarity_join(docs, threshold=0.5))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
-
-
-def test_bloom_reduced_join_pass_through_branch_has_single_join(spark):
-    # the left_anti form unions the exact anti-join of the maybe-present
-    # slice with a pass-through filter of the definitely-absent slice —
-    # exactly ONE join operator in the whole plan (the pass-through
-    # branch must not join), and the probe is a literal-array expression,
-    # never a cartesian/nested-loop
-    import re
-
-    from sed_spark.ext.sketch import bloom_reduced_join
-    from sed_spark.suite.common import load
-
-    cust = load(spark, SF_DIR, "customer")
-    orders = load(spark, SF_DIR, "orders").select(
-        F.col("o_custkey").alias("c_custkey"),
-    )
-    plan = _plan(
-        bloom_reduced_join(orders, cust.select("c_custkey"),
-                           "c_custkey", how="left_anti", m_bits=1 << 12),
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan
-    n_joins = len(re.findall(r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)", plan))
-    assert n_joins == 1, f"expected exactly one join, saw {n_joins}"
 
 
 def test_asof_nearest_keyed_single_exchange_two_sorts(spark):

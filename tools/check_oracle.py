@@ -22,7 +22,7 @@ import pandas as pd
 # CHECK_SF_DIR=/root/testdata/sf0.1 python tools/check_oracle.py
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 #: the tables the suite's oracles read
-TABLES = ["customer", "lineitem", "events"]
+TABLES = ["lineitem", "events"]
 
 
 def duck_connection():
