@@ -306,6 +306,26 @@ def _quoted(name: str) -> Column:
     return F.col("`" + name.replace("`", "``") + "`")
 
 
+# the columns each dfield builder adds to the event frame while it works
+_JOIN_COLUMNS = (
+    "__fr", "__fc", "__cell",
+    *(f"__f{p}{i}{j}" for p in "xy" for i in "01" for j in "01"),
+)
+_UDF_COLUMN = "__dfield__"
+
+
+def _check_internal_names(columns: list[str], internal) -> None:
+    """Raise if an input column is one of the builder's ``internal``
+    columns, which the builder would overwrite or reference ambiguously.
+    Names compare case-insensitively, as Spark resolves them by default."""
+    for c in columns:
+        if c.lower() in internal:
+            raise ValueError(
+                f"input column {c!r} collides with apply_dfield's internal "
+                f"column {c.lower()!r}; rename it before the call",
+            )
+
+
 def _apply_dfield_join(
     df: DataFrame,
     dfield: np.ndarray,
@@ -326,6 +346,8 @@ def _apply_dfield_join(
     output keeps the input's columns in order, with ``new_x_column`` and
     ``new_y_column`` replaced in place or appended.
     """
+    columns = df.columns
+    _check_internal_names(columns, _JOIN_COLUMNS)
     fx, fy, xmin, ymin, x_scale, y_scale = _dfield_geometry(dfield, detector_ranges)
     h, w = fx.shape
     corners = _corner_relation(df.sparkSession, fx, fy)
@@ -358,7 +380,7 @@ def _apply_dfield_join(
         return top * (F.lit(1.0) - fr) + bot * fr
 
     blended = {new_x_column: blend("fx"), new_y_column: blend("fy")}
-    kept = [blended.pop(c).alias(c) if c in blended else _quoted(c) for c in df.columns]
+    kept = [blended.pop(c).alias(c) if c in blended else _quoted(c) for c in columns]
     return joined.select(*kept, *(v.alias(k) for k, v in blended.items()))
 
 
@@ -376,6 +398,7 @@ def _apply_dfield_udf(
     it serves grids too large to broadcast as a corner table."""
     from pyspark.sql.types import StructField, StructType
 
+    _check_internal_names(df.columns, (_UDF_COLUMN,))
     fx, fy, xmin, ymin, x_scale, y_scale = _dfield_geometry(dfield, detector_ranges)
     out_type = StructType(
         [StructField("x", DoubleType()), StructField("y", DoubleType())],
@@ -392,13 +415,17 @@ def _apply_dfield_udf(
             },
         )
 
-    tmp = "__dfield__"
-    out = df.withColumn(tmp, _warp(F.col(x_column), F.col(y_column)))
-    return (
-        out.withColumn(new_x_column, F.col(f"{tmp}.x"))
-        .withColumn(new_y_column, F.col(f"{tmp}.y"))
-        .drop(tmp)
-    )
+    out = df.withColumn(_UDF_COLUMN, _warp(F.col(x_column), F.col(y_column)))
+    # the Arrow return reads NaN as null; a null output from non-null
+    # inputs can only be NaN, and null inputs stay null as on the join path
+    both = F.col(x_column).isNotNull() & F.col(y_column).isNotNull()
+    nan = F.lit(float("nan"))
+    return out.withColumns(
+        {
+            new_x_column: F.when(both, F.coalesce(F.col(f"{_UDF_COLUMN}.x"), nan)),
+            new_y_column: F.when(both, F.coalesce(F.col(f"{_UDF_COLUMN}.y"), nan)),
+        },
+    ).drop(_UDF_COLUMN)
 
 
 def apply_dfield(

@@ -11,9 +11,7 @@ extraction, language id, heuristic/classifier/LM/DSIR quality scoring,
 token counting, fingerprinting, chunking, packing, collocation mining,
 quality gates), corpus management (URL/domain rollups, blocklists,
 hash splits, rate/cap/mixture/Gumbel/quantile/weighted sampling,
-grouped percentile/robust/decayed stats, heavy hitters, corpus diff),
-tokenizer training (vocabulary stats, distributed BPE + unigram-LM +
-WordPiece).
+grouped percentile/robust/decayed stats, heavy hitters, corpus diff).
 
 No sed module or benchmark workload calls this package; the ``filters``
 and ``run_stats`` suite queries check five ``corpus`` statistics.

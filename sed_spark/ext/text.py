@@ -9,7 +9,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sed_spark.ext import lit_double_array
-from sed_spark.ext.dedup import shingles_from_words
+from sed_spark.ext.dedup import exploded_shingles, shingles_from_words
 
 __all__ = [
     "n_words_expr",
@@ -567,8 +567,6 @@ def dsir_fit(
     import math
 
     def bucket_counts(df: DataFrame) -> dict[int, int]:
-        from sed_spark.ext.dedup import exploded_shingles
-
         grams = exploded_shingles(df, id_col, text_col, shingle_n)
         rows = (
             grams.select(
@@ -975,25 +973,25 @@ def collocations(
     near 1 no matter how often it appears.
 
     Scale shape: the corpus collapses in two keyed hash aggregates —
-    bigram counts via :func:`~sed_spark.ext.vocab.bigram_counts`, and a
-    DIRECT per-word occurrence count (``word_doc_freq``'s tf without its
-    (doc, word)-keyed first stage: document frequency isn't needed here,
-    and the direct count's map-side partials collapse to vocabulary size
-    per task instead of shuffling one row per distinct (doc, word)) —
-    ``min_count`` prunes the bigram tail BEFORE the two word-count
-    joins; ``N`` rides in as a broadcast one-row aggregate. No windows,
-    no driver collects. Returns ``(w1, w2, n_pair, n_w1, n_w2, lift)``.
+    bigram counts over the non-distinct ``exploded_shingles(df, n=2)``
+    explode, and a direct per-word occurrence count whose map-side
+    partials collapse to vocabulary size per task — ``min_count``
+    prunes the bigram tail BEFORE the two word-count joins; ``N`` rides
+    in as a broadcast one-row aggregate. No windows, no driver collects.
+    Returns ``(w1, w2, n_pair, n_w1, n_w2, lift)``.
 
-    ``words`` / ``grams`` accept precomputed
-    :func:`~sed_spark.ext.vocab.exploded_words` / non-distinct
-    ``exploded_shingles(df, n=2)`` frames (shared tokenize-explodes).
+    ``words`` accepts a precomputed ``(id, word)`` explode, one row per
+    word occurrence of ``split(text, " ")``; ``grams`` accepts a
+    precomputed non-distinct ``exploded_shingles(df, n=2)`` frame. Both
+    let callers share one tokenize-explode across operators.
     """
     from sed_spark.ext import scale_out
-    from sed_spark.ext.vocab import bigram_counts
 
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
-    bg = bigram_counts(df, id_col, text_col, grams=grams).filter(
+    if grams is None:
+        grams = exploded_shingles(df, id_col, text_col, n=2)
+    bg = grams.groupBy("g").agg(F.count(F.lit(1)).alias("cnt")).filter(
         F.col("cnt") >= min_count,
     )
     word_src = (

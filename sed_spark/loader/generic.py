@@ -67,6 +67,9 @@ class GenericLoader:
         """Load files/folder into one DataFrame (implicit multi-path union).
 
         Returns ``(df, metadata)``; metadata records the ordered file list.
+        ``with_file_id`` appends the file rank as ``file_id``; files that
+        already hold a ``file_id`` column raise ``ValueError`` rather than
+        lose it, and load with ``with_file_id=False``.
         """
         spark = self.spark or SparkSession.active()
         if ftype not in self.supported_file_types:
@@ -92,6 +95,13 @@ class GenericLoader:
             df = reader.json(list(files))
 
         if with_file_id:
+            held = [c for c in df.columns if c.lower() == "file_id"]
+            if held:
+                raise ValueError(
+                    f"the files already hold a {held[0]!r} column, which "
+                    "file_id would replace with the file rank; load them "
+                    "with with_file_id=False to keep it",
+                )
             # natural-sort rank by source path; tiny literal map folded by
             # Catalyst — keeps the scan a plain pushdown-friendly read.
             mapping = F.create_map(

@@ -4,6 +4,7 @@ test_momentum.py — formula-level assertions on appended columns)."""
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from sed_spark.calibrator import delay as delay_cal
@@ -210,14 +211,24 @@ def test_apply_dfield_join_matches_udf_and_numpy(spark):
         pdf["id"] = np.arange(len(pdf))
         df = spark.createDataFrame(pdf)
         dfield = np.stack([fx, fy])
-        out_join, out_udf = (
-            build(df, dfield, "X", "Y", "Xm", "Ym", ranges).orderBy("id").toPandas()
+        outs = [
+            build(df, dfield, "X", "Y", "Xm", "Ym", ranges)
             for build in (momentum_cal._apply_dfield_join, momentum_cal._apply_dfield_udf)
-        )
+        ]
+        out_join, out_udf = (out.orderBy("id").toPandas() for out in outs)
         rows = (pdf["X"].to_numpy() - 0.0) * (h / 2048.0)
         cols = (pdf["Y"].to_numpy() - 0.0) * (w / 2048.0)
         want_x = bilinear_sample(fx, rows, cols)
         want_y = bilinear_sample(fy, rows, cols)
+        if np.isnan(fx).any():
+            # toPandas reads null as NaN, so count in Spark: finite inputs
+            # must give NaN, never null, on both paths
+            for out in outs:
+                got = out.select(
+                    *(F.sum(F.isnan(c).cast("int")) for c in ("Xm", "Ym")),
+                    *(F.sum(F.col(c).isNull().cast("int")) for c in ("Xm", "Ym")),
+                ).first()
+                assert tuple(got) == (np.isnan(want_x).sum(), np.isnan(want_y).sum(), 0, 0)
         for out in (out_join, out_udf):
             for got, want in ((out["Xm"].to_numpy(), want_x), (out["Ym"].to_numpy(), want_y)):
                 np.testing.assert_array_equal(np.isnan(got), np.isnan(want))
@@ -226,6 +237,28 @@ def test_apply_dfield_join_matches_udf_and_numpy(spark):
         np.testing.assert_array_equal(out_join["Xm"].to_numpy(), out_udf["Xm"].to_numpy())
         np.testing.assert_array_equal(out_join["Ym"].to_numpy(), out_udf["Ym"].to_numpy())
     assert np.isnan(want_x).sum() > 100  # the NaN node reaches events
+
+
+@pytest.mark.parametrize(
+    "build, column",
+    [
+        ("_apply_dfield_join", "__fr"),
+        ("_apply_dfield_join", "__cell"),
+        ("_apply_dfield_join", "__fx00"),
+        ("_apply_dfield_join", "__FY11"),
+        ("_apply_dfield_udf", "__dfield__"),
+    ],
+)
+def test_apply_dfield_rejects_internal_column_names(spark, monkeypatch, build, column):
+    # a user column named like a builder's internal column would be
+    # overwritten or referenced ambiguously; it must fail by name before
+    # any plan or corner relation is built
+    builds = _fresh_corner_cache(monkeypatch, stub=True)
+    df = spark.createDataFrame([(1.0, 2.0, 3.0)], ["X", "Y", column])
+    dfield = np.ones((2, 4, 4))
+    with pytest.raises(ValueError, match=f"'{column}'"):
+        getattr(momentum_cal, build)(df, dfield, "X", "Y", "Xm", "Ym", ((0, 2048), (0, 2048)))
+    assert builds == []
 
 
 def test_energy_add_offsets(spark):

@@ -943,246 +943,6 @@ def test_dsir_fit_and_score_match_python(spark):
     assert got[0][1] > got[2][1] and got[1][1] > got[3][1]
 
 
-def test_vocab_tokenizer_support_ops(spark):
-    from sed_spark.ext import vocab
-
-    docs = spark.createDataFrame(
-        [
-            (0, "aa bb aa"),
-            (1, "aa cc"),
-            (2, "dd"),
-            (3, "e e e"),  # single-char word: no pairs
-        ],
-        ["doc_id", "text"],
-    )
-    v = {r.word: (r.tf, r.df) for r in vocab.word_doc_freq(docs).collect()}
-    assert v == {
-        "aa": (3, 2), "bb": (1, 1), "cc": (1, 1), "dd": (1, 1), "e": (3, 1),
-    }
-
-    # pair counts are tf-weighted over the VOCAB (aa->'aa' tf 3, bb 1, ...)
-    pc = {r.pair: r.cnt for r in vocab.bpe_pair_counts(docs).collect()}
-    assert pc == {"aa": 3, "bb": 1, "cc": 1, "dd": 1}
-
-    vd = {
-        r.doc_id: (r.rarest_word_df, r.df_sum)
-        for r in vocab.vocab_doc_stats(docs).collect()
-    }
-    # doc 0 distinct words {aa, bb}: min df 1, sum 3; doc 3 {e}: (1, 1)
-    assert vd == {0: (1, 3), 1: (1, 3), 2: (1, 1), 3: (1, 1)}
-
-    tp = {
-        r.doc_id: (r.top_pair, r.top_pair_count)
-        for r in vocab.doc_top_pair(docs).collect()
-    }
-    # doc 0: 'aa' appears twice (two occurrences of the word), 'bb' once
-    assert tp == {0: ("aa", 2), 1: ("aa", 1), 2: ("dd", 1), 3: ("", 0)}
-
-
-def _py_bpe_train(word_tf, n_merges):
-    """Pure-Python Sennrich-style reference (no end-of-word marker)."""
-    sym = {w: [c for c in w] for w in word_tf}
-    merges = []
-    for _ in range(n_merges):
-        counts = {}
-        for w, tf in word_tf.items():
-            s = sym[w]
-            for i in range(len(s) - 1):
-                counts[(s[i], s[i + 1])] = counts.get((s[i], s[i + 1]), 0) + tf
-        if not counts:
-            break
-        top = max(counts.items(), key=lambda kv: (kv[1], [-ord(c) for c in kv[0][0]], ))
-        # deterministic: max count, then lexicographically smallest (l, r)
-        best_cnt = max(counts.values())
-        cands = sorted(p for p, c in counts.items() if c == best_cnt)
-        a, b = cands[0]
-        merges.append((a, b))
-        for w in sym:
-            s, out = sym[w], []
-            for x in s:
-                if out and out[-1] == a and x == b:
-                    out[-1] = a + b
-                else:
-                    out.append(x)
-            sym[w] = out
-    return merges, sym
-
-
-def test_bpe_train_matches_python_reference(spark):
-    from sed_spark.ext import vocab
-
-    docs = spark.createDataFrame(
-        [
-            (0, "low lower low"),
-            (1, "lowest low newer"),
-            (2, "wider new newer"),
-        ],
-        ["doc_id", "text"],
-    )
-    word_tf = {}
-    for _, t in [(0, "low lower low"), (1, "lowest low newer"),
-                 (2, "wider new newer")]:
-        for w in t.split(" "):
-            word_tf[w] = word_tf.get(w, 0) + 1
-
-    for k in (1, 3, 6):
-        expect_merges, expect_sym = _py_bpe_train(dict(word_tf), k)
-        got = vocab.bpe_train(docs, n_merges=k)
-        assert got == expect_merges, f"k={k}"
-
-    merges, expect_sym = _py_bpe_train(dict(word_tf), 6)
-    counts = {
-        r.doc_id: r.n_bpe_tokens
-        for r in vocab.bpe_token_counts(docs, merges).collect()
-    }
-    def doc_count(t):
-        return sum(len(expect_sym[w]) for w in t.split(" "))
-    assert counts == {
-        0: doc_count("low lower low"),
-        1: doc_count("lowest low newer"),
-        2: doc_count("wider new newer"),
-    }
-
-    # overlap semantics: [a,a,a] + merge (a,a) -> [aa, a]
-    d2 = spark.createDataFrame([(0, "aaa")], ["doc_id", "text"])
-    m = vocab.bpe_train(d2, n_merges=1)
-    assert m == [("a", "a")]
-    c2 = vocab.bpe_token_counts(d2, m).collect()
-    assert c2[0].n_bpe_tokens == 2
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="n_merges"):
-        vocab.bpe_train(docs, n_merges=0)
-
-
-def test_bpe_train_local_engine_matches_distributed(spark):
-    # both merge-loop engines must emit the identical merge list; the
-    # local path (vocab fits local_vocab_threshold) must also cost a
-    # CONSTANT number of Spark jobs, vs ~2 per merge for the distributed
-    # loop — that's its reason to exist (32k merges = ~64k round-trips)
-    from sed_spark.ext import vocab
-
-    rows = [
-        (i, " ".join(f"tok{j % 17}ab repeat{j % 5}" for j in range(i + 3)))
-        for i in range(40)
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    # count jobs via a dedicated job group: in a shared module-scoped
-    # session, unrelated async jobs (AQE / broadcast cleanup from earlier
-    # tests) land between two getJobIdsForGroup(None) reads and inflate
-    # the delta — counting only our group's ids is race-free
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def run_grouped(group: str, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup("", "")
-        return out, len(tracker.getJobIdsForGroup(group))
-
-    local, local_jobs = run_grouped(
-        "bpe-local", lambda: vocab.bpe_train(docs, n_merges=10),
-    )
-    dist, dist_jobs = run_grouped(
-        "bpe-dist",
-        lambda: vocab.bpe_train(docs, n_merges=10, local_vocab_threshold=0),
-    )
-
-    assert local == dist
-    assert len(local) == 10
-    # local path: the limit-probe collect only (plus at most a couple of
-    # planning jobs); distributed: >= 2 jobs per merge
-    assert local_jobs <= 4, local_jobs
-    assert dist_jobs >= 20, dist_jobs
-
-    # an over-threshold vocabulary falls back to the distributed loop
-    # and still produces the same merges
-    assert vocab.bpe_train(docs, n_merges=10, local_vocab_threshold=3) == dist
-
-    # tie-break parity on an adversarial corpus: many equal-count pairs
-    tie_docs = spark.createDataFrame(
-        [(0, "ab cd ef gh"), (1, "cd ef gh ab")], ["doc_id", "text"],
-    )
-    assert vocab.bpe_train(tie_docs, n_merges=4) == vocab.bpe_train(
-        tie_docs, n_merges=4, local_vocab_threshold=0,
-    )
-
-
-def test_bpe_encode_matches_python_reference(spark):
-    from sed_spark.ext import vocab
-
-    docs = spark.createDataFrame(
-        [(0, "low lower low"), (1, "lowest low newer"), (2, "wider new newer")],
-        ["doc_id", "text"],
-    )
-    merges = vocab.bpe_train(docs, n_merges=6)
-    v = vocab.word_doc_freq(docs)
-    sym2id = vocab.bpe_vocab(v, merges)
-
-    def py_apply(word):
-        s = list(word)
-        for a, b in merges:
-            out, i = [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            s = out
-        return s
-
-    want = {
-        r["doc_id"]: [
-            sym2id[t] for w in r["text"].split(" ") for t in py_apply(w)
-        ]
-        for r in docs.collect()
-    }
-    got = {
-        r["doc_id"]: list(r["token_ids"])
-        for r in vocab.bpe_encode(docs, merges).collect()
-    }
-    assert got == want
-    # id space: base alphabet first (sorted), merges after, contiguous
-    n_chars = len({c for r in docs.collect() for c in r["text"] if c != " "})
-    assert set(sym2id.values()) == set(range(n_chars + len(
-        {a + b for a, b in merges},
-    )))
-    # round-trip: ids -> symbols -> concatenation recovers the text sans
-    # spaces (the id map is injective on the used symbols)
-    id2sym = {i: s for s, i in sym2id.items()}
-    for r in docs.collect():
-        toks = got[r["doc_id"]]
-        assert "".join(id2sym[t] for t in toks) == r["text"].replace(" ", "")
-
-    # OOV contract: a word absent from an explicit vocab table encodes
-    # as a single unk_id IN PLACE (never silently dropped); in-vocab
-    # words whose chars are in the foreign alphabet encode normally
-    foreign = spark.createDataFrame(
-        [("low", 1, 1), ("zzz", 1, 1)], ["word", "tf", "df"],
-    )
-    unk = {
-        r["doc_id"]: list(r["token_ids"])
-        for r in vocab.bpe_encode(
-            docs, [], vocab=foreign, unk_id=-9,
-        ).collect()
-    }
-    # doc 0 = "low lower low": the bare "low"s are 3 single chars each
-    # (all in foreign's alphabet l,o,w,z); "lower" is not a foreign
-    # vocab word -> exactly one -9 in the middle slot
-    assert unk[0][:3] == unk[0][4:] and len(unk[0]) == 7
-    assert unk[0][3] == -9
-    # empty text encodes to an empty array
-    empty = vocab.bpe_encode(
-        spark.createDataFrame([(7, "")], ["doc_id", "text"]), merges,
-    ).collect()
-    assert empty[0]["token_ids"] == []
-
-
 def test_chunk_documents_overlap_and_clamping(spark):
     from sed_spark.ext import text
 
@@ -1254,34 +1014,6 @@ def test_incremental_lsh_pairs_match_batch_restriction(spark):
     assert inc == {p for p in batch if p[0] % 2 == 1 or p[1] % 2 == 1}
     assert (0, 1) in inc and (1, 3) in inc     # cross and within-batch
     assert (2, 4) in batch and (2, 4) not in inc  # old-old pair excluded
-
-
-def test_lm_familiarity_integer_exact(spark):
-    from sed_spark.ext import vocab
-
-    ref = spark.createDataFrame(
-        [(0, "a b a b c"), (2, "a b x")],
-        ["doc_id", "text"],
-    )
-    # reference LM bigram counts: "a b"x3, "b a"x1, "b c"x1, "b x"x1
-    lm = {r.g: r.cnt for r in vocab.bigram_counts(ref).collect()}
-    assert lm == {"a b": 3, "b a": 1, "b c": 1, "b x": 1}
-
-    new = spark.createDataFrame(
-        [
-            (1, "a b c"),     # "a b"(3) seen, "b c"(1) seen -> sum 4
-            (3, "z q a b"),   # "z q","q a" unseen, "a b" seen -> 2 unseen
-            (5, "solo"),      # no bigrams
-        ],
-        ["doc_id", "text"],
-    )
-    got = {
-        r.doc_id: (r.n_bigrams, r.n_unseen, r.seen_cnt_sum)
-        for r in vocab.lm_familiarity(
-            new, vocab.bigram_counts(ref),
-        ).collect()
-    }
-    assert got == {1: (2, 0, 4), 3: (3, 2, 3), 5: (0, 0, 0)}
 
 
 def test_strip_duplicate_spans_removes_covered_tokens(spark):
@@ -2026,15 +1758,12 @@ def test_shared_grams_and_islands_row_identical(spark):
 
 
 def test_shared_words_and_bigrams_row_identical(spark):
-    """The r12 sharing hooks must not change any row: passing a
-    precomputed word explode (``words=``) to word_doc_freq /
-    vocab_doc_stats / doc_top_pair / collocations, or a precomputed
-    bigram explode (``grams=``) to bigram_counts / lm_familiarity /
-    collocations, is plan reuse only — including the even-half LM
-    filter commuting through the per-document explode."""
+    """The sharing hooks must not change any row: passing a precomputed
+    word explode (``words=``) and bigram explode (``grams=``) to
+    collocations is plan reuse only."""
     from pyspark.sql import functions as F
 
-    from sed_spark.ext import text, vocab
+    from sed_spark.ext import text
     from sed_spark.ext.dedup import exploded_shingles
 
     corpus = spark.createDataFrame(
@@ -2048,31 +1777,11 @@ def test_shared_words_and_bigrams_row_identical(spark):
         ],
         ["doc_id", "text"],
     )
-    wx = vocab.exploded_words(corpus)
+    wx = corpus.select(
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word"),
+    )
     g2 = exploded_shingles(corpus, n=2)
     key = lambda rows: sorted(tuple(r) for r in rows)  # noqa: E731
-
-    v_base = vocab.word_doc_freq(corpus)
-    v_shared = vocab.word_doc_freq(corpus, words=wx)
-    assert key(v_base.collect()) == key(v_shared.collect())
-
-    assert key(vocab.vocab_doc_stats(corpus, v_base).collect()) == key(
-        vocab.vocab_doc_stats(corpus, v_shared, words=wx).collect(),
-    )
-    assert key(vocab.doc_top_pair(corpus).collect()) == key(
-        vocab.doc_top_pair(corpus, words=wx).collect(),
-    )
-
-    even = corpus.filter(F.col("doc_id") % 2 == 0)
-    lm_base = vocab.bigram_counts(even)
-    lm_shared = vocab.bigram_counts(
-        corpus, grams=g2.filter(F.col("doc_id") % 2 == 0),
-    )
-    assert key(lm_base.collect()) == key(lm_shared.collect())
-
-    assert key(vocab.lm_familiarity(corpus, lm_base).collect()) == key(
-        vocab.lm_familiarity(corpus, lm_shared, grams=g2).collect(),
-    )
 
     assert key(text.collocations(corpus, min_count=2).collect()) == key(
         text.collocations(corpus, min_count=2, words=wx, grams=g2).collect(),

@@ -37,6 +37,19 @@ def test_generic_loader_file_id(spark, tmp_path):
     assert len(meta["file_statistics"]["files"]) == 2
 
 
+def test_generic_loader_rejects_held_file_id(spark, tmp_path):
+    # an input file_id would be replaced by the file rank (100..102 -> 0..2)
+    for i in range(3):
+        pd.DataFrame({"x": [1.0], "file_id": [100 + i]}).to_parquet(
+            tmp_path / f"f{i}.parquet",
+        )
+    loader = GenericLoader(spark=spark)
+    with pytest.raises(ValueError, match="'file_id'.*with_file_id=False"):
+        loader.read_dataframe(folder=str(tmp_path))
+    df, _ = loader.read_dataframe(folder=str(tmp_path), with_file_id=False)
+    assert sorted(r["file_id"] for r in df.collect()) == [100, 101, 102]
+
+
 def test_generic_loader_reads_orc(spark, tmp_path):
     # columnar alternative to parquet; same file_id model
     src = spark.createDataFrame(

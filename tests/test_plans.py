@@ -173,23 +173,6 @@ def test_gumbel_topk_threshold_frame_is_row_identical(spark):
     )
 
 
-def test_bpe_token_counts_joins_on_word_key(spark):
-    # the corpus is tokenized through the vocabulary join: every hash
-    # Exchange partitions on word or doc_id, never an unkeyed shuffle
-    from sed_spark.ext.vocab import bpe_token_counts
-    from sed_spark.suite.common import load
-
-    df = bpe_token_counts(
-        load(spark, SF_DIR, "documents"), [("a", "b"), ("c", "d")],
-    )
-    df.collect()
-    plan = _plan(df)
-    assert "CartesianProduct" not in plan
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert ("word" in line) or ("doc_id" in line), line
-
-
 def test_semantic_contamination_broadcasts_benchmark(spark):
     # the benchmark side must ride a broadcast nested-loop join and the
     # per-row max must collapse map-side: exactly ONE exchange (the
@@ -238,21 +221,6 @@ def test_range_join_is_bucketed_hash_join_not_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "__bucket" in plan
-
-
-def test_bpe_encode_is_vocab_join_no_cartesian(spark):
-    # the corpus is never re-tokenized row by row: encode = one
-    # vocabulary-keyed equi-join plus one per-document aggregate, with
-    # no cartesian/nested-loop join anywhere
-    from sed_spark.ext import vocab
-
-    docs = spark.createDataFrame(
-        [(i, "low lower low newer") for i in range(50)], ["doc_id", "text"],
-    )
-    plan = _plan(vocab.bpe_encode(docs, [("l", "o"), ("lo", "w")]))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert plan.count("HashAggregate") >= 2  # vocab agg + doc reassembly
 
 
 def test_skew_join_hot_branch_is_broadcast(spark):

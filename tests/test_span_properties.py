@@ -1,11 +1,11 @@
-"""Property-based checks of the exact-substring span operators and the
-BPE merge fold.
+"""Property-based checks of the exact-substring span operators and
+document chunking.
 
 The places where bugs hide: overlapping spans (interval-union math),
 within-document repeats (distinct-document frequency), spans touching
-document boundaries, stats/removal disagreement, and the non-overlapping
-left-to-right semantics of the BPE fold. Hypothesis drives random small
-corpora against brute-force Python oracles.
+document boundaries, stats/removal disagreement, and lossless chunk
+overlap. Hypothesis drives random small corpora against brute-force
+Python oracles.
 """
 
 from __future__ import annotations
@@ -97,51 +97,6 @@ def test_duplicate_spans_match_bruteforce(
         assert n_surv == nt - cov
 
 
-def _py_bpe_apply(symbols: list[str], merges) -> list[str]:
-    for a, b in merges:
-        out: list[str] = []
-        for x in symbols:
-            if out and out[-1] == a and x == b:
-                out[-1] = a + b
-            else:
-                out.append(x)
-        symbols = out
-    return symbols
-
-
-@given(
-    word_len=st.integers(0, 12),
-    n_merges=st.integers(1, 5),
-    seed=st.integers(0, 2**31 - 1),
-)
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_bpe_apply_expr_matches_python_fold(spark, word_len, n_merges, seed):
-    import numpy as np
-
-    from pyspark.sql import functions as F
-
-    from sed_spark.ext import vocab
-
-    rng = np.random.default_rng(seed)
-    chars = ["a", "b"]  # tiny alphabet maximizes overlap cases like aaa
-    word = "".join(rng.choice(chars, size=word_len))
-    # merges over single chars and one fused symbol, duplicates allowed
-    pool = [("a", "a"), ("a", "b"), ("b", "a"), ("b", "b"), ("aa", "b")]
-    merges = [pool[int(k)] for k in rng.integers(0, len(pool), n_merges)]
-
-    df = spark.createDataFrame([(word,)], ["word"])
-    got = df.select(
-        vocab.bpe_apply_expr(
-            vocab.symbols_expr(F.col("word")), merges,
-        ).alias("sym"),
-    ).collect()[0].sym
-    assert got == _py_bpe_apply(list(word), merges), (word, merges)
-
-
 @given(
     doc_len=st.integers(0, 40),
     chunk=st.integers(2, 10),
@@ -192,37 +147,3 @@ def test_chunks_reassemble_to_original(spark, doc_len, chunk, overlap, seed):
     # "" splits to [""] — mirror that degenerate tokenization
     expect = doc.split(" ") if doc else [""]
     assert rebuilt == expect
-
-
-@given(
-    n_docs=st.integers(1, 6),
-    doc_len=st.integers(0, 10),
-    n_merges=st.integers(1, 4),
-    seed=st.integers(0, 2**31 - 1),
-)
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_bpe_train_engines_agree(spark, n_docs, doc_len, n_merges, seed):
-    """The driver-local and distributed merge loops must emit the SAME
-    ordered merge list on any corpus — tie-breaks included (tiny
-    two-letter alphabet maximizes equal-count pairs and overlap shapes
-    like aaa)."""
-    import numpy as np
-
-    from sed_spark.ext import vocab
-
-    rng = np.random.default_rng(seed)
-    docs = []
-    for i in range(n_docs):
-        words = [
-            "".join(rng.choice(["a", "b"], size=int(k) % 4 + 1))
-            for k in rng.integers(0, 100, doc_len)
-        ]
-        docs.append((i, " ".join(words)))
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    local = vocab.bpe_train(df, n_merges=n_merges)
-    dist = vocab.bpe_train(df, n_merges=n_merges, local_vocab_threshold=0)
-    assert local == dist, (docs, local, dist)
