@@ -4,21 +4,18 @@ Beyond the reference's physics vocabulary, this package provides the
 operators a 100 TB training-data pipeline needs: deduplication (exact,
 incremental, MinHash-LSH batch + incremental, SimHash, n-gram Jaccard,
 prefix-filtered EXACT similarity join, exact-substring spans, C4 line
-dedup, boilerplate), similarity search over embeddings (brute-force,
-batch Arrow, IVF with distributed k-means, PQ/IVF-PQ/SQ8 and rerank,
-hyperplane LSH, SemDeDup, JL projection), text analysis (HTML
-extraction, language id, heuristic/classifier/LM/DSIR quality scoring,
-token counting, fingerprinting, chunking, packing, collocation mining,
-quality gates), corpus management (URL/domain rollups, blocklists,
-hash splits, rate/cap/mixture/Gumbel/quantile/weighted sampling,
-grouped percentile/robust/decayed stats, heavy hitters, corpus diff).
+dedup, boilerplate), text analysis (HTML extraction, language id,
+heuristic/classifier/LM/DSIR quality scoring, token counting,
+fingerprinting, chunking, packing, collocation mining, quality gates),
+corpus management (URL/domain rollups, blocklists, hash splits,
+rate/cap/mixture/Gumbel/quantile/weighted sampling, grouped
+percentile/robust/decayed stats, heavy hitters, corpus diff).
 
 No sed module or benchmark workload calls this package; the ``filters``
 and ``run_stats`` suite queries check five ``corpus`` statistics.
 
 All hot paths are JVM-side Column expressions (higher-order array
-functions); the only Python workers are vectorized Arrow stages with
-documented justification.
+functions); no operator runs a Python worker.
 """
 
 from __future__ import annotations
@@ -49,7 +46,7 @@ def lit_double_array(values) -> Column:
 def scale_out(df: DataFrame, factor: int = 1) -> DataFrame:
     """Round-robin repartition ONLY when the scan under-parallelizes.
 
-    CPU-heavy per-row operators (shingle md5, hyperplane dot products) are
+    CPU-heavy per-row operators (shingle md5, span window hashes) are
     compute-bound, not scan-bound: a single unsplittable parquet row group
     would otherwise serialize them onto one core. At cluster scale the input
     split count exceeds ``defaultParallelism`` and this is a no-op — the

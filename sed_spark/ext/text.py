@@ -355,13 +355,13 @@ def classifier_fit(
     vector is zero), so the whole gradient is a single ``dim+1``-row
     hash aggregate per pass, never a second corpus scan. The weight
     vector is driver-sized by definition (the hashing trick caps it at
-    ``dim``), exactly like the k-means centroid table.
+    ``dim``).
 
     ``quantize_decimals`` rounds the updated weights every iteration
     (default 9): gradient sums merge partial aggregates in
     shuffle-arrival order, so their last ulps are not run-stable;
-    quantizing makes the fit a reproducible pure function of the data
-    — the same contract as :func:`sed_spark.ext.similarity.kmeans_fit`.
+    quantizing makes the fit a reproducible pure function of the data:
+    repeated fits on the same rows return the same ``(weights, bias)``.
 
     ``tol`` > 0 stops early when the largest parameter step falls below
     it. Returns ``(weights, bias)``.

@@ -33,6 +33,24 @@ from sed_spark.metadata import MetaHandler
 from sed_spark.session import get_spark
 
 
+def _normalization_histogram(
+    events: DataFrame,
+    timed: DataFrame | None,
+    axis: str,
+    bin_centers: np.ndarray,
+    time_stamp_column: str = "timeStamp",
+    order_col: str = "row_index",
+    time_unit: float = 0.001,
+) -> BinnedData:
+    """Acquisition time per ``axis`` bin: from the timed table when there
+    is one, else from the events' timestamps."""
+    if timed is None:
+        return normalization_histogram_from_timestamps(
+            events, axis, bin_centers, time_stamp_column, order_col,
+        )
+    return normalization_histogram_from_timed_dataframe(timed, axis, bin_centers, time_unit)
+
+
 class SedProcessor:
     """Single-event data processing session on Spark."""
 
@@ -339,12 +357,30 @@ class SedProcessor:
         filter so that it can prune files. ``file_id`` is derived from
         ``input_file_name()``, which Spark cannot prune on, so today the
         predicate filters rows after a scan of every file.
+
+        ``normalize_to_acquisition_time`` divides by the acquisition time of
+        the selected files only, as the reference does
+        (processor.py:2296-2306): the ``file_id`` predicate also filters the
+        timed table, or the events on the timestamps path. A timed table
+        without ``file_id`` (such as the FEL table of
+        :func:`sed_spark.loader.flash.timed_dataframe_from_pulses`) cannot
+        be restricted to the selected files, so ``max_file_id`` with it
+        raises ``ValueError`` before any Spark job.
         """
-        df = self._dataframe
+        df, timed = self._dataframe, self._timed_dataframe
         if max_file_id is not None:
             from pyspark.sql import functions as F
 
-            df = df.filter(F.col("file_id") < max_file_id)
+            selected = F.col("file_id") < max_file_id
+            df = df.filter(selected)
+            if normalize_to_acquisition_time and timed is not None:
+                if "file_id" not in (c.lower() for c in timed.columns):
+                    raise ValueError(
+                        "the timed table has no 'file_id' column, so "
+                        f"compute(max_file_id={max_file_id}) cannot normalize "
+                        "by the acquisition time of the selected files",
+                    )
+                timed = timed.filter(selected)
         where = None
         for f in filters or ():
             cut = dfops.range_condition(
@@ -360,7 +396,7 @@ class SedProcessor:
                 if isinstance(normalize_to_acquisition_time, str)
                 else result.dims[0]
             )
-            norm = self.get_normalization_histogram(axis, result.coords[axis])
+            norm = _normalization_histogram(df, timed, axis, result.coords[axis])
             self._normalization_histogram = norm
             with np.errstate(divide="ignore", invalid="ignore"):
                 result.data = result.data / norm.data.reshape(
@@ -388,12 +424,9 @@ class SedProcessor:
         time_unit: float = 0.001,
     ) -> BinnedData:
         """(reference src/sed/core/processor.py:2316-2391)"""
-        if use_time_stamps or self._timed_dataframe is None:
-            return normalization_histogram_from_timestamps(
-                self._dataframe, axis, bin_centers, time_stamp_column, order_col,
-            )
-        return normalization_histogram_from_timed_dataframe(
-            self._timed_dataframe, axis, bin_centers, time_unit,
+        return _normalization_histogram(
+            self._dataframe, None if use_time_stamps else self._timed_dataframe,
+            axis, bin_centers, time_stamp_column, order_col, time_unit,
         )
 
     # -- pre-binning / inspection (headless variants of the reference's

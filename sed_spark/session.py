@@ -51,13 +51,10 @@ def get_spark(
     # time on single reps). Reserving more is virtual address space, not
     # committed RAM, so the default is raised wherever this process
     # launches the driver JVM (a cluster deployment sets the same flag in
-    # spark.driver/executor.extraJavaOptions). Parameterized via
-    # SPARK_GRAFT_CODE_CACHE; merged in front of any caller-supplied
-    # extraJavaOptions so an explicit caller flag still wins.
-    code_cache = os.environ.get("SPARK_GRAFT_CODE_CACHE", "512m")
-    jvm_opts = f"-XX:ReservedCodeCacheSize={code_cache}"
+    # spark.driver/executor.extraJavaOptions). Merged in front of any
+    # caller-supplied extraJavaOptions so an explicit caller flag still wins.
     caller_opts = (extra_conf or {}).get("spark.driver.extraJavaOptions", "")
-    merged_opts = f"{jvm_opts} {caller_opts}".strip()
+    merged_opts = f"-XX:ReservedCodeCacheSize=512m {caller_opts}".strip()
     conf = {
         "spark.driver.extraJavaOptions": merged_opts,
         # Spark's generated-class cache holds 100 entries by default;
@@ -76,8 +73,9 @@ def get_spark(
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # big Arrow batches amortize per-batch overhead in mapInArrow /
-        # pandas-UDF stages (histogram pair emission, dfield lookup)
+        # big Arrow batches amortize per-batch overhead where batches move:
+        # the dfield pandas UDF, the ms-marker timestamp UDFs and binning's
+        # Arrow collect of the aggregate
         "spark.sql.execution.arrow.maxRecordsPerBatch": "500000",
         "spark.sql.parquet.filterPushdown": "true",
         # driver-generated testdata carries TIMESTAMP(NANOS) parquet columns,

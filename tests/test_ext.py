@@ -1,27 +1,8 @@
 """Unit tests for the training-data extension operators (ext/)."""
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-from sed_spark.ext import similarity
-
-
-@pytest.fixture(scope="module")
-def emb_df(spark):
-    """60 random 16-dim vectors plus two planted near-duplicate pairs."""
-    rng = np.random.default_rng(3)
-    vecs = rng.standard_normal((60, 16)).astype(np.float32)
-    vecs[50] = vecs[10] + 0.01 * rng.standard_normal(16).astype(np.float32)
-    vecs[51] = vecs[20] + 0.01 * rng.standard_normal(16).astype(np.float32)
-    pdf = pd.DataFrame({"vec_id": range(60), "embedding": [list(map(float, v)) for v in vecs]})
-    return spark.createDataFrame(pdf), vecs
-
-
-def _np_cos(a, b):
-    a, b = np.asarray(a, dtype=np.float64), np.asarray(b, dtype=np.float64)
-    return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
 
 
 def test_lit_double_array_keeps_signed_zero(spark):
@@ -32,166 +13,6 @@ def test_lit_double_array_keeps_signed_zero(spark):
     spark.range(1).select(lit_double_array([0.0]).alias("a")).collect()
     got = spark.range(1).select(lit_double_array([-0.0]).alias("a")).collect()
     assert np.copysign(1.0, got[0]["a"][0]) == -1.0
-
-
-def test_cosine_topk_matches_numpy(emb_df):
-    df, vecs = emb_df
-    q = [float(v) for v in vecs[10]]
-    got = similarity.cosine_topk(df, q, k=5).collect()
-    sims = np.round([_np_cos(v, q) for v in vecs], 6)
-    order = np.lexsort((np.arange(60), -sims))[:5]
-    assert [r.vec_id for r in got] == [int(i) for i in order]
-    assert got[0].vec_id == 10  # self-match first
-    assert got[1].vec_id == 50  # planted near-dup second
-
-
-def test_expanded_scoring_mode_is_bit_identical(emb_df):
-    # EXPANDED_SCORING swaps interpreted folds for flat codegen sums;
-    # the two must produce IDENTICAL rows for every scoring family
-    df, vecs = emb_df
-    q = [float(v) for v in vecs[10]]
-    cents = similarity.deterministic_planes(4, 16, seed=5)
-    books = [
-        [[((m * 100 + j * 10 + i) % 7 - 3) / 3.0 for i in range(4)]
-         for j in range(4)]
-        for m in range(4)
-    ]
-    los, his = similarity.sq8_fit(df)
-
-    def snap():
-        return {
-            "cos": similarity.cosine_topk(df, q, k=5).collect(),
-            "ivf": similarity.ivf_topk(df, cents, q, k=5, nprobe=2).collect(),
-            "pq": similarity.pq_topk(df, books, q, k=5).collect(),
-            "sq8": similarity.sq8_topk(df, los, his, q, k=5).collect(),
-            "ivfpq": similarity.ivfpq_topk(
-                df, cents, books, q, k=5, nprobe=2,
-            ).collect(),
-        }
-
-    assert similarity.EXPANDED_SCORING is False  # suite-safe default
-    fold = snap()
-    similarity.EXPANDED_SCORING = True
-    try:
-        expanded = snap()
-    finally:
-        similarity.EXPANDED_SCORING = False
-    assert fold == expanded
-
-
-def test_embedding_near_dup_finds_planted_pairs(emb_df):
-    df, _ = emb_df
-    planes = similarity.deterministic_planes(16, 16, seed=5)
-    pairs = {
-        (r.a_id, r.b_id)
-        for r in similarity.embedding_near_dup(
-            df, planes=planes, n_bands=8, threshold=0.9,
-        ).collect()
-    }
-    # near-identical vectors agree on every hyperplane sign, so banded LSH
-    # cannot miss them, and nothing else is remotely that similar
-    assert pairs == {(10, 50), (20, 51)}
-
-
-def test_lsh_band_buckets_shape(emb_df):
-    df, _ = emb_df
-    planes = similarity.deterministic_planes(16, 16, seed=5)
-    b = similarity.lsh_band_buckets(df, planes, n_bands=4)
-    rows = b.collect()
-    assert len(rows) == 60 * 4
-    assert all(0 <= r.bucket < 16 for r in rows)
-    # identical vectors land in identical buckets per band
-    by_id = {(r.vec_id, r.band): r.bucket for r in rows}
-    assert all(by_id[(10, band)] == by_id[(50, band)] for band in range(4))
-
-
-def test_ivf_assign_matches_numpy_argmax(emb_df):
-    df, vecs = emb_df
-    cents = similarity.deterministic_planes(4, 16, seed=9)
-    got = {r.vec_id: r.bucket for r in similarity.ivf_assign(df, cents).collect()}
-    c = np.asarray(cents)
-    sims = np.round(
-        (vecs.astype(np.float64) @ c.T)
-        / (np.linalg.norm(vecs.astype(np.float64), axis=1, keepdims=True)
-           * np.linalg.norm(c, axis=1)),
-        6,
-    )
-    want = sims.argmax(axis=1) + 1
-    assert got == {i: int(want[i]) for i in range(60)}
-
-
-def test_ivf_topk_subset_of_bucket(emb_df):
-    df, vecs = emb_df
-    cents = similarity.deterministic_planes(4, 16, seed=9)
-    q = [float(v) for v in vecs[10]]
-    got = similarity.ivf_topk(df, cents, q, k=5)
-    rows = got.collect()
-    assert 0 < len(rows) <= 5
-    assert rows[0].vec_id == 10  # query vector is in its own probe bucket
-    buckets = {r.vec_id: r.bucket for r in similarity.ivf_assign(df, cents).collect()}
-    assert len({buckets[r.vec_id] for r in rows}) == 1  # single probed bucket
-
-
-def test_batch_cosine_topk_matches_single_query(spark):
-    import numpy as np
-
-    from sed_spark.ext.similarity import batch_cosine_topk, cosine_topk
-
-    rng = np.random.default_rng(3)
-    rows = [(i, rng.standard_normal(8).astype("float32").tolist()) for i in range(40)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    q = df.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"),
-    )
-    batch = batch_cosine_topk(df, q, k=5)
-    got = {
-        qid: [(r["vec_id"], r["cos_sim"]) for r in rows_]
-        for qid, rows_ in (
-            (qid, sorted(
-                [r for r in batch.collect() if r["query_id"] == qid],
-                key=lambda r: r["rank"],
-            ))
-            for qid in (0, 1)
-        )
-    }
-    for qid in (0, 1):
-        qvec = rows[qid][1]
-        single = cosine_topk(df, qvec, k=5).collect()
-        assert got[qid] == [(r["vec_id"], r["cos_sim"]) for r in single]
-
-
-def test_batch_cosine_topk_prune_equals_no_prune(spark):
-    import numpy as np
-
-    from sed_spark.ext.similarity import batch_cosine_topk
-
-    rng = np.random.default_rng(9)
-    rows = [(i, rng.standard_normal(8).astype("float32").tolist()) for i in range(60)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(7)
-    q = df.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"),
-    )
-    a = sorted(map(tuple, batch_cosine_topk(df, q, k=4, prune=True).collect()))
-    b = sorted(map(tuple, batch_cosine_topk(df, q, k=4, prune=False).collect()))
-    assert a == b
-
-
-def test_batch_cosine_topk_engines_bit_identical(spark):
-    # the vectorized arrow scorer must reproduce the Column-expression
-    # fold bit-for-bit (same dim-order accumulation, same HALF_UP round)
-    import numpy as np
-
-    from sed_spark.ext.similarity import batch_cosine_topk
-
-    rng = np.random.default_rng(17)
-    rows = [(i, rng.standard_normal(16).astype("float32").tolist()) for i in range(80)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(5)
-    q = df.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"),
-    )
-    a = sorted(map(tuple, batch_cosine_topk(df, q, k=6, engine="arrow").collect()))
-    b = sorted(map(tuple, batch_cosine_topk(df, q, k=6, engine="expr").collect()))
-    assert a == b
 
 
 def test_winnow_fingerprint_matches_python_reference(spark):
@@ -268,63 +89,6 @@ def test_benchmark_contamination(spark):
     assert got[2] == (0, 0)
 
 
-def test_kmeans_fit_recovers_planted_clusters(spark):
-    import numpy as np
-
-    from sed_spark.ext.similarity import ivf_assign, kmeans_fit
-
-    rng = np.random.default_rng(5)
-    # three tight angular clusters around orthogonal-ish directions
-    dirs = np.eye(3, 8, dtype=np.float64) * 10
-    rows = []
-    for i in range(90):
-        c = i % 3
-        v = dirs[c] + 0.1 * rng.standard_normal(8)
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cents = kmeans_fit(df, k=3, max_iter=8)
-    assert len(cents) == 3 and len(cents[0]) == 8
-    # every vector lands in the same bucket as the others of its cluster
-    got = {r["vec_id"]: r["bucket"] for r in ivf_assign(df, cents).collect()}
-    for c in range(3):
-        buckets = {got[i] for i in range(90) if i % 3 == c}
-        assert len(buckets) == 1, f"cluster {c} split across {buckets}"
-    # and the three planted clusters map to three distinct buckets
-    assert len({got[0], got[1], got[2]}) == 3
-
-
-def test_kmeans_fit_deterministic(spark):
-    import numpy as np
-
-    from sed_spark.ext.similarity import kmeans_fit
-
-    rng = np.random.default_rng(11)
-    rows = [(i, [float(x) for x in rng.standard_normal(6)]) for i in range(40)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(5)
-    a = kmeans_fit(df, k=4, max_iter=5)
-    b = kmeans_fit(df, k=4, max_iter=5)
-    assert a == b
-
-
-def test_ivf_topk_nprobe_recall_increases(spark, emb_df):
-    # nprobe = all buckets degrades to the exact scan, so its result must
-    # equal brute-force top-k; nprobe=1 returns a subset of one bucket
-    from sed_spark.ext.similarity import cosine_topk, deterministic_planes, ivf_topk
-
-    df, vecs = emb_df
-    cents = deterministic_planes(4, 16, seed=9)
-    q = [float(v) for v in vecs[10]]
-    exact = [(r.vec_id, r.cos_sim) for r in cosine_topk(df, q, k=5).collect()]
-    full_probe = [
-        (r.vec_id, r.cos_sim)
-        for r in ivf_topk(df, cents, q, k=5, nprobe=len(cents)).collect()
-    ]
-    assert full_probe == exact
-    one_probe = ivf_topk(df, cents, q, k=5, nprobe=1).collect()
-    assert 0 < len(one_probe) <= 5
-    assert set(r.vec_id for r in one_probe) <= set(range(60))
-
-
 def test_benchmark_contamination_short_docs_get_rows(spark):
     from sed_spark.ext.dedup import benchmark_contamination
 
@@ -340,20 +104,6 @@ def test_benchmark_contamination_short_docs_get_rows(spark):
     # doc 0 is shorter than one shingle: zero grams, clean, but PRESENT
     assert got[0] == (0, 0, 0.0, 0)
     assert got[1][1] >= 1 and got[1][3] == 1
-
-
-def test_batch_cosine_topk_empty_queries(spark):
-    from sed_spark.ext.similarity import batch_cosine_topk
-
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], ["vec_id", "embedding"],
-    )
-    q = df.filter(F.col("vec_id") > 99).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"),
-    )
-    out = batch_cosine_topk(df, q, k=3)
-    assert out.count() == 0
-    assert out.columns == ["query_id", "vec_id", "cos_sim", "rank"]
 
 
 def test_n_words_messy_whitespace(spark):
@@ -377,37 +127,6 @@ def test_n_words_messy_whitespace(spark):
     assert [q[i].n_words for i in range(7)] == [2, 1, 1, 0, 0, 1, 4]
     t = {r.doc_id: r for r in text.token_stats(docs).collect()}
     assert [t[i].ws_tokens for i in range(7)] == [2, 1, 1, 0, 0, 1, 4]
-
-
-def test_batch_cosine_topk_zero_norm_consistent(spark):
-    # zero-norm vectors must be excluded identically by both engines
-    # (numpy lexsort ranks NaN last; the window DESC ranked NaN first)
-    rng = np.random.default_rng(11)
-    vecs = rng.standard_normal((20, 8)).tolist()
-    vecs[7] = [0.0] * 8  # zero-norm corpus row
-    corpus = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(20), "embedding": vecs}),
-    )
-    queries = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "query_id": [0, 1],
-                "query_vec": [vecs[3], [0.0] * 8],  # one zero-norm query
-            },
-        ),
-    )
-    out = {}
-    for engine in ("arrow", "expr"):
-        rows = similarity.batch_cosine_topk(
-            corpus, queries, k=5, engine=engine,
-        ).collect()
-        out[engine] = sorted(
-            (r.query_id, r.vec_id, r.cos_sim, r.rank) for r in rows
-        )
-    assert out["arrow"] == out["expr"]
-    got_ids = {r[1] for r in out["arrow"]}
-    assert 7 not in got_ids  # zero-norm corpus row never a candidate
-    assert {r[0] for r in out["arrow"]} == {0}  # zero-norm query: no rows
 
 
 def test_incremental_dedup_against_seen_corpus(spark):
@@ -436,34 +155,6 @@ def test_incremental_dedup_against_seen_corpus(spark):
         new, seen.unionAll(incremental_dedup(new, seen).select("text_hash")),
     )
     assert nxt.count() == 0
-
-
-def test_ivf_written_index_partition_pruned(spark, tmp_path, emb_df):
-    # the written index turns nprobe into IO savings: the probe must read
-    # ONLY the probed bucket directories, and return exactly what the
-    # in-plan ivf_topk filter returns
-    df, vecs = emb_df
-    cents = similarity.deterministic_planes(4, 16, seed=9)
-    path = str(tmp_path / "ivf_index")
-    similarity.ivf_write_index(df, cents, path)
-
-    q = [float(v) for v in vecs[5]]
-    probed = similarity.ivf_probe_index(spark, path, cents, q, k=5)
-    want = similarity.ivf_topk(df, cents, q, k=5).collect()
-    assert probed.collect() == want
-
-    # partition pruning: the bucket predicate must land in the scan's
-    # PartitionFilters (planning-time directory elimination), not a
-    # post-scan Filter (inputFiles() can't show this — it lists the
-    # relation's files before pruning)
-    probes = similarity._rank_probes(cents, q, 1, 6)
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and f"= {probes[0]})" in pf[0]
-    # and the data filter side must NOT re-filter on bucket
-    assert "PushedFilters: []" in pf[0] or "bucket" not in (
-        pf[0].split("PushedFilters:")[-1]
-    )
 
 
 def test_pack_sequences_matches_python_reference(spark):
@@ -555,155 +246,6 @@ def test_normalize_text_expr(spark):
            ).collect()}
     assert got[0] == got[1] == got[2] == "hello world"
     assert got[3] == "different"
-
-
-def _np_semdedup(vecs, centroids, threshold, keep):
-    """Pure-numpy reference for semantic_dedup's dominance semantics."""
-    cents = np.asarray(centroids, dtype=np.float64)
-    v = np.asarray(vecs, dtype=np.float64)
-    sims = np.round(
-        v @ cents.T
-        / (np.linalg.norm(v, axis=1)[:, None] * np.linalg.norm(cents, axis=1)),
-        6,
-    )
-    bucket = sims.argmax(axis=1)
-    cent_sim = sims[np.arange(len(v)), bucket]
-    out = {}
-    for a in range(len(v)):
-        dropped = False
-        for b in range(len(v)):
-            if a == b or bucket[a] != bucket[b]:
-                continue
-            if keep == "min_id":
-                dom = b < a
-            else:
-                dom = cent_sim[b] < cent_sim[a] or (
-                    cent_sim[b] == cent_sim[a] and b < a
-                )
-            if dom and round(_np_cos(v[a], v[b]), 6) >= threshold:
-                dropped = True
-                break
-        out[a] = (int(bucket[a]) + 1, 0 if dropped else 1)
-    return out
-
-
-@pytest.mark.parametrize("keep", ["min_id", "far_from_centroid"])
-def test_semantic_dedup_matches_numpy(emb_df, keep):
-    df, vecs = emb_df
-    cents = similarity.deterministic_planes(4, 16, seed=5)
-    got = {
-        r["vec_id"]: (r["cluster"], r["is_kept"])
-        for r in similarity.semantic_dedup(
-            df, cents, threshold=0.9, keep=keep,
-        ).collect()
-    }
-    assert got == _np_semdedup(vecs, cents, 0.9, keep)
-    # the planted near-dups (50≈10, 51≈20) must lose to their originals
-    # whenever they landed in the same cluster with min_id priority
-    if keep == "min_id":
-        for dup, orig in ((50, 10), (51, 20)):
-            if got[dup][0] == got[orig][0]:
-                assert got[orig][1] == 1
-                assert got[dup][1] == 0
-
-
-def test_semantic_dedup_far_from_centroid_keeps_atypical(spark):
-    # two same-cluster near-identical docs: the one FARTHER from the
-    # centroid must win under the paper's policy even with the higher id
-    cents = [[1.0, 0.0, 0.0, 0.0]]
-    rows = [
-        (0, [1.0, 0.01, 0.0, 0.0]),   # very typical
-        (1, [1.0, 0.09, 0.0, 0.0]),   # same dup group, less typical
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {
-        r["vec_id"]: r["is_kept"]
-        for r in similarity.semantic_dedup(
-            df, cents, threshold=0.99, keep="far_from_centroid",
-        ).collect()
-    }
-    assert got == {0: 0, 1: 1}
-    # min_id keeps the other one
-    got2 = {
-        r["vec_id"]: r["is_kept"]
-        for r in similarity.semantic_dedup(
-            df, cents, threshold=0.99, keep="min_id",
-        ).collect()
-    }
-    assert got2 == {0: 1, 1: 0}
-
-
-def test_semantic_dedup_rejects_unknown_policy(emb_df):
-    df, _ = emb_df
-    with pytest.raises(ValueError, match="keep policy"):
-        similarity.semantic_dedup(df, [[1.0] * 16], keep="nope")
-    with pytest.raises(ValueError, match="keep policy"):
-        similarity.semantic_dedup_multi(df, [[1.0] * 16], keeps=("nope",))
-
-
-def test_semantic_dedup_multi_matches_per_policy(emb_df):
-    # the shared-pass variant must be row-identical to per-policy
-    # semantic_dedup under BOTH policies (it is an optimization of the
-    # pair join, not a different dominance rule)
-    df, _ = emb_df
-    cents = similarity.deterministic_planes(4, 16, seed=5)
-    multi = similarity.semantic_dedup_multi(
-        df, cents, threshold=0.9, keeps=("min_id", "far_from_centroid"),
-    )
-    for keep in ("min_id", "far_from_centroid"):
-        single = {
-            r["vec_id"]: (r["cluster"], r["is_kept"])
-            for r in similarity.semantic_dedup(
-                df, cents, threshold=0.9, keep=keep,
-            ).collect()
-        }
-        shared = {
-            r["vec_id"]: (r["cluster"], r["is_kept"])
-            for r in multi[keep].collect()
-        }
-        assert shared == single
-
-
-def test_semantic_contamination_flags_and_argmax(spark):
-    import numpy as np
-
-    rows = [
-        (0, [1.0, 0.0, 0.0]),    # = bench 10 -> cos 1.0
-        (1, [0.0, 1.0, 0.0]),    # = bench 11 -> cos 1.0
-        (2, [0.9, 0.1, 0.0]),    # near bench 10
-        (3, [0.0, 0.0, 1.0]),    # orthogonal to both -> clean
-        (10, [1.0, 0.0, 0.0]),   # the benchmark members themselves
-        (11, [0.0, 1.0, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    bench = df.filter("vec_id >= 10")
-    got = {
-        r.vec_id: r
-        for r in similarity.semantic_contamination(
-            df, bench, threshold=0.95,
-        ).collect()
-    }
-    assert len(got) == 6
-    # numpy oracle: max cosine + argmax (ties -> lowest bench id)
-    vecs = {i: np.array(v) for i, v in rows}
-    for i, v in vecs.items():
-        cos = {
-            b: round(float(v @ vecs[b] / (np.linalg.norm(v) * np.linalg.norm(vecs[b]))), 6)
-            for b in (10, 11)
-        }
-        best = max(sorted(cos), key=lambda b: (cos[b], -b))
-        assert got[i].bench_id == best, i
-        assert got[i].max_cos_bench == cos[best], i
-        assert got[i].is_contaminated == int(cos[best] >= 0.95), i
-    assert got[0].is_contaminated == 1
-    assert got[3].is_contaminated == 0
-    assert got[10].is_contaminated == 1  # bench members self-match
-
-    # empty benchmark: every row kept, NULL scores, flag 0
-    empty = bench.filter("vec_id < 0")
-    kept = similarity.semantic_contamination(df, empty).collect()
-    assert len(kept) == 6
-    assert all(r.is_contaminated == 0 and r.max_cos_bench is None for r in kept)
 
 
 def _np_classifier(texts, weights, bias=0.0):
@@ -1179,119 +721,6 @@ def test_classifier_fit_early_stop_and_errors(spark):
 # product quantization
 # ---------------------------------------------------------------------------
 
-def _pq_ref_codes(vecs, books):
-    """Brute-force argmin-squared-L2 encoder (ties to lowest code)."""
-    m, dsub = len(books), len(books[0][0])
-    out = []
-    for v in vecs:
-        codes = []
-        for mm in range(m):
-            sub = v[mm * dsub:(mm + 1) * dsub]
-            d = [
-                sum((float(x) - float(c)) ** 2 for x, c in zip(sub, cent))
-                for cent in books[mm]
-            ]
-            codes.append(d.index(min(d)))
-        out.append(codes)
-    return out
-
-
-def test_pq_encode_is_argmin_squared_l2(spark):
-    import numpy as np
-
-    from sed_spark.ext import similarity as S
-
-    rng = np.random.default_rng(3)
-    vecs = rng.normal(size=(200, 16)).astype("float32")
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    books = S.pq_train(df, m=4, k=4, max_iter=3)
-    got = {
-        r["vec_id"]: list(r["codes"])
-        for r in S.pq_encode(df, books).collect()
-    }
-    ref = _pq_ref_codes([[float(x) for x in v] for v in vecs], books)
-    assert [got[i] for i in range(len(vecs))] == ref
-
-
-def test_pq_train_is_reproducible_and_improves_quantization(spark):
-    import numpy as np
-
-    from sed_spark.ext import similarity as S
-
-    rng = np.random.default_rng(5)
-    # clustered subvectors so training has something to learn
-    centers = rng.normal(size=(4, 16)) * 3
-    vecs = centers[rng.integers(0, 4, 300)] + rng.normal(size=(300, 16))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    b1 = S.pq_train(df, m=4, k=4, max_iter=4)
-    b2 = S.pq_train(df, m=4, k=4, max_iter=4)
-    assert b1 == b2
-
-    def recon_err(books):
-        codes = _pq_ref_codes([[float(x) for x in v] for v in vecs], books)
-        err = 0.0
-        dsub = len(books[0][0])
-        for v, cs in zip(vecs, codes):
-            for mm, c in enumerate(cs):
-                sub = v[mm * dsub:(mm + 1) * dsub]
-                err += sum(
-                    (float(x) - float(y)) ** 2
-                    for x, y in zip(sub, books[mm][c])
-                )
-        return err
-
-    # more training passes must not increase reconstruction error
-    b_short = S.pq_train(df, m=4, k=4, max_iter=1)
-    assert recon_err(b1) <= recon_err(b_short) + 1e-9
-
-
-def test_pq_topk_ranks_query_reconstruction_first(spark):
-    import numpy as np
-
-    from sed_spark.ext import similarity as S
-
-    rng = np.random.default_rng(7)
-    vecs = rng.normal(size=(300, 16))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    books = S.pq_train(df, m=4, k=8, max_iter=3)
-    q = [float(x) for x in vecs[42]]
-    top = S.pq_topk(df, books, q, k=10).collect()
-    ids = [r["vec_id"] for r in top]
-    # the query's own row shares its reconstruction, so it must appear
-    assert 42 in ids
-    # scores are descending with deterministic id tie-break
-    scores = [r["cos_sim"] for r in top]
-    assert scores == sorted(scores, reverse=True)
-    # zero-norm query rejected
-    import pytest
-
-    with pytest.raises(ValueError, match="nonzero"):
-        S.pq_topk(df, books, [0.0] * 16, k=5)
-
-
-def test_pq_train_validation(spark):
-    import pytest
-
-    from sed_spark.ext import similarity as S
-
-    df = spark.createDataFrame(
-        [(0, [1.0, 2.0, 3.0])], "vec_id long, embedding array<float>",
-    )
-    with pytest.raises(ValueError, match="divisible"):
-        S.pq_train(df, m=2, k=1)
-    with pytest.raises(ValueError, match="at least k"):
-        S.pq_train(df.limit(1), m=1, k=4)
-
-
 def test_simhash_pairs_matches_brute_force(spark):
     import itertools
     import random
@@ -1332,275 +761,6 @@ def test_simhash_pairs_validation(spark):
     df = spark.createDataFrame([(0, 1)], ["doc_id", "simhash"])
     with pytest.raises(ValueError, match="max_hamming"):
         dedup.simhash_pairs(df, max_hamming=16)
-
-
-def test_ivfpq_matches_numpy_reconstruction_reference(spark):
-    import numpy as np
-
-    from sed_spark.ext import similarity as S
-
-    rng = np.random.default_rng(9)
-    centers = rng.normal(size=(3, 32)) * 2
-    vecs = centers[rng.integers(0, 3, 240)] + rng.normal(size=(240, 32)) * 0.5
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    coarse = [[float(x) for x in c] for c in centers]
-    books = S.ivfpq_train(df, coarse, m=4, k=4, max_iter=2)
-    # reproducible like every other fit
-    assert books == S.ivfpq_train(df, coarse, m=4, k=4, max_iter=2)
-
-    q = [float(x) for x in vecs[7]]
-    got = [
-        (r["vec_id"], r["cos_sim"])
-        for r in S.ivfpq_topk(df, coarse, books, q, k=10, nprobe=1).collect()
-    ]
-
-    C = np.array(coarse)
-    B = [np.array(b) for b in books]
-    qv = np.array(q)
-    qh = qv / np.linalg.norm(qv)
-
-    def bucket(v):
-        sims = np.round(
-            C @ v / (np.linalg.norm(C, axis=1) * np.linalg.norm(v)), 6,
-        )
-        return int(np.argmax(sims))
-
-    pb = bucket(qv)
-    scores = {}
-    for i, vrow in enumerate(vecs):
-        v = np.array([float(np.float32(x)) for x in vrow])
-        b = bucket(v)
-        if b != pb:
-            continue
-        resid = v - C[b]
-        rec = C[b].copy()
-        for mi in range(4):
-            sub = resid[mi * 8:(mi + 1) * 8]
-            d = ((B[mi] - sub) ** 2).sum(axis=1)
-            rec[mi * 8:(mi + 1) * 8] += B[mi][int(np.argmin(d))]
-        scores[i] = round(float(qh @ rec / np.linalg.norm(rec)), 6)
-    ref = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    assert [g[0] for g in got] == [r[0] for r in ref]
-    assert all(abs(g[1] - r[1]) < 2e-6 for g, r in zip(got, ref))
-
-
-def test_ivfpq_residual_books_beat_raw_books_on_reconstruction(spark):
-    import numpy as np
-
-    from sed_spark.ext import similarity as S
-
-    rng = np.random.default_rng(13)
-    centers = rng.normal(size=(4, 32)) * 4
-    vecs = centers[rng.integers(0, 4, 300)] + rng.normal(size=(300, 32)) * 0.3
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    coarse = [[float(x) for x in c] for c in centers]
-    res_books = S.ivfpq_train(df, coarse, m=4, k=4, max_iter=3)
-    raw_books = S.pq_train(df, m=4, k=4, max_iter=3)
-
-    C = np.array(coarse)
-
-    def bucket(v):
-        sims = np.round(
-            C @ v / (np.linalg.norm(C, axis=1) * np.linalg.norm(v)), 6,
-        )
-        return int(np.argmax(sims))
-
-    def err(books, residual):
-        B = [np.array(b) for b in books]
-        total = 0.0
-        for vrow in vecs:
-            v = np.array([float(np.float32(x)) for x in vrow])
-            target = v - C[bucket(v)] if residual else v
-            for mi in range(4):
-                sub = target[mi * 8:(mi + 1) * 8]
-                d = ((B[mi] - sub) ** 2).sum(axis=1)
-                total += float(d.min())
-        return total
-
-    # removing the between-cluster variance first must tighten the cells
-    assert err(res_books, True) < err(raw_books, False)
-
-
-def test_sq8_matches_python_reference_and_bounds(spark):
-    import math
-
-    import numpy as np
-
-    from sed_spark.ext import similarity as S
-
-    rng = np.random.default_rng(21)
-    vecs = rng.normal(size=(150, 8)).astype("float32")
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    los, his = S.sq8_fit(df)
-    assert los == [float(np.min(vecs[:, i])) for i in range(8)]
-    assert his == [float(np.max(vecs[:, i])) for i in range(8)]
-    codes = {r["vec_id"]: list(r["codes"])
-             for r in S.sq8_encode(df, los, his).collect()}
-    assert all(0 <= c <= 255 for cs in codes.values() for c in cs)
-
-    q = [float(x) for x in vecs[3]]
-    got = [(r["vec_id"], r["cos_sim"])
-           for r in S.sq8_topk(df, los, his, q, k=10).collect()]
-
-    def r6(x):
-        return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
-
-    qn = math.sqrt(sum(v * v for v in q))
-    qh = [v / qn for v in q]
-    scores = {}
-    for i, vr in enumerate(vecs):
-        xh = []
-        for x, lo, hi in zip(vr, los, his):
-            s = hi - lo if hi > lo else 0.0
-            if s > 0:
-                c = math.floor(min(255.0, max(0.0, (float(x) - lo) / s * 255.0)))
-                xh.append(lo + c / 255.0 * s)
-            else:
-                xh.append(lo)
-        num = sum(a * b for a, b in zip(xh, qh))
-        den = math.sqrt(sum(a * a for a in xh))
-        scores[i] = r6(num / den)
-    ref = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    assert got == [tuple(x) for x in ref]
-    # the quantization is coarse but the query's own row must rank top
-    assert got[0][0] == 3
-
-    import pytest
-
-    with pytest.raises(ValueError, match="nonzero"):
-        S.sq8_topk(df, los, his, [0.0] * 8)
-
-
-def test_exact_rerank_and_pq_rerank(spark):
-    import numpy as np
-
-    from sed_spark.ext import similarity
-
-    rng = np.random.default_rng(11)
-    vecs = rng.normal(size=(200, 8)).round(3)
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in vecs[i]]) for i in range(200)],
-        "vec_id int, embedding array<float>",
-    )
-    q = [float(v) for v in vecs[0]]
-    exact = similarity.cosine_topk(df, q, k=5)
-    # rerank restricted to the exact winners reproduces them
-    got = similarity.exact_rerank(df, exact.select("vec_id"), q, k=5)
-    assert [r["vec_id"] for r in got.collect()] == [
-        r["vec_id"] for r in exact.collect()
-    ]
-    # a full-corpus shortlist makes pq_topk_rerank EXACT regardless of
-    # code resolution (every id survives to the exact stage)
-    books = similarity.pq_train(df, m=2, k=4, vec_col="embedding", max_iter=2)
-    full = similarity.pq_topk_rerank(df, books, q, k=5, refine=40)
-    assert [r["vec_id"] for r in full.collect()] == [
-        r["vec_id"] for r in exact.collect()
-    ]
-    with pytest.raises(ValueError, match="refine"):
-        similarity.pq_topk_rerank(df, books, q, refine=0)
-
-
-def test_exact_rerank_candidates_broadcast_plan(spark):
-    import numpy as np
-
-    from sed_spark.ext import similarity
-
-    rng = np.random.default_rng(12)
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in rng.normal(size=8)]) for i in range(50)],
-        "vec_id int, embedding array<float>",
-    )
-    cand = df.select("vec_id").limit(10)
-    plan = (
-        similarity.exact_rerank(df, cand, [1.0] * 8, k=3)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # candidate ids broadcast into a semi join — no corpus shuffle
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-
-
-def test_random_project_matches_driver_mirror_and_preserves_angles(spark):
-    import numpy as np
-
-    from sed_spark.ext.similarity import (
-        project_vector,
-        random_project,
-        rp_sign_matrix,
-    )
-
-    rng = np.random.RandomState(5)
-    # clustered vectors: pairwise cosines span [~0, ~1], so the JL check
-    # below measures real structure (i.i.d. uniform vectors are all
-    # near-orthogonal and a 16-dim projection's noise would swamp the
-    # ~0-centered cosine spread)
-    centers = rng.uniform(-1, 1, (6, 64))
-    vecs = np.array(
-        [centers[i % 6] + 0.15 * rng.uniform(-1, 1, 64) for i in range(60)],
-    )
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(60)],
-        "vec_id long, embedding array<double>",
-    )
-    # unrounded projection equals the Python mirror bit-for-bit
-    got = {
-        r["vec_id"]: r["rp"]
-        for r in random_project(
-            df, 64, 16, round_decimals=None,
-        ).select("vec_id", "rp").collect()
-    }
-    for i in range(60):
-        assert got[i] == project_vector(list(vecs[i]), 64, 16)
-
-    # JL: pairwise cosines in 16-dim track the 64-dim cosines
-    signs = np.array(rp_sign_matrix(64, 16), dtype=float)
-    proj = vecs @ signs.T / np.sqrt(16.0)
-
-    def cosines(m):
-        n = m / np.linalg.norm(m, axis=1, keepdims=True)
-        return (n @ n.T)[np.triu_indices(60, 1)]
-
-    full, low = cosines(vecs), cosines(proj)
-    assert np.corrcoef(full, low)[0, 1] > 0.7
-    assert np.abs(full - low).max() < 0.6
-
-    import pytest as pt
-
-    with pt.raises(ValueError, match="dims"):
-        random_project(df, 64, 0)
-
-
-def test_random_project_raises_on_dimension_mismatch(spark):
-    import pytest as pt
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-
-    from sed_spark.ext.similarity import random_project
-
-    df = spark.createDataFrame(
-        [(0, [1.0] * 64), (1, [1.0] * 32)],
-        "vec_id long, embedding array<double>",
-    )
-    with pt.raises(SparkRuntimeException, match="expected 64-dim"):
-        random_project(df, 64, 8).select("rp").collect()
-
-
-def test_random_project_null_vector_passes_through(spark):
-    from sed_spark.ext.similarity import random_project
-
-    df = spark.createDataFrame(
-        [(0, [1.0] * 16), (1, None)],
-        "vec_id long, embedding array<double>",
-    )
-    got = {r["vec_id"]: r["rp"] for r in random_project(df, 16, 4).collect()}
-    assert got[1] is None and got[0] is not None
 
 
 def test_prefix_similarity_join_exact_vs_brute_force(spark):

@@ -59,25 +59,6 @@ def test_repetition_stats_shuffles_only_on_doc_keys(spark):
     assert "SortMergeJoin" not in plan or "doc_id" in plan
 
 
-def test_batch_ann_has_no_corpus_shuffle_before_prune(spark):
-    # the arrow scorer runs directly over the scan: the only Exchange in
-    # the plan is the k*M-row window shuffle AFTER the map-side top-k
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from sed_spark.ext.similarity import batch_cosine_topk
-    from sed_spark.suite.common import load
-
-    emb = load(spark, SF_DIR, "embeddings")
-    q = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"),
-    )
-    plan = _plan(batch_cosine_topk(emb, q, k=5))
-    lines = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
-    assert len(lines) == 1 and "query_id" in lines[0]
-    # the python scorer sits below that exchange, above the scan
-    assert plan.index("MapInPandas") > plan.index("Exchange hashpartitioning")
-
-
 def test_binning_aggregate_is_whole_stage_codegen(spark):
     from sed_spark.binning import sparse_histogram
     from sed_spark.suite.common import load
@@ -171,22 +152,6 @@ def test_gumbel_topk_threshold_frame_is_row_identical(spark):
     assert sorted(map(tuple, base.collect())) == sorted(
         map(tuple, slimmed.collect()),
     )
-
-
-def test_semantic_contamination_broadcasts_benchmark(spark):
-    # the benchmark side must ride a broadcast nested-loop join and the
-    # per-row max must collapse map-side: exactly ONE exchange (the
-    # corpus-id-sized partial table), never a corpus x bench shuffle
-    from sed_spark.ext import similarity
-    from sed_spark.suite.common import load
-
-    df = load(spark, SF_DIR, "embeddings")
-    out = similarity.semantic_contamination(
-        df, df.filter(F.col("vec_id") % 50 == 0), threshold=0.5,
-    )
-    plan = _plan(out)
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "partial_max" in plan  # map-side combine before the exchange
 
 
 def test_training_order_shuffles_once_no_global_sort(spark):

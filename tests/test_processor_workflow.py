@@ -229,3 +229,46 @@ def test_compute_cuts_match_apply_filter(spark):
         got = proc.compute(*args, filters=filters)
         np.testing.assert_array_equal(got.data, bin_dataframe(want, *args).data)
     assert proc.compute(*args, filters=cases[1]).sum() == 40 * 7
+
+
+def test_compute_max_file_id_normalizes_by_selected_files(spark):
+    # 4 files: files 0-1 hold 1 s of acquisition each, files 2-3 3 s each;
+    # compute(max_file_id=2) divides by the 2 s of files 0-1 only
+    rng = np.random.default_rng(11)
+    edges = np.arange(5.0) - 0.5  # bins=[4] over (0, 4), half-bin shifted
+    events = pd.DataFrame({
+        "file_id": np.repeat(np.arange(4), 1000),
+        "row_index": np.tile(np.arange(1000), 4),
+        "ADC": rng.integers(0, 4, 4000).astype(float),
+    })
+    step = np.where(events["file_id"] < 2, 0.001, 0.003)
+    events["timeStamp"] = 10.0 * events["file_id"] + step * events["row_index"]
+    timed = pd.DataFrame({"file_id": np.repeat(np.arange(4), [1000, 1000, 3000, 3000])})
+    timed["ADC"] = rng.integers(0, 4, len(timed)).astype(float)
+    sel, tsel = events[events["file_id"] < 2], timed[timed["file_id"] < 2]
+    counts = np.histogram(sel["ADC"], edges)[0]
+    args = dict(bins=[4], axes=["ADC"], ranges=[(0.0, 4.0)],
+                normalize_to_acquisition_time="ADC", max_file_id=2)
+
+    proc = SedProcessor(spark=spark, config={"core": {"loader": "generic"}})
+    proc.load(dataframe=spark.createDataFrame(events),
+              timed_dataframe=spark.createDataFrame(timed))
+    got = proc.compute(**args)
+    norm = np.histogram(tsel["ADC"], edges)[0] * 0.001
+    np.testing.assert_allclose(proc.normalization_histogram.data, norm, rtol=1e-12)
+    assert proc.normalization_histogram.data.sum() == pytest.approx(2.0)
+    np.testing.assert_allclose(got.data, counts / norm, rtol=1e-12)
+
+    # timestamps path: per-file dwell times summed into (lo, hi] bins
+    proc.load(dataframe=spark.createDataFrame(events))
+    got = proc.compute(**args)
+    dwell = sel.groupby("file_id")["timeStamp"].diff()
+    norm = dwell.groupby(pd.cut(sel["ADC"], edges), observed=False).sum().to_numpy()
+    np.testing.assert_allclose(proc.normalization_histogram.data, norm, rtol=1e-9)
+    np.testing.assert_allclose(got.data, counts / norm, rtol=1e-9)
+
+    # a timed table without file_id cannot be restricted to the selection
+    proc.load(dataframe=spark.createDataFrame(events),
+              timed_dataframe=spark.createDataFrame(timed[["ADC"]]))
+    with pytest.raises(ValueError, match="file_id"):
+        proc.compute(**args)
